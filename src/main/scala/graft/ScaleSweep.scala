@@ -259,6 +259,31 @@ object ScaleSweep {
   private val Modes = Set("monitor", "dedup", "asof", "prefixjoin",
     "extractive", "linededup", "ccinc", "ccstar", "simsearch", "pqdim")
 
+  // ---- ANN sweep helpers (simsearch, pqdim) ----
+
+  private def r3(x: Double) = math.round(x * 1000) / 1000.0
+
+  /** (query_id, cand_id) rows → per-query neighbor-id sets. */
+  private def ids(rows: Array[org.apache.spark.sql.Row]): Map[Long, Set[Long]] =
+    rows.groupBy(_.getLong(0))
+      .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
+
+  /** Collect a (query_id, cand_id) result: (wall seconds, neighbor sets). */
+  private def collectIds(df: DataFrame): (Double, Map[Long, Set[Long]]) = {
+    val t0 = System.nanoTime()
+    val rows = df.select(col("query_id").cast("long"),
+      col("cand_id").cast("long")).collect()
+    ((System.nanoTime() - t0) / 1e9, ids(rows))
+  }
+
+  /** recall@k of `approx` against `exact`, rounded to 3 places. */
+  private def recall(approx: Map[Long, Set[Long]],
+                     exact: Map[Long, Set[Long]]): Double = {
+    val hit = exact.map { case (q, e) =>
+      (approx.getOrElse(q, Set.empty) & e).size }.sum
+    math.round(hit * 1000.0 / exact.values.map(_.size).sum) / 1000.0
+  }
+
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.filter(Modes).getOrElse("monitor")
     val rest = if (args.headOption.exists(Modes)) args.drop(1) else args
@@ -437,26 +462,10 @@ object ScaleSweep {
       import graft.operators.Similarity
       val k = 10
       val dim = 16
-      def r3(x: Double) = math.round(x * 1000) / 1000.0
-      def ids(rows: Array[org.apache.spark.sql.Row]): Map[Long, Set[Long]] =
-        rows.groupBy(_.getLong(0))
-          .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-      def collectIds(df: DataFrame): (Double, Map[Long, Set[Long]]) = {
-        val t0 = System.nanoTime()
-        val rows = df.select(col("query_id").cast("long"),
-          col("cand_id").cast("long")).collect()
-        ((System.nanoTime() - t0) / 1e9, ids(rows))
-      }
       def timedIds(df: => DataFrame): (Double, Map[Long, Set[Long]]) = {
         val r = collectIds(df)
         graft.core.CacheScope.releaseStragglers(spark)
         r
-      }
-      def recall(approx: Map[Long, Set[Long]],
-                 exact: Map[Long, Set[Long]]): Double = {
-        val hit = exact.map { case (q, e) =>
-          (approx.getOrElse(q, Set.empty) & e).size }.sum
-        math.round(hit * 1000.0 / exact.values.map(_.size).sum) / 1000.0
       }
       // IVF priced as BUILD (centroid select + inverted-list assignment,
       // materialized into the cache — the one-off N·nlist index cost a
@@ -598,7 +607,7 @@ object ScaleSweep {
           val tpq0 = System.nanoTime()
           val pqCoarse = Similarity.ivfCentroids(corpus, nlist).persist()
           pqCoarse.count()
-          val (pqIndex0, pqCb0) =
+          val (pqIndex0, pqCb0, pqLists) =
             Similarity.ivfPqBuild(corpus, pqCoarse, m = pqM, nCent = pqNC)
           val pqCb = pqCb0.persist()
           pqCb.count()
@@ -607,8 +616,8 @@ object ScaleSweep {
           pqIndex.write.format("noop").mode("overwrite").save()
           val ivfpqBuildSec = (System.nanoTime() - tpq0) / 1e9
           val (ivfpqProbeSec, pqIds) = collectIds(
-            Similarity.ivfPqProbe(pqIndex, pqCoarse, pqCb, queries, k,
-                nprobe = 2, m = pqM)
+            Similarity.ivfPqProbe(pqIndex, pqLists, pqCb, queries,
+                k, nprobe = 2, m = pqM)
               .select(col("query_id"), col("neighbor_id").as("cand_id")))
           pqIndex.unpersist(); pqCb.unpersist()
           graft.core.CacheScope.releaseStragglers(spark)
@@ -624,14 +633,14 @@ object ScaleSweep {
           tCb.count()
           val ivfpqtTrainSec = (System.nanoTime() - tcb0) / 1e9
           val tib0 = System.nanoTime()
-          val (tIndex0, _) = Similarity.ivfPqBuild(corpus, pqCoarse,
+          val (tIndex0, _, tLists) = Similarity.ivfPqBuild(corpus, pqCoarse,
             m = pqM, nCent = pqNC, codebook = Some(tCb))
           val tIndex = tIndex0.persist(
             org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           tIndex.write.format("noop").mode("overwrite").save()
           val ivfpqtBuildSec = (System.nanoTime() - tib0) / 1e9
           val (ivfpqtProbeSec, tPqIds) = collectIds(
-            Similarity.ivfPqProbe(tIndex, pqCoarse, tCb, queries, k,
+            Similarity.ivfPqProbe(tIndex, tLists, tCb, queries, k,
                 nprobe = 2, m = pqM)
               .select(col("query_id"), col("neighbor_id").as("cand_id")))
           tIndex.unpersist(); tCb.unpersist()
@@ -649,21 +658,21 @@ object ScaleSweep {
           // sample covers a sliver of the clusters (measured: 0.67 at
           // sampleMod=16 vs 0.81 at 7, same config otherwise).
           val rb0 = System.nanoTime()
-          val (rIndex0, rCb, rQcents) = Similarity.ivfPqResidualBuild(
+          val (rIndex0, rCb, rLists) = Similarity.ivfPqResidualBuild(
             corpus, pqCoarse, m = 8, nCent = 256,
             trained = true, sampleMod = 61, hashSample = true)
           val rCbP = rCb.persist(); rCbP.count()
-          val rQcentsP = rQcents.persist(); rQcentsP.count()
+          val rListsP = rLists.persist(); rListsP.count()
           val rIndex = rIndex0.persist(
             org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           rIndex.write.format("noop").mode("overwrite").save()
           val ivfpqrBuildSec = (System.nanoTime() - rb0) / 1e9
           val (ivfpqrProbeSec, rPqIds) = collectIds(
-            Similarity.ivfPqResidualProbe(rIndex, pqCoarse, rQcentsP, rCbP,
+            Similarity.ivfPqProbe(rIndex, rListsP, rCbP,
                 queries, k, nprobe = 2, m = 8)
               .select(col("query_id"), col("neighbor_id").as("cand_id")))
           rIndex.unpersist()
-          rCbP.unpersist(); rQcentsP.unpersist()
+          rCbP.unpersist(); rListsP.unpersist()
           graft.core.CacheScope.releaseStragglers(spark)
           // per-list ("local") codebook twin — the capacity fix the
           // shared-residual column measures the need for: residual
@@ -673,21 +682,21 @@ object ScaleSweep {
           // the mode space by nlist. Same m=8×256 code width — the
           // columns differ ONLY in codebook locality.
           val lb0 = System.nanoTime()
-          val (lIndex0, lCb, lQcents) = Similarity.ivfPqLocalBuild(
+          val (lIndex0, lCb, lLists) = Similarity.ivfPqLocalBuild(
             corpus, pqCoarse, m = 8, nCent = 256,
             trained = true, sampleMod = 61, hashSample = true)
           val lCbP = lCb.persist(); lCbP.count()
-          val lQcentsP = lQcents.persist(); lQcentsP.count()
+          val lListsP = lLists.persist(); lListsP.count()
           val lIndex = lIndex0.persist(
             org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           lIndex.write.format("noop").mode("overwrite").save()
           val ivfpqlBuildSec = (System.nanoTime() - lb0) / 1e9
           val (ivfpqlProbeSec, lPqIds) = collectIds(
-            Similarity.ivfPqLocalProbe(lIndex, pqCoarse, lQcentsP, lCbP,
+            Similarity.ivfPqProbe(lIndex, lListsP, lCbP,
                 queries, k, nprobe = 2, m = 8)
               .select(col("query_id"), col("neighbor_id").as("cand_id")))
           pqCoarse.unpersist(); lIndex.unpersist()
-          lCbP.unpersist(); lQcentsP.unpersist()
+          lCbP.unpersist(); lListsP.unpersist()
           graft.core.CacheScope.releaseStragglers(spark)
           println(s"""{"metric":"simsearch_sweep","fixture":"$fixture","corpus":$n,"k":$k,"brute_sec":${r3(bruteSec)},"planes":$planes,"lsh_sec":${r3(lshSec)},"lsh_recall":${recall(lsh, exact)},"lshmp_sec":${r3(mpSec)},"lshmp_recall":${recall(mp, exact)},"lshcap_sec":${r3(capSec)},"lshcap_recall":${recall(capIds, exact)},"occ_max":$occMax,"occ_p99":$occP99,"lshidx_build_sec":${r3(lshIdxBuildSec)},"lshidx_probe_sec":${r3(lshIdxProbeSec)},"lshidx_recall":${recall(lshIdxIds, exact)},"nlist":$nlist,"ivf_train_sec":${r3(buildSec)},"ivf_assign_sec":${r3(assignSec)},"ivf_build_sec":${r3(buildSec + assignSec)},"ivf_probe_sec":${r3(probeSec)},"ivf_sec":${r3(buildSec + assignSec + probeSec)},"ivf_recall":${recall(ivf, exact)},"ivft_train_sec":${r3(tTrainSec)},"ivft_assign_sec":${r3(tAssignSec)},"ivft_build_sec":${r3(tTrainSec + tAssignSec)},"ivft_probe_sec":${r3(tProbeSec)},"ivft_recall":${recall(tIvf, exact)},"ivfpq_build_sec":${r3(ivfpqBuildSec)},"ivfpq_probe_sec":${r3(ivfpqProbeSec)},"ivfpq_recall":${recall(pqIds, exact)},"ivfpqt_train_sec":${r3(ivfpqtTrainSec)},"ivfpqt_build_sec":${r3(ivfpqtBuildSec)},"ivfpqt_probe_sec":${r3(ivfpqtProbeSec)},"ivfpqt_recall":${recall(tPqIds, exact)},"ivfpqr_build_sec":${r3(ivfpqrBuildSec)},"ivfpqr_probe_sec":${r3(ivfpqrProbeSec)},"ivfpqr_recall":${recall(rPqIds, exact)},"ivfpql_build_sec":${r3(ivfpqlBuildSec)},"ivfpql_probe_sec":${r3(ivfpqlProbeSec)},"ivfpql_recall":${recall(lPqIds, exact)}}""")
         }
@@ -715,22 +724,6 @@ object ScaleSweep {
       val dims = sys.env.get("SPARK_GRAFT_PQDIM_DIMS")
         .map(_.split(",").toSeq.map(_.trim.toInt))
         .getOrElse(Seq(16, 64, 128))
-      def r3(x: Double) = math.round(x * 1000) / 1000.0
-      def ids(rows: Array[org.apache.spark.sql.Row]): Map[Long, Set[Long]] =
-        rows.groupBy(_.getLong(0))
-          .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-      def collectIds(df: DataFrame): (Double, Map[Long, Set[Long]]) = {
-        val t0 = System.nanoTime()
-        val rows = df.select(col("query_id").cast("long"),
-          col("cand_id").cast("long")).collect()
-        ((System.nanoTime() - t0) / 1e9, ids(rows))
-      }
-      def recall(approx: Map[Long, Set[Long]],
-                 exact: Map[Long, Set[Long]]): Double = {
-        val hit = exact.map { case (q, e) =>
-          (approx.getOrElse(q, Set.empty) & e).size }.sum
-        math.round(hit * 1000.0 / exact.values.map(_.size).sum) / 1000.0
-      }
       def dirBytes(p: String): Long = {
         val s = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
         try s.filter(java.nio.file.Files.isRegularFile(_))
@@ -758,44 +751,31 @@ object ScaleSweep {
         listed.unpersist()
         graft.core.CacheScope.releaseStragglers(spark)
         val rb0 = System.nanoTime()
-        val (rPacked0, rCb, rQcents) = Similarity.ivfPqResidualBuildPacked(
+        val (rIndex0, rCb, rLists) = Similarity.ivfPqResidualBuild(
           corpus, cents, m = 8, nCent = 256,
           trained = true, sampleMod = 61, hashSample = true)
         val rCbP = rCb.persist(); rCbP.count()
-        val rQcentsP = rQcents.persist(); rQcentsP.count()
-        val rPacked = rPacked0.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        rPacked.write.format("noop").mode("overwrite").save()
-        val pqBuildSec = (System.nanoTime() - rb0) / 1e9
-        // the long (s, code) relation derived from the cached packed
-        // frame and persisted separately, so each probe form is priced
-        // over ITS OWN materialized layout (the r14 sweep's shape)
-        val rIndex = Similarity.packedToLong(rPacked).persist(
+        val rListsP = rLists.persist(); rListsP.count()
+        val rIndex = rIndex0.persist(
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         rIndex.write.format("noop").mode("overwrite").save()
-        val (pqProbeSec, pq) = collectIds(
-          Similarity.ivfPqResidualProbe(rIndex, cents, rQcentsP, rCbP,
-              queries, k, nprobe = 8, m = 8)
-            .select(col("query_id"), col("neighbor_id").as("cand_id")))
-        // PACKED probe (r15): same index content, m-lookup fold per
-        // candidate instead of m rows through a join + hash aggregate
+        val pqBuildSec = (System.nanoTime() - rb0) / 1e9
         val (pqpProbeSec, pqp) = collectIds(
-          Similarity.ivfPqResidualProbePacked(rPacked, cents, rQcentsP,
-              rCbP, queries, k, nprobe = 8, m = 8)
+          Similarity.ivfPqProbe(rIndex, rListsP, rCbP, queries, k,
+              nprobe = 8, m = 8)
             .select(col("query_id"), col("neighbor_id").as("cand_id")))
-        // at-rest bytes: raw vectors vs the PACKED code layout
-        // (cand_id, centroid_id, codes array<smallint>) — the long
-        // (s, code) relation is the probe's join shape, not storage
+        // at-rest bytes: raw vectors vs the code index
+        // (cand_id, centroid_id, codes array<smallint>)
         val outDir =
           java.nio.file.Files.createTempDirectory("pqdim").toString
         corpus.write.mode("overwrite").parquet(s"$outDir/raw")
-        rPacked.select(col("cand_id"), col("centroid_id"),
+        rIndex.select(col("cand_id"), col("centroid_id"),
             expr("transform(codes, x -> CAST(x AS SMALLINT))").as("codes"))
           .write.mode("overwrite").parquet(s"$outDir/codes")
         val rawBytes = dirBytes(s"$outDir/raw")
         val codeBytes = dirBytes(s"$outDir/codes")
-        rIndex.unpersist(); rPacked.unpersist()
-        rCbP.unpersist(); rQcentsP.unpersist()
+        rIndex.unpersist()
+        rCbP.unpersist(); rListsP.unpersist()
         graft.core.CacheScope.releaseStragglers(spark)
         // WIDTH-SCALED twin: the fixed-m=8 columns hold the byte budget
         // constant (0.5 bit/dim at 128 — the recall column shows that
@@ -805,35 +785,28 @@ object ScaleSweep {
         // at dim 64 the twin coincides with m=8 and is its own receipt.
         val mW = math.max(2, dim / 8)
         val wb0 = System.nanoTime()
-        val (wPacked0, wCb, wQcents) = Similarity.ivfPqResidualBuildPacked(
+        val (wIndex0, wCb, wLists) = Similarity.ivfPqResidualBuild(
           corpus, cents, m = mW, nCent = 256,
           trained = true, sampleMod = 61, hashSample = true)
         val wCbP = wCb.persist(); wCbP.count()
-        val wQcentsP = wQcents.persist(); wQcentsP.count()
-        val wPacked = wPacked0.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        wPacked.write.format("noop").mode("overwrite").save()
-        val wBuildSec = (System.nanoTime() - wb0) / 1e9
-        val wIndex = Similarity.packedToLong(wPacked).persist(
+        val wListsP = wLists.persist(); wListsP.count()
+        val wIndex = wIndex0.persist(
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         wIndex.write.format("noop").mode("overwrite").save()
-        val (wProbeSec, wpq) = collectIds(
-          Similarity.ivfPqResidualProbe(wIndex, cents, wQcentsP, wCbP,
-              queries, k, nprobe = 8, m = mW)
-            .select(col("query_id"), col("neighbor_id").as("cand_id")))
+        val wBuildSec = (System.nanoTime() - wb0) / 1e9
         val (wpProbeSec, wpqp) = collectIds(
-          Similarity.ivfPqResidualProbePacked(wPacked, cents, wQcentsP,
-              wCbP, queries, k, nprobe = 8, m = mW)
+          Similarity.ivfPqProbe(wIndex, wListsP, wCbP, queries, k,
+              nprobe = 8, m = mW)
             .select(col("query_id"), col("neighbor_id").as("cand_id")))
-        wPacked.select(col("cand_id"), col("centroid_id"),
+        wIndex.select(col("cand_id"), col("centroid_id"),
             expr("transform(codes, x -> CAST(x AS SMALLINT))").as("codes"))
           .write.mode("overwrite").parquet(s"$outDir/wcodes")
         val wCodeBytes = dirBytes(s"$outDir/wcodes")
-        wIndex.unpersist(); wPacked.unpersist()
-        wCbP.unpersist(); wQcentsP.unpersist()
+        wIndex.unpersist()
+        wCbP.unpersist(); wListsP.unpersist()
         cents.unpersist()
         graft.core.CacheScope.releaseStragglers(spark)
-        if (report) println(s"""{"metric":"pqdim_sweep","fixture":"clustered","corpus":$n,"dim":$dim,"k":$k,"nlist":$nlist,"brute_sec":${r3(bruteSec)},"ivf_build_sec":${r3(ivfBuildSec)},"ivf_probe_sec":${r3(ivfProbeSec)},"ivf_recall":${recall(flat, exact)},"ivfpqr_build_sec":${r3(pqBuildSec)},"ivfpqr_probe_sec":${r3(pqProbeSec)},"ivfpqr_recall":${recall(pq, exact)},"ivfpqp_probe_sec":${r3(pqpProbeSec)},"ivfpqp_recall":${recall(pqp, exact)},"ivfpqw_m":$mW,"ivfpqw_build_sec":${r3(wBuildSec)},"ivfpqw_probe_sec":${r3(wProbeSec)},"ivfpqw_recall":${recall(wpq, exact)},"ivfpqwp_probe_sec":${r3(wpProbeSec)},"ivfpqwp_recall":${recall(wpqp, exact)},"raw_bytes_per_vec":${rawBytes / n},"code_bytes_per_vec":${codeBytes / n},"wcode_bytes_per_vec":${wCodeBytes / n},"raw_logical_bytes_per_vec":${dim * 8},"code_logical_bytes_per_vec":8,"wcode_logical_bytes_per_vec":$mW,"mem_ratio_measured":${r3(rawBytes.toDouble / codeBytes)}}""")
+        if (report) println(s"""{"metric":"pqdim_sweep","fixture":"clustered","corpus":$n,"dim":$dim,"k":$k,"nlist":$nlist,"brute_sec":${r3(bruteSec)},"ivf_build_sec":${r3(ivfBuildSec)},"ivf_probe_sec":${r3(ivfProbeSec)},"ivf_recall":${recall(flat, exact)},"ivfpqr_build_sec":${r3(pqBuildSec)},"ivfpqp_probe_sec":${r3(pqpProbeSec)},"ivfpqp_recall":${recall(pqp, exact)},"ivfpqw_m":$mW,"ivfpqw_build_sec":${r3(wBuildSec)},"ivfpqwp_probe_sec":${r3(wpProbeSec)},"ivfpqwp_recall":${recall(wpqp, exact)},"raw_bytes_per_vec":${rawBytes / n},"code_bytes_per_vec":${codeBytes / n},"wcode_bytes_per_vec":${wCodeBytes / n},"raw_logical_bytes_per_vec":${dim * 8},"code_logical_bytes_per_vec":8,"wcode_logical_bytes_per_vec":$mW,"mem_ratio_measured":${r3(rawBytes.toDouble / codeBytes)}}""")
       }
       onePoint(20000L, 16, report = false) // JIT/codegen warmup
       points.foreach(n => dims.foreach(d => onePoint(n, d, report = true)))

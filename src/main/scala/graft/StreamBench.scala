@@ -60,12 +60,8 @@ object StreamBench {
     // custom-state path: per-key state, no windowed aggregation)
     val mode = if (args.length > 1) args(1) else "join"
     val filesPerTrigger = if (args.length > 2) args(2) else "0"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // knob rationale: core/GraftSession.scala (shared with Bench/Verify)
+    val spark = graft.core.GraftSession.local(cpus, "graft-streambench")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -5,9 +5,9 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional trailing query names restrict the dump (dev loop);
-    // oracle_sql.json always carries the full catalog — trim it to the
-    // dumped names before a targeted oracle_check run
+    // optional trailing query names restrict the dump (dev loop), and
+    // oracle_sql.json then carries only those names, so oracle_check
+    // runs on a targeted dump as is
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -54,7 +54,10 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val oracles =
+      if (only.isEmpty) SparkEntry.oracleSql
+      else SparkEntry.oracleSql.filter { case (name, _) => only(name) }
+    val json = oracles
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -74,36 +74,15 @@ object Dedup {
   def charShingles(df: DataFrame, textCol: String, idCol: String, k: Int): DataFrame =
     rawCharShingles(df, textCol, idCol, k).distinct()
 
-  /** MinHash band signatures: `bands × rowsPerBand` salted-md5 min-hashes
-    * per document, folded into one signature string per band.
-    *
-    * Two shuffles: (doc, hash-id) minima, then (doc, band) fold. The
-    * per-band fold orders its rowsPerBand minima by hash id (array_sort
-    * on (h, minhash) structs) so the signature is deterministic.
+  /** The (band, sig) buckets a `maxBucketSize` cap would drop, with
+    * their widths — the recall audit for [[lshCandidatePairs]]: callers
+    * count/inspect these to see how many documents the cap silences
+    * instead of trading recall away blind.
     */
-  def minhashBandSignatures(shingles: DataFrame, idCol: String,
-                            bands: Int, rowsPerBand: Int): DataFrame = {
-    // All bands·rowsPerBand minima in ONE aggregation pass (no ×numHashes
-    // row explosion): each hash is its own min() column, then each band
-    // folds its rowsPerBand minima (in hash order) into one md5.
-    // Hash family: hash h is the h%4-th 8-hex-char window of
-    // md5((h div 4) || '|' || shingle) — one digest yields 4 independent
-    // 32-bit hashes, so numHashes costs ceil(n/4) md5 calls per shingle
-    // (Catalyst CSE shares the digest across the 4 windows), and min()
-    // over fixed-width lowercase hex is numeric min.
-    val numHashes = bands * rowsPerBand
-    val minCols = (0 until numHashes).map(h =>
-      min(substring(md5(concat(lit(h / 4), lit("|"), col("shingle"))),
-        (h % 4) * 8 + 1, 8)).as(s"mh_$h"))
-    val perDoc = shingles.groupBy(col(idCol)).agg(minCols.head, minCols.tail: _*)
-    val bandCols = (0 until bands).map { b =>
-      val members = (0 until rowsPerBand).map(r => col(s"mh_${b * rowsPerBand + r}"))
-      struct(lit(b).as("band"), md5(concat(members: _*)).as("sig"))
-    }
-    perDoc
-      .select(col(idCol), explode(array(bandCols: _*)).as("bs"))
-      .select(col(idCol), col("bs.band"), col("bs.sig"))
-  }
+  def oversizedBuckets(sigs: DataFrame, cap: Int): DataFrame =
+    sigs.groupBy(col("band"), col("sig"))
+      .agg(count(lit(1)).as("bucket_n"))
+      .filter(col("bucket_n") > cap)
 
   /** LSH candidate pairs: documents sharing any band signature.
     * The join key is (band, sig) — a pure equi-join, so Catalyst plans a
@@ -122,16 +101,6 @@ object Dedup {
     * before committing to it; running exact dedup first shrinks the hot
     * buckets that identical documents cause.
     */
-  /** The (band, sig) buckets a `maxBucketSize` cap would drop, with
-    * their widths — the recall audit for [[lshCandidatePairs]]: callers
-    * count/inspect these to see how many documents the cap silences
-    * instead of trading recall away blind.
-    */
-  def oversizedBuckets(sigs: DataFrame, cap: Int): DataFrame =
-    sigs.groupBy(col("band"), col("sig"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > cap)
-
   def lshCandidatePairs(sigs: DataFrame, idCol: String,
                         maxBucketSize: Option[Int] = None): DataFrame = {
     val bounded = maxBucketSize match {
@@ -396,25 +365,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("n_inter"),
         (col("n_inter") / col("n_a")).as("containment_a"),
         (col("n_inter") / col("n_b")).as("containment_b"))
-  }
-
-  /** Exact Jaccard over shingle sets, evaluated only on candidate pairs:
-    * |A∩B| via a shingle equi-join restricted to candidates, sizes via a
-    * per-doc count. Integer counts → the final division is deterministic.
-    */
-  def jaccardOnCandidates(shingles: DataFrame, candidates: DataFrame,
-                          idCol: String): DataFrame = {
-    val sizes = shingles.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
-    val inter = candidates
-      .join(shingles.select(col(idCol).as("id_a"), col("shingle")), Seq("id_a"))
-      .join(shingles.select(col(idCol).as("id_b"), col("shingle")), Seq("id_b", "shingle"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(sizes.select(col(idCol).as("id_a"), col("n").as("n_a")), Seq("id_a"))
-      .join(sizes.select(col(idCol).as("id_b"), col("n").as("n_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (col("n_inter") / (col("n_a") + col("n_b") - col("n_inter"))).as("jaccard"))
   }
 
   /** End-to-end MinHash near-dup: shingle → band-minhash → LSH candidates

@@ -416,9 +416,7 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val c = corpus.select(col(idCol).as("cand_id"), toDoubleVec(col(vecCol)).as("cv"))
       .withColumn("cnorm", norm("cv"))
-    val centsArr = cents.agg(sort_array(collect_list(
-      struct(col("centroid_id"), col("centv"), col("centnorm")))).as("cents"))
-    c.crossJoin(broadcast(centsArr))
+    c.crossJoin(broadcast(centroidArray(cents)))
       .withColumn("centroid_id", graft.functions.VectorFunctions
         .nearest_centroid(col("cv"), col("cnorm"), col("cents")))
       .drop("cents")
@@ -434,16 +432,8 @@ object Similarity {
   def ivfProbe(listed: DataFrame, cents: DataFrame, queries: DataFrame,
       k: Int, nprobe: Int = 2,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), toDoubleVec(col(vecCol)).as("qv"))
-      .withColumn("qnorm", norm("qv"))
-    val probeW = Window.partitionBy(col("query_id")).orderBy(desc("csim"), asc("centroid_id"))
-    val probes = q.crossJoin(broadcast(cents))
-      .select(col("query_id"), col("centroid_id"),
-        (graft.functions.VectorFunctions.vec_dot(col("qv"), col("centv"))
-          / (col("qnorm") * col("centnorm"))).as("csim"))
-      .withColumn("rn", row_number().over(probeW)).filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("centroid_id"))
-      .join(q, Seq("query_id"))
+    val q = queryVectors(queries, idCol, vecCol)
+    val probes = coarseProbes(q, cents, nprobe).join(q, Seq("query_id"))
     val sims = listed.join(probes, Seq("centroid_id"))
       .filter(col("cand_id") =!= col("query_id"))
       .select(col("query_id"), col("cand_id"),
@@ -451,6 +441,65 @@ object Similarity {
     val w = Window.partitionBy(col("query_id")).orderBy(desc("sim"), asc("cand_id"))
     sims.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
+
+  /** Centroid table → the id-ascending array<struct<centroid_id,
+    * centv, centnorm>> (one row) that NearestCentroid and the in-row
+    * stream probes read off a broadcast.
+    */
+  private def centroidArray(cents: DataFrame): DataFrame =
+    cents.agg(sort_array(collect_list(
+      struct(col("centroid_id"), col("centv"), col("centnorm")))).as("cents"))
+
+  /** Query vectors as (query_id, qv array<double>, qnorm, extra…). */
+  private def queryVectors(queries: DataFrame, idCol: String,
+                           vecCol: String, extra: Column*): DataFrame =
+    queries.select(Seq(col(idCol).as("query_id"),
+        toDoubleVec(col(vecCol)).as("qv")) ++ extra: _*)
+      .withColumn("qnorm", norm("qv"))
+
+  /** Each query's `nprobe` nearest coarse centroids as (query_id,
+    * centroid_id, carry…): cosine against the broadcast nlist-row
+    * centroid table, ranked (csim desc, centroid_id asc) — the list
+    * restriction of [[ivfProbe]] and [[ivfPqProbe]]. `q` is
+    * [[queryVectors]] output; the `carry` columns are evaluated on each
+    * (query, centroid) row and kept for the probed ones.
+    */
+  private def coarseProbes(q: DataFrame, cents: DataFrame, nprobe: Int,
+                           carry: Column*): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(desc("csim"), asc("centroid_id"))
+    q.crossJoin(broadcast(cents))
+      .select(Seq(col("query_id"), col("centroid_id"),
+        (graft.functions.VectorFunctions.vec_dot(col("qv"), col("centv"))
+          / (col("qnorm") * col("centnorm"))).as("csim")) ++ carry: _*)
+      .withColumn("rn", row_number().over(w)).filter(col("rn") <= nprobe)
+      .drop("csim", "rn")
+  }
+
+  /** Query vectors with their `nprobe` probed list ids ranked IN-ROW
+    * (`probes` array<bigint>): the centroid array rides a scalar
+    * broadcast, each query row scores all centroids in a transform()
+    * and keeps its nprobe best with the bounded-heap
+    * [[graft.functions.StructArrayTopK]] under [[coarseProbes]]' (csim
+    * desc, centroid_id asc) order — a projection, so it stays
+    * stateless on a stream.
+    */
+  private def inRowProbes(cents: DataFrame, queries: DataFrame, nprobe: Int,
+                          idCol: String, vecCol: String): DataFrame =
+    queryVectors(queries, idCol, vecCol)
+      .withColumn("one", lit(1))
+      .join(broadcast(centroidArray(cents).withColumn("one", lit(1))), Seq("one"))
+      .drop("one")
+      .withColumn("probes", transform(
+        graft.functions.TopKStruct.arrayTopK(
+          filter(
+            transform(col("cents"), c => struct(
+              (graft.functions.VectorFunctions.vec_dot(col("qv"), c.getField("centv"))
+                / (col("qnorm") * c.getField("centnorm"))).as("csim"),
+              c.getField("centroid_id").as("centroid_id"))),
+            s => s.getField("csim").isNotNull),
+          nprobe, true, false),
+        s => s.getField("centroid_id")))
+      .drop("cents")
 
   /** Group a built IVF index ([[ivfAssign]] output) into ONE ROW PER
     * INVERTED LIST: (centroid_id, list array<struct<cand_id, cv,
@@ -575,25 +624,7 @@ object Similarity {
   def ivfProbeStream(listGroups: DataFrame, cents: DataFrame,
       queries: DataFrame, k: Int, nprobe: Int = 2,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val centsArr = cents.agg(sort_array(collect_list(
-        struct(col("centroid_id"), col("centv"), col("centnorm")))).as("cents"))
-      .withColumn("one", lit(1))
-    val q = queries
-      .select(col(idCol).as("query_id"), toDoubleVec(col(vecCol)).as("qv"))
-      .withColumn("qnorm", norm("qv"))
-      .withColumn("one", lit(1))
-      .join(broadcast(centsArr), Seq("one")).drop("one")
-      .withColumn("probes", transform(
-        graft.functions.TopKStruct.arrayTopK(
-          filter(
-            transform(col("cents"), c => struct(
-              (graft.functions.VectorFunctions.vec_dot(col("qv"), c.getField("centv"))
-                / (col("qnorm") * c.getField("centnorm"))).as("csim"),
-              c.getField("centroid_id").as("centroid_id"))),
-            s => s.getField("csim").isNotNull),
-          nprobe, true, false),
-        s => s.getField("centroid_id")))
-      .drop("cents")
+    val q = inRowProbes(cents, queries, nprobe, idCol, vecCol)
     // The static index side MUST be broadcast-pinned: at list rows of
     // ~N/nlist vectors the groups table clears the 10 MB
     // autoBroadcastJoinThreshold long before it stops being the small
@@ -673,25 +704,7 @@ object Similarity {
   def ivfProbeStreamSharded(shardedGroups: DataFrame, cents: DataFrame,
       queries: DataFrame, k: Int, nprobe: Int = 2,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val centsArr = cents.agg(sort_array(collect_list(
-        struct(col("centroid_id"), col("centv"), col("centnorm")))).as("cents"))
-      .withColumn("one", lit(1))
-    val q = queries
-      .select(col(idCol).as("query_id"), toDoubleVec(col(vecCol)).as("qv"))
-      .withColumn("qnorm", norm("qv"))
-      .withColumn("one", lit(1))
-      .join(broadcast(centsArr), Seq("one")).drop("one")
-      .withColumn("probes", transform(
-        graft.functions.TopKStruct.arrayTopK(
-          filter(
-            transform(col("cents"), c => struct(
-              (graft.functions.VectorFunctions.vec_dot(col("qv"), c.getField("centv"))
-                / (col("qnorm") * c.getField("centnorm"))).as("csim"),
-              c.getField("centroid_id").as("centroid_id"))),
-            s => s.getField("csim").isNotNull),
-          nprobe, true, false),
-        s => s.getField("centroid_id")))
-      .drop("cents")
+    val q = inRowProbes(cents, queries, nprobe, idCol, vecCol)
     val joined = (0 until nprobe).foldLeft(q) { (df, i) =>
       val g = shardedGroups.select(col("centroid_id").as(s"_c$i"),
         col("list").as(s"_l$i")).hint("shuffle_hash")
@@ -744,15 +757,6 @@ object Similarity {
       .filter(col("sim") >= threshold)
   }
 
-  /** Approximate corpus-wide nearest neighbor — the sub-quadratic scale
-    * path. Candidates come from a sign-LSH equi-join: every vector hashes
-    * to one bucket; each query probes its own bucket plus all buckets at
-    * Hamming distance ≤ 1 (multi-probe recovers most of the recall a
-    * single bucket loses). Compute is Σ|bucket|·|probes| — linear in the
-    * corpus for balanced buckets — and the only join is an equi-join on
-    * the bucket id. Vectors whose probed buckets hold no other vector
-    * produce no row (standard ANN semantics).
-    */
   /** Product-quantization code assignment: split each vector into `m`
     * contiguous subvectors and encode every subvector as the id of its
     * nearest codebook centroid — the compression step behind
@@ -763,102 +767,111 @@ object Similarity {
     *
     * All distances are exact integers: elements quantize to
     * floor(x·1000) BIGINT, so the argmin (ties → lowest centroid id) is
-    * bit-identical across engines. Plan: broadcast the nCent-row
-    * codebook, explode m subspace rows per (vector, centroid), one
-    * integer-HOF distance per row, two small aggregates — nothing
-    * scales with corpus², and the per-vector cost is m·nCent·dim
-    * multiplies, the same arithmetic a native PQ encoder does.
+    * bit-identical across engines. Plan: one codegen'd encode projection
+    * per row ([[graft.functions.PqEncode]]) over the broadcast nCent-row
+    * codebook array — nothing scales with corpus², and the per-vector
+    * cost is m·nCent·dim multiplies, the same arithmetic a native PQ
+    * encoder does.
     */
   def pqCodes(corpus: DataFrame, m: Int = 4, nCent: Int = 8,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    // code array straight off the encode expression — the former
-    // long-format pivot (groupBy(id) + max(when)) re-aggregated what
-    // pqAssign's argmin exchange had just produced; both exchanges are
-    // gone now that encode is a projection
     val arr = pqAssignArr(corpus, m, nCent, idCol, vecCol)._1
-    arr.select(col(idCol) +: (0 until m).map(s =>
+    arr.select(col("cand_id").as(idCol) +: (0 until m).map(s =>
       element_at(col("codes"), s + 1).as(s"code_$s")): _*)
   }
 
-  /** Integer subspace squared-distance between the `qe` and `qc` array
-    * columns restricted to subspace `s` of `m` — the LUT-build formula
-    * (encode computes the same arithmetic inside
-    * [[graft.functions.PqEncode]] since r12; the ADC invariant — LUT
-    * cell = encode's distance for the chosen code — is what
-    * `q_pq_search`'s oracle pins across the two implementations).
+  /** The floor(x·1000) BIGINT grid every PQ kernel computes on: encode
+    * distances, LUT cells and ADC sums are exact integers, hence
+    * bit-identical across engines. Applied to the column as stored (a
+    * float column multiplies in float, as the oracles do).
     */
-  private def pqSubDist(m: Int): Column = {
-    val sub = s"(size(qe) div $m)"
+  private def quantize(v: Column): Column =
+    transform(v, x => floor(x * 1000).cast("long"))
+
+  /** Nested per-subspace LUT over the cid-sorted codebook array `cb`:
+    * lut[s][cid] = Σ over subspace s of `f(a_i, codeword_i)`, where `a`
+    * names an array<bigint> (`c.qc` is the codeword itself). One
+    * projection builds a whole LUT, and transform keeps cb's order, so
+    * a codeword's position — its code — IS the inner index [[adcFold]]
+    * reads.
+    */
+  private def nestedLut(m: Int, a: String, f: String): Column = {
+    def sub(v: String) = s"slice($v, s * (size($v) div $m) + 1, size($v) div $m)"
     expr(
-      s"""aggregate(
-         |  zip_with(slice(qe, s * $sub + 1, $sub),
-         |           slice(qc, s * $sub + 1, $sub),
-         |           (a, b) -> (a - b) * (a - b)),
-         |  CAST(0 AS BIGINT), (acc, x) -> acc + x)""".stripMargin)
+      s"""transform(sequence(0, ${m - 1}), s -> transform(cb, c ->
+         |  aggregate(zip_with(${sub(a)}, ${sub("c.qc")}, (a, b) -> $f),
+         |    CAST(0 AS BIGINT), (acc, x) -> acc + x)))""".stripMargin)
   }
 
-  /** Integer subspace INNER PRODUCT between `qe` and `qc` restricted to
-    * subspace `s` of `m` — the cosine-ADC LUT's numerator cell.
+  /** m-lookup ADC fold: Σ_s lut[s][codes[s]] on exact integers.
+    * Native expression ([[graft.functions.AdcFold]]), NOT the
+    * equivalent aggregate/element_at HOF: higher-order functions are
+    * CodegenFallback (interpreted per row), which measured as no gain
+    * over a join-and-aggregate scorer at the 1M sweep point.
     */
-  private def pqSubIp(m: Int): Column = {
-    val sub = s"(size(qe) div $m)"
-    expr(
-      s"""aggregate(
-         |  zip_with(slice(qe, s * $sub + 1, $sub),
-         |           slice(qc, s * $sub + 1, $sub),
-         |           (a, b) -> a * b),
-         |  CAST(0 AS BIGINT), (acc, x) -> acc + x)""".stripMargin)
+  private def adcFold(lut: String): Column =
+    graft.functions.VectorFunctions.adc_fold(col("codes"), col(lut))
+
+  /** Rank-select codebook: the `nCent` lowest-cand_id `qe` rows as
+    * (qc, cid = 0-based rank) — deterministic, oracle-replayable.
+    */
+  private def rankCodebook(rows: DataFrame, nCent: Int): DataFrame =
+    rows.orderBy(col("cand_id")).limit(nCent)
+      .select(col("qe").as("qc"),
+        (row_number().over(Window.orderBy(col("cand_id"))) - 1)
+          .cast("long").as("cid"))
+
+  /** `cb`, or the rank-select `fallback` when `cb` turns out EMPTY (a
+    * sampled trainer whose predicate selected zero rows). An empty
+    * codebook would make the encode drop EVERY vector from the index.
+    * The fallback rides a degenerate anti join against `cb`'s first
+    * row, so a nonempty `cb` passes through byte-identical.
+    */
+  private def nonEmptyOr(cb: DataFrame, fallback: DataFrame): DataFrame =
+    cb.select(col("qc"), col("cid"))
+      .union(fallback.join(cb.limit(1), lit(true), "left_anti"))
+
+  /** A codebook carrying `centroid_id` is per-list (one codebook per
+    * inverted list); without it, one global codebook serves every list.
+    */
+  private def isPerList(cb: DataFrame): Boolean =
+    cb.columns.contains("centroid_id")
+
+  /** Attach the codebook array `cb` (array<struct<cid, qc>>) to
+    * `rows`: per-list codebooks join on centroid_id, a global one rides
+    * every row. Either way the build side is nlist-bounded and
+    * broadcast. Codewords are sorted by cid and renumbered 0..n-1, so
+    * an encoded code is the codeword's position — what the nested LUTs
+    * index by — and equals the cid for the 0-based contiguous cids
+    * every codebook built here has.
+    */
+  private def withCodebook(rows: DataFrame, cb: DataFrame): DataFrame = {
+    val arr = transform(sort_array(collect_list(struct(col("cid"), col("qc")))),
+      (c, i) => struct(i.cast("long").as("cid"), c.getField("qc").as("qc"))).as("cb")
+    if (isPerList(cb))
+      rows.join(broadcast(cb.groupBy(col("centroid_id")).agg(arr)),
+        Seq("centroid_id"))
+    else rows.crossJoin(broadcast(cb.agg(arr)))
   }
 
-  /** Integer subspace squared-norm of the CODEWORD side (`qc`) for
-    * subspace `s` of `m` — query-independent; Σ over a candidate's
-    * chosen codes reconstructs the quantized candidate's squared norm,
-    * the denominator the cosine-ADC score needs.
+  /** PQ-encode each row's `qe` against its list's codebook: `rows` with
+    * `qe` replaced by `codes` (array<bigint>[m]) — one codegen'd
+    * [[graft.functions.PqEncode]] projection, no shuffle.
     */
-  private def pqSubCn2(m: Int): Column = {
-    val sub = s"(size(qe) div $m)"
-    expr(
-      s"""aggregate(
-         |  transform(slice(qc, s * $sub + 1, $sub), x -> x * x),
-         |  CAST(0 AS BIGINT), (acc, x) -> acc + x)""".stripMargin)
+  private def encode(rows: DataFrame, cb: DataFrame, m: Int): DataFrame = {
+    val keep = rows.columns.toSeq.filterNot(_ == "qe").map(col)
+    withCodebook(rows, cb).select(keep :+ graft.functions.VectorFunctions
+      .pq_encode(col("qe"), col("cb"), m).as("codes"): _*)
   }
 
-  /** Shared PQ assignment, array form: ((id, codes array<bigint>[m]),
-    * broadcast codebook (qc, cid)). Codebook = `nCent` lowest-id corpus
-    * vectors, quantized to the floor(x·1000) grid like everything
-    * downstream. Encoding is ONE codegen'd pass per row
-    * ([[graft.functions.PqEncode]] over the cid-ascending
-    * scalar-broadcast codebook) — the former crossJoin ×
-    * explode(m) × min(struct) composition materialized
-    * |corpus|×nCent×m rows plus an argmin exchange for m codes per
-    * vector; exact integer parity by construction.
+  /** Shared PQ assignment: ((cand_id, codes array<bigint>[m]),
+    * rank-select codebook (qc, cid)) over the raw quantized vectors.
     */
   private def pqAssignArr(corpus: DataFrame, m: Int, nCent: Int,
                           idCol: String, vecCol: String): (DataFrame, DataFrame) = {
-    val quant = expr(s"transform($vecCol, x -> CAST(floor(x * 1000) AS BIGINT))")
-    val c = corpus.select(col(idCol), quant.as("qe"))
-    val cents = corpus.orderBy(col(idCol)).limit(nCent)
-      .select(quant.as("qc"),
-        (row_number().over(Window.orderBy(col(idCol))) - 1)
-          .cast("long").as("cid"))
-    val centsArr = cents.agg(sort_array(collect_list(
-      struct(col("cid"), col("qc")))).as("cents"))
-    val arr = c.crossJoin(broadcast(centsArr))
-      .select(col(idCol), graft.functions.VectorFunctions
-        .pq_encode(col("qe"), col("cents"), m).as("codes"))
-    (arr, cents)
-  }
-
-  /** Shared PQ assignment, long format ((id, s, code) — one row per
-    * subspace, what the ADC joins key on), derived from
-    * [[pqAssignArr]] by posexplode.
-    */
-  private def pqAssign(corpus: DataFrame, m: Int, nCent: Int,
-                       idCol: String, vecCol: String): (DataFrame, DataFrame) = {
-    val (arr, cents) = pqAssignArr(corpus, m, nCent, idCol, vecCol)
-    val best = arr.select(col(idCol), posexplode(col("codes")))
-      .select(col(idCol), col("pos").as("s"), col("col").as("code"))
-    (best, cents)
+    val c = corpus.select(col(idCol).as("cand_id"), quantize(col(vecCol)).as("qe"))
+    val cb = rankCodebook(c, nCent)
+    (encode(c, cb, m), cb)
   }
 
   /** ANN recall@k audit — the eval loop every approximate index needs
@@ -911,16 +924,16 @@ object Similarity {
     * instead of `dim` float multiplies, and the corpus's raw vectors
     * are never touched again.
     *
-    * Plan shape at 100 TB: the codebook (`nCent` rows) and the
-    * per-query lookup tables (|queries|·m·nCent rows — queries are the
-    * SMALL side by assumption) are broadcast; the corpus streams
-    * through exactly twice — once to encode (m·nCent integer subspace
-    * distances per vector, identical arithmetic to [[pqCodes]]) and
-    * once to score (a broadcast-hash join of the (id, s, code) rows
-    * against the LUT, partial-aggregated map-side into per-(query,
-    * vector) ADC sums). The only full shuffles are keyed by
-    * (query, vector) — never a raw-vector cross product. Top-k is a
-    * per-query window over the scored rows.
+    * Plan shape at 100 TB: each query builds its LUT once (lut[s][cid] =
+    * the integer subspace squared distance, one projection over the
+    * broadcast codebook array); queries are the SMALL side by
+    * assumption, so the LUT rows are broadcast and every corpus code row
+    * scores itself with m lookups ([[adcFold]]) — no raw-vector cross
+    * product, no per-subspace row explosion. The LUT cell is the same
+    * arithmetic encode ([[graft.functions.PqEncode]]) minimizes, so a
+    * vector's distance under its chosen code is encode's distance; the
+    * `q_pq_search` oracle pins the two implementations together. Top-k
+    * is a per-query window over the scored rows.
     *
     * Everything is exact integer arithmetic on the floor(x·1000) grid:
     * ADC distance = Σₛ ‖q_s − cent(code_s)‖², bounded by
@@ -933,345 +946,257 @@ object Similarity {
   def pqSearch(corpus: DataFrame, queryPred: Column, k: Int = 5,
                m: Int = 4, nCent: Int = 8,
                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val (codes, cents) = pqAssign(corpus, m, nCent, idCol, vecCol)
-    val quant = expr(s"transform($vecCol, x -> CAST(floor(x * 1000) AS BIGINT))")
-    val lut = corpus.filter(queryPred)
-      .select(col(idCol).as("query_id"), quant.as("qe"))
-      .crossJoin(broadcast(cents))
-      .withColumn("s", explode(sequence(lit(0), lit(m - 1))))
-      .select(col("query_id"), col("s"), col("cid"), pqSubDist(m).as("lv"))
-    val adc = codes.join(broadcast(lut),
-        codes("s") === lut("s") && codes("code") === lut("cid"))
-      .filter(col("query_id") =!= col(idCol))
-      .groupBy(col("query_id"), col(idCol))
-      .agg(sum(col("lv")).as("adc_dist"))
+    val (codes, cb) = pqAssignArr(corpus, m, nCent, idCol, vecCol)
+    val lut = withCodebook(corpus.filter(queryPred)
+        .select(col(idCol).as("query_id"), quantize(col(vecCol)).as("qe")), cb)
+      .select(col("query_id"), nestedLut(m, "qe", "(a - b) * (a - b)").as("lut"))
     val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist").asc, col(idCol).asc)
-    adc.withColumn("rank", row_number().over(w).cast("long"))
+      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
+    codes.crossJoin(broadcast(lut))
+      .filter(col("query_id") =!= col("cand_id"))
+      .select(col("query_id"), col("cand_id").as("neighbor_id"),
+        adcFold("lut").as("adc_dist"))
+      .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
-      .select(col("query_id"), col(idCol).as("neighbor_id"),
-        col("adc_dist"), col("rank"))
   }
 
   /** IVF-PQ composed search (Jégou, Douze & Schmid, "Product
     * Quantization for Nearest Neighbor Search", TPAMI 2011 — the IVFADC
     * system) — the billion-scale index layout: the coarse quantizer
-    * ([[ivfCentroids]] + [[ivfAssign]], cosine argmax, identical to
+    * ([[ivfCentroids]] + [[ivfAssign]]'s cosine argmax, identical to
     * `q_knn_ivf`'s assignment) restricts each query's candidates to its
     * `nprobe` nearest inverted lists, and within those lists candidates
-    * are scored asymmetrically through their PQ codes — COSINE-ADC
-    * (see [[ivfPqProbe]] for why cosine and the exact formula; the
-    * encode is [[pqSearch]]'s, the scoring metric matches the tier's
-    * cosine ground truth) — raw corpus vectors are touched at BUILD
-    * time only (one assignment projection + one encode projection,
-    * both single corpus passes over broadcast centroid tables, zero
-    * shuffles), never at probe time.
+    * are scored asymmetrically through their PQ codes by cosine-ADC
+    * ([[ivfPqProbe]]). Raw corpus vectors are touched at BUILD time
+    * only, never at probe time.
     *
     * This variant encodes raw vectors against a shared corpus-level
-    * codebook (the IVFFlat-codebook simplification) rather than
-    * per-list residuals — the residual refinement changes which
-    * codebook the encode pass consults, not the plan shape, and the
-    * shared-codebook form is what the exact-integer oracle replays.
-    *
-    * Plan at 100 TB: the index relation is (cand, list, s, code) — m
-    * small ints per vector, the compressed representation that makes
-    * the corpus cheap to rescan; written out partitioned by
-    * `centroid_id` the probe's list restriction becomes partition
-    * pruning. Probe cost per query: ~nprobe·N/nlist code rows through
-    * a broadcast LUT hash-join and a partial-aggregated (query, cand)
-    * sum — never a raw-vector cross product. Top-k per query is a
-    * bounded window. All arithmetic on the floor(x·1000) BIGINT grid;
-    * ties rank by ascending candidate id; the query row is excluded.
+    * codebook ([[ivfPqBuild]]); [[ivfPqResidualSearch]] and
+    * [[ivfPqLocalSearch]] encode residuals. All arithmetic on the
+    * floor(x·1000) BIGINT grid; ties rank by ascending candidate id; the
+    * query row is excluded.
     */
   def ivfPqSearch(corpus: DataFrame, queryPred: Column, k: Int = 5,
                   nlist: Int = 8, nprobe: Int = 2, m: Int = 4, nCent: Int = 8,
                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val cents = ivfCentroids(corpus, nlist, idCol, vecCol)
-    val (index, pqCents) = ivfPqBuild(corpus, cents, m, nCent, idCol, vecCol)
-    ivfPqProbe(index, cents, pqCents, corpus.filter(queryPred), k, nprobe,
+    val (index, cb, lists) = ivfPqBuild(corpus, cents, m, nCent, idCol, vecCol)
+    ivfPqProbe(index, lists, cb, corpus.filter(queryPred), k, nprobe,
       m, idCol, vecCol)
   }
 
-  /** IVF-PQ index BUILD — the one-off pass where raw vectors are last
-    * touched, and a ZERO-SHUFFLE one: the coarse assignment argmax
-    * (NearestCentroid over the broadcast centroid array — [[ivfAssign]]'s
-    * kernel) and the PQ encode (PqEncode over the broadcast codebook —
-    * [[pqCodes]]'s kernel) are computed in ONE projection over the
-    * corpus, then the code array posexplodes into the persisted
-    * relation (cand_id, centroid_id, s, code) — m small ints per
-    * vector. At 100 TB: write it out partitioned by `centroid_id` and
-    * every probe's list restriction becomes partition pruning. Returns
-    * (index, pqCodebook (cid, qc)) — the codebook rides along because
-    * the probe's LUT consults it (persist it; it is nCent rows but
-    * derives from a corpus scan).
+  /** [[ivfPqResidualBuild]] + [[ivfPqProbe]] composed inline — queries
+    * drawn from the corpus by predicate, the gated-catalog shape
+    * (`q_knn_ivfpq_res`).
+    */
+  def ivfPqResidualSearch(corpus: DataFrame, queryPred: Column, k: Int = 5,
+                          nlist: Int = 8, nprobe: Int = 2,
+                          m: Int = 4, nCent: Int = 8,
+                          trained: Boolean = false, sampleMod: Int = 16,
+                          idCol: String = "vec_id",
+                          vecCol: String = "embedding",
+                          hashSample: Boolean = false): DataFrame = {
+    val cents = ivfCentroids(corpus, nlist, idCol, vecCol)
+    val (index, rcb, lists) = ivfPqResidualBuild(corpus, cents, m, nCent,
+      trained, sampleMod, idCol, vecCol, hashSample)
+    ivfPqProbe(index, lists, rcb, corpus.filter(queryPred), k, nprobe, m,
+      idCol, vecCol)
+  }
+
+  /** [[ivfPqLocalBuild]] + [[ivfPqProbe]] composed inline — the
+    * gated-catalog shape (`q_knn_ivfpq_local`).
+    */
+  def ivfPqLocalSearch(corpus: DataFrame, queryPred: Column, k: Int = 5,
+                       nlist: Int = 8, nprobe: Int = 2,
+                       m: Int = 4, nCent: Int = 8,
+                       trained: Boolean = false, sampleMod: Int = 16,
+                       idCol: String = "vec_id",
+                       vecCol: String = "embedding",
+                       hashSample: Boolean = false): DataFrame = {
+    val cents = ivfCentroids(corpus, nlist, idCol, vecCol)
+    // NOT plan-truncated: eagerly localCheckpoint-ing the built
+    // index/codebooks to shrink the probe plan was tried and REGRESSED
+    // 1.40 → 2.40 s at sf0.1 — three extra sequential jobs (each with
+    // its own planning + cold codegen) cost more than the analysis
+    // time the smaller probe plan saved. The single-action composed
+    // plan stays.
+    val (index, rcb, lists) = ivfPqLocalBuild(corpus, cents, m, nCent,
+      trained, sampleMod, idCol, vecCol, hashSample)
+    ivfPqProbe(index, lists, rcb, corpus.filter(queryPred), k, nprobe, m,
+      idCol, vecCol)
+  }
+
+  /** IVF-PQ index BUILD, shared-codebook layout — the one-off pass where
+    * raw vectors are last touched, and a ZERO-SHUFFLE one: the coarse
+    * assignment argmax ([[ivfAssign]]'s NearestCentroid kernel) and the
+    * PQ encode ([[pqCodes]]'s PqEncode kernel) run in ONE projection
+    * over the corpus. Every IVF-PQ build returns the same three frames,
+    * which [[ivfPqProbe]] consumes unchanged:
+    *   - index (cand_id, centroid_id, codes array<bigint>[m]) — one row
+    *     per vector, m small ints: the storage-faithful layout. At
+    *     100 TB write it out partitioned by `centroid_id` and every
+    *     probe's list restriction becomes partition pruning;
+    *   - codebook (qc, cid) — persist it: nCent rows, but derived from a
+    *     corpus scan;
+    *   - lists: the coarse centroid table with each list's quantized
+    *     centroid added (centroid_id, centv, centnorm, qcent). Here qcent
+    *     is the ZERO vector: a shared codebook encodes the residual
+    *     against a zero centroid, so the residual score's qcent terms
+    *     vanish exactly and the probe is the plain cosine-ADC.
+    * Default codebook: the nCent lowest-id corpus vectors, cid = 0-based
+    * rank (identical to [[pqCodes]]'). Pass `codebook` ((qc
+    * array<bigint>, cid) rows, e.g. [[pqKmeansCodebook]]) to encode
+    * against a trained one; a supplied codebook that turns out EMPTY
+    * falls back to the default. Its cids need not be 0-based or
+    * contiguous: codes are codeword positions in cid order
+    * ([[withCodebook]]).
     */
   def ivfPqBuild(corpus: DataFrame, cents: DataFrame,
                  m: Int = 4, nCent: Int = 8,
                  idCol: String = "vec_id", vecCol: String = "embedding",
                  codebook: Option[DataFrame] = None)
-      : (DataFrame, DataFrame) = {
-    val (packed, pqCents) =
-      ivfPqBuildPacked(corpus, cents, m, nCent, idCol, vecCol, codebook)
-    (packedToLong(packed), pqCents)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val default = rankCodebook(corpus.select(col(idCol).as("cand_id"),
+      quantize(col(vecCol)).as("qe")), nCent)
+    val cb = codebook.fold(default)(nonEmptyOr(_, default))
+    val lists = cents.withColumn("qcent", transform(col("centv"), _ => lit(0L)))
+    (encode(assignQuantized(corpus, cents, idCol, vecCol), cb, m), cb, lists)
   }
 
-  /** PACKED IVF-PQ build: identical single-projection zero-shuffle plan
-    * to [[ivfPqBuild]] but the index keeps the m-code ARRAY per vector
-    * — (cand_id, centroid_id, codes) — instead of posexploding into m
-    * rows. This is the STORAGE-faithful layout (one row per vector, m
-    * small ints — the "8 bytes/vector" the compression claim is about)
-    * and the input [[ivfPqProbePacked]] wants: the long (s, code)
-    * relation makes the probe pay m ROWS per candidate through a join
-    * + hash aggregate, where the packed probe pays m array lookups
-    * inside one codegen'd projection (r15 — the ivfpqp columns of the
-    * pqdim sweep price the difference). [[ivfPqBuild]]'s long relation
-    * is this frame posexploded.
+  /** RESIDUAL IVF-PQ BUILD — the faithful IVFADC encode (Jégou et al.
+    * 2011 §IV: PQ is applied to x − q₁(x), the residual after coarse
+    * quantization). The shared-codebook form ([[ivfPqBuild]]) measures
+    * why this matters: on a clustered corpus every same-cluster vector
+    * quantizes to the SAME codes (cluster spread ≪ codeword spacing),
+    * within-list ordering degenerates to id tie-breaks, and recall@10
+    * collapses to ~k/|cluster| (sweep: 0.03 at 30k clustered).
+    * Residuals live at within-list scale — exactly where the probe
+    * needs discrimination — so the codewords resolve what the shared
+    * codebook cannot express.
+    *
+    * Same zero-shuffle plan family as [[ivfPqBuild]]: one argmax
+    * projection (coarse assignment), one broadcast join to attach the
+    * quantized centroid and subtract (residuals are exact integers on
+    * the same grid), one encode projection over the broadcast residual
+    * codebook. `trained = true` trains the codebook on the 1/sampleMod
+    * residual sample via the per-subspace Lloyd pass
+    * ([[pqKmeansCodebook]]'s core; an empty sample falls back to
+    * rank-select); default is rank-select (the nCent lowest-id vectors'
+    * residuals — deterministic, oracle-replayable). Returns
+    * [[ivfPqBuild]]'s three frames: (index, residual codebook (qc, cid),
+    * lists with qcent = the quantized centroid).
     */
-  def ivfPqBuildPacked(corpus: DataFrame, cents: DataFrame,
-                       m: Int = 4, nCent: Int = 8,
-                       idCol: String = "vec_id", vecCol: String = "embedding",
-                       codebook: Option[DataFrame] = None)
-      : (DataFrame, DataFrame) = {
-    val quant = expr(s"transform($vecCol, x -> CAST(floor(x * 1000) AS BIGINT))")
-    // default codebook: identical construction to pqAssignArr
-    // (q_pq_codes / q_pq_search) — nCent lowest-id corpus vectors,
-    // cid = 0-based rank. Pass `codebook` ((qc array<bigint>, cid)
-    // rows, e.g. [[pqKmeansCodebook]]) to encode against a trained one.
-    // A supplied codebook that turns out EMPTY (a sampled trainer whose
-    // sample predicate selected zero rows) falls back to the rank-select
-    // default — an empty cb array would make pq_encode yield no codes
-    // and the index silently drop EVERY vector (r14 ADVICE). The
-    // fallback rows ride a degenerate anti join against the supplied
-    // codebook's first row: zero rows survive whenever the codebook is
-    // nonempty, so trained callers see byte-identical output.
-    val default = corpus.orderBy(col(idCol)).limit(nCent)
-      .select(quant.as("qc"),
-        (row_number().over(Window.orderBy(col(idCol))) - 1)
-          .cast("long").as("cid"))
-    val pqCents = codebook match {
-      case Some(cb) =>
-        cb.select(col("qc"), col("cid"))
-          .union(default.join(cb.limit(1), lit(true), "left_anti"))
-      case None => default
-    }
-    val cbArr = pqCents.agg(sort_array(collect_list(
-      struct(col("cid"), col("qc")))).as("cb"))
-    val centsArr = cents.agg(sort_array(collect_list(
-      struct(col("centroid_id"), col("centv"), col("centnorm")))).as("cents"))
-    val c = corpus.select(col(idCol).as("cand_id"),
-        toDoubleVec(col(vecCol)).as("cv"), quant.as("qe"))
+  def ivfPqResidualBuild(corpus: DataFrame, cents: DataFrame,
+                         m: Int = 4, nCent: Int = 8,
+                         trained: Boolean = false, sampleMod: Int = 16,
+                         idCol: String = "vec_id", vecCol: String = "embedding",
+                         hashSample: Boolean = false)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val (res, lists) = residuals(corpus, cents, idCol, vecCol)
+    val rankCb = rankCodebook(res, nCent)
+    val rcb =
+      if (trained)
+        nonEmptyOr(pqKmeansCodebookQ(
+          res.filter(trainSamplePred("cand_id", sampleMod, hashSample))
+            .select(col("cand_id").as("vid"), col("qe")), m, nCent), rankCb)
+      else rankCb
+    (encode(res, rcb, m), rcb, lists)
+  }
+
+  /** LOCAL-CODEBOOK residual IVF-PQ BUILD — one codebook PER INVERTED
+    * LIST (the FAISS "local codebooks" layout). The shared residual
+    * codebook measures its own capacity wall on the sweep: residuals
+    * of a clustered corpus form ~one mode per (cluster, list) offset,
+    * and once modes outnumber codewords the within-mode resolution is
+    * zero (clustered 1M: 244 modes vs 256 codewords → recall 0.058
+    * where 100k's 64 modes gave 0.475). Per-list codebooks divide the
+    * mode space by nlist — each list's nCent codewords cover only ITS
+    * ~clusters/nlist residual modes, restoring within-mode levels
+    * without growing the code width.
+    *
+    * Same plan family as [[ivfPqResidualBuild]]; the encode joins each
+    * residual row with ITS list's broadcast codebook array (nlist rows)
+    * instead of one global array. One honest deviation from the
+    * zero-shuffle claim: the rank-select default pays a single
+    * list-keyed exchange (the per-list row_number window); the trained
+    * path's Lloyd shuffles only the 1/sampleMod sample. `trained = true`
+    * runs the grouped per-subspace Lloyd ([[pqKmeansCodebookGrouped]],
+    * gid = list); default rank-select takes each list's nCent lowest-id
+    * residuals. Storage: nlist·nCent·dim ints — ~50 MB at a billion
+    * vectors under the √N/16 nlist discipline, still a broadcast table.
+    * Returns [[ivfPqBuild]]'s three frames, the codebook keyed by list:
+    * (index, local codebook (centroid_id, cid, qc), lists).
+    */
+  def ivfPqLocalBuild(corpus: DataFrame, cents: DataFrame,
+                      m: Int = 4, nCent: Int = 8,
+                      trained: Boolean = false, sampleMod: Int = 16,
+                      idCol: String = "vec_id", vecCol: String = "embedding",
+                      hashSample: Boolean = false)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val (res, lists) = residuals(corpus, cents, idCol, vecCol)
+    val rcb =
+      if (trained) {
+        val tcb = pqKmeansCodebookGrouped(
+          res.filter(trainSamplePred("cand_id", sampleMod, hashSample))
+            .select(col("centroid_id").as("gid"),
+              col("cand_id").as("vid"), col("qe")), m, nCent)
+          .withColumnRenamed("gid", "centroid_id")
+        // missing-list fallback: a list whose training sample is EMPTY
+        // gets no codebook rows, and the encode's inner join on
+        // centroid_id would silently drop every vector of that list —
+        // unreachable at probe time. Each such list gets ONE
+        // rank-select codeword (its lowest-id residual): enough to keep
+        // all its vectors reachable, and capacity is degenerate only
+        // for lists the sample already proved near-empty. The trained
+        // codebook's own gid set IS the sampled-list set, so the check
+        // costs one partial-agg pass over `res` plus an anti join
+        // against the (nlist-bounded) codebook — never a second
+        // full-width window exchange.
+        val fb = res.groupBy(col("centroid_id"))
+          .agg(min(struct(col("cand_id"), col("qe"))).as("mn"))
+          .join(tcb.select(col("centroid_id")).distinct(),
+            Seq("centroid_id"), "left_anti")
+          .select(col("centroid_id"), col("mn.qe").as("qc"),
+            lit(0L).as("cid"))
+        tcb.select(col("centroid_id"), col("qc"), col("cid")).union(fb)
+      } else {
+        val w = Window.partitionBy(col("centroid_id")).orderBy(col("cand_id"))
+        res.withColumn("rn", row_number().over(w)).filter(col("rn") <= nCent)
+          .select(col("centroid_id"), col("qe").as("qc"),
+            (col("rn") - 1).cast("long").as("cid"))
+      }
+    (encode(res, rcb, m), rcb, lists)
+  }
+
+  /** Coarse assignment with the raw vector quantized alongside, in ONE
+    * projection: (cand_id, centroid_id, qe) — [[ivfAssign]]'s
+    * NearestCentroid argmax over the broadcast centroid array.
+    */
+  private def assignQuantized(corpus: DataFrame, cents: DataFrame,
+                              idCol: String, vecCol: String): DataFrame =
+    corpus.select(col(idCol).as("cand_id"),
+        toDoubleVec(col(vecCol)).as("cv"), quantize(col(vecCol)).as("qe"))
       .withColumn("cnorm", norm("cv"))
-    val packed = c.crossJoin(broadcast(centsArr)).crossJoin(broadcast(cbArr))
+      .crossJoin(broadcast(centroidArray(cents)))
       .select(col("cand_id"),
         graft.functions.VectorFunctions
           .nearest_centroid(col("cv"), col("cnorm"), col("cents"))
           .as("centroid_id"),
-        graft.functions.VectorFunctions
-          .pq_encode(col("qe"), col("cb"), m).as("codes"))
-    (packed, pqCents)
-  }
+        col("qe"))
 
-  /** (cand_id, centroid_id, codes) → the long (s, code) relation the
-    * r14-layout probes consume.
+  /** Residual rows (cand_id, centroid_id, qe = quantized x − quantized
+    * centroid of its list) and the lists (`cents` + qcent, the
+    * quantized centroid) they were taken against.
     */
-  def packedToLong(packed: DataFrame): DataFrame =
-    packed.select(col("cand_id"), col("centroid_id"),
-        posexplode(col("codes")))
+  private def residuals(corpus: DataFrame, cents: DataFrame,
+                        idCol: String, vecCol: String): (DataFrame, DataFrame) = {
+    val lists = cents.withColumn("qcent", quantize(col("centv")))
+    val res = assignQuantized(corpus, cents, idCol, vecCol)
+      .join(broadcast(lists.select(col("centroid_id"), col("qcent"))),
+        Seq("centroid_id"))
       .select(col("cand_id"), col("centroid_id"),
-        col("pos").as("s"), col("col").as("code"))
-
-  /** The inverse re-pack — one list-keyed aggregation; used where only
-    * the long relation exists (a persisted r14-layout index). Fresh
-    * builds should use [[ivfPqBuildPacked]] instead (no shuffle).
-    */
-  def packCodes(index: DataFrame): DataFrame =
-    index.groupBy(col("cand_id"), col("centroid_id"))
-      .agg(array_sort(collect_list(struct(col("s"), col("code")))).as("sc"))
-      .select(col("cand_id"), col("centroid_id"),
-        expr("transform(sc, x -> x.code)").as("codes"))
-
-  /** m-lookup ADC fold over a nested LUT array column: Σ_s
-    * lut[s][codes[s]] on exact integers — the packed probes' scoring
-    * kernel. Native expression ([[graft.functions.AdcFold]]), NOT the
-    * equivalent aggregate/element_at HOF: higher-order functions are
-    * CodegenFallback (interpreted per row), which measured as the
-    * packed probe gaining nothing over the long form at the 1M sweep
-    * point (~10 s both). The `m` parameter is implicit in the code
-    * array's length.
-    */
-  private def adcFold(lutCol: String, m: Int): Column =
-    graft.functions.VectorFunctions.adc_fold(col("codes"), col(lutCol))
-
-  /** Nested per-subspace LUT over the sorted codebook array `cb`:
-    * lut[s][cid] = Σ over subspace-s elements of `f(qe_i, qc_i)` — the
-    * one projection that builds a query's whole LUT (cb is sorted by
-    * cid, and transform preserves order, so cid IS the inner index).
-    */
-  private def nestedLut(m: Int, cell: String): Column =
-    expr(
-      s"""transform(sequence(0, ${m - 1}), s ->
-         |  transform(cb, c -> $cell))""".stripMargin)
-
-  /** PACKED cosine-ADC probe over [[ivfPqBuildPacked]]'s index — the
-    * value-identical fast path of [[ivfPqProbe]] (IvfPqPackedSpec pins
-    * bit-equality). The long-form probe pays each candidate's score as
-    * m ROWS through a (s, code)-keyed broadcast join and a
-    * (query, cand) hash AGGREGATE — m× the candidate rows, then a
-    * shuffle of all of them. Here the per-query LUT rides as a NESTED
-    * ARRAY (lut[s][cid], one projection over the broadcast codebook
-    * array) and each candidate row scores itself with m element_at
-    * lookups inside a single codegen'd fold ([[adcFold]]) — per-
-    * candidate cost is m LOOKUPS, independent of dim (dim enters only
-    * the per-query LUT build), and the candidate set reaches the final
-    * top-k window without ever exploding or pre-shuffling. This is the
-    * plan shape the IVFADC papers' "m lookups per candidate" cost
-    * model actually describes; the pqdim sweep prices long vs packed
-    * as the ivfpqr/ivfpqp column pairs.
-    */
-  def ivfPqProbePacked(packed: DataFrame, cents: DataFrame,
-                       pqCents: DataFrame, queries: DataFrame, k: Int,
-                       nprobe: Int = 2, m: Int = 4,
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding",
-                       broadcastLuts: Boolean = true): DataFrame = {
-    def bq(df: DataFrame): DataFrame = if (broadcastLuts) broadcast(df) else df
-    val q = queries
-      .select(col(idCol).as("query_id"), toDoubleVec(col(vecCol)).as("qv"))
-      .withColumn("qnorm", norm("qv"))
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(desc("csim"), asc("centroid_id"))
-    val probes = q.crossJoin(broadcast(cents))
-      .select(col("query_id"), col("centroid_id"),
-        (graft.functions.VectorFunctions.vec_dot(col("qv"), col("centv"))
-          / (col("qnorm") * col("centnorm"))).as("csim"))
-      .withColumn("rn", row_number().over(probeW)).filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("centroid_id"))
-    val quant = expr(s"transform($vecCol, x -> CAST(floor(x * 1000) AS BIGINT))")
-    val cbArr = pqCents.agg(sort_array(collect_list(
-      struct(col("cid"), col("qc")))).as("cb"))
-    val ipCell =
-      s"""aggregate(zip_with(slice(qe, s * (size(qe) div $m) + 1, (size(qe) div $m)),
-         |                   slice(c.qc, s * (size(c.qc) div $m) + 1, (size(c.qc) div $m)),
-         |                   (a, b) -> a * b),
-         |  CAST(0 AS BIGINT), (acc, x) -> acc + x)""".stripMargin
-    val cn2Cell =
-      s"""aggregate(transform(slice(c.qc, s * (size(c.qc) div $m) + 1, (size(c.qc) div $m)),
-         |  x -> x * x), CAST(0 AS BIGINT), (acc, x) -> acc + x)""".stripMargin
-    val qlut = queries.select(col(idCol).as("query_id"), quant.as("qe"))
-      .crossJoin(broadcast(cbArr))
-      .select(col("query_id"), nestedLut(m, ipCell).as("ip_lut"),
-        expr("aggregate(transform(qe, x -> x * x), CAST(0 AS BIGINT), (acc, x) -> acc + x)")
-          .as("qn2"))
-    val cn2Arr = cbArr.select(nestedLut(m, cn2Cell).as("cn2_lut"))
-    // bounded-heap top-k, NOT a window: the window form sorts every
-    // candidate row inside a per-query partition (~nprobe·N/nlist rows
-    // per query through one exchange + sort — measured as the shared
-    // ~10 s floor both probe forms paid at the 1M sweep point). The
-    // heap aggregate keeps ≤k structs per partition per query
-    // (map-side partial merge), so the only shuffled rows are the
-    // per-partition survivors. Same (sim desc, id asc) order ⇒ same
-    // rows and ranks; NULL sims are EXCLUDED (the documented
-    // heap-vs-window NULL divergence — bruteForceTopKHeap's contract).
-    heapTopK(packed.join(bq(probes), Seq("centroid_id"))
-      .join(bq(qlut), Seq("query_id"))
-      .crossJoin(broadcast(cn2Arr))
-      .filter(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id").as("neighbor_id"),
-        adcFold("ip_lut", m).as("ipsum"), adcFold("cn2_lut", m).as("rn2"),
-        col("qn2"))
-      .select(col("query_id"), col("neighbor_id"),
-        (col("ipsum").cast("double") /
-          (sqrt(col("qn2").cast("double")) * sqrt(col("rn2").cast("double"))))
-          .as("adc_sim")), k)
-  }
-
-  /** Per-query bounded-heap top-k over (query_id, neighbor_id,
-    * adc_sim) rows — (adc_sim desc, neighbor_id asc), rank = heap
-    * position, NULL sims excluded.
-    */
-  private def heapTopK(scored: DataFrame, k: Int): DataFrame =
-    scored.filter(col("adc_sim").isNotNull)
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopKStruct.topK(
-        struct(col("adc_sim"), col("neighbor_id")), k, true, false).as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .select(col("query_id"), col("col.neighbor_id").as("neighbor_id"),
-        col("col.adc_sim").as("adc_sim"),
-        (col("pos") + 1).cast("long").as("rank"))
-
-  /** PACKED residual (IVFADC) probe — [[ivfPqResidualProbe]]'s exact
-    * score decomposition (ip = qip + Σ ipr; ‖x̂‖² = cn2c + 2·Σcross +
-    * Σrn2) computed the packed way: every LUT a nested array attached
-    * by one slim broadcast join (per-query ipr/qn2, per-centroid
-    * cross/cn2c, per-(query, centroid) qip, codebook rn2), every
-    * candidate scored by three m-lookup folds in one codegen'd
-    * projection. Value-identical to the long form (spec-pinned).
-    */
-  def ivfPqResidualProbePacked(packed: DataFrame, cents: DataFrame,
-                               qcents: DataFrame, rcb: DataFrame,
-                               queries: DataFrame, k: Int, nprobe: Int = 2,
-                               m: Int = 4, idCol: String = "vec_id",
-                               vecCol: String = "embedding",
-                               broadcastLuts: Boolean = true): DataFrame = {
-    def bq(df: DataFrame): DataFrame = if (broadcastLuts) broadcast(df) else df
-    val q = queries
-      .select(col(idCol).as("query_id"), toDoubleVec(col(vecCol)).as("qv"))
-      .withColumn("qnorm", norm("qv"))
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(desc("csim"), asc("centroid_id"))
-    val probes = q.crossJoin(broadcast(cents))
-      .select(col("query_id"), col("centroid_id"),
-        (graft.functions.VectorFunctions.vec_dot(col("qv"), col("centv"))
-          / (col("qnorm") * col("centnorm"))).as("csim"))
-      .withColumn("rn", row_number().over(probeW)).filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("centroid_id"))
-    val quant = expr(s"transform($vecCol, x -> CAST(floor(x * 1000) AS BIGINT))")
-    val rcbArr = rcb.agg(sort_array(collect_list(
-      struct(col("cid"), col("qc")))).as("cb"))
-    val iprCell =
-      s"""aggregate(zip_with(slice(qe, s * (size(qe) div $m) + 1, (size(qe) div $m)),
-         |                   slice(c.qc, s * (size(c.qc) div $m) + 1, (size(c.qc) div $m)),
-         |                   (a, b) -> a * b),
-         |  CAST(0 AS BIGINT), (acc, x) -> acc + x)""".stripMargin
-    val rn2Cell =
-      s"""aggregate(transform(slice(c.qc, s * (size(c.qc) div $m) + 1, (size(c.qc) div $m)),
-         |  x -> x * x), CAST(0 AS BIGINT), (acc, x) -> acc + x)""".stripMargin
-    val crossCell =
-      s"""aggregate(zip_with(slice(qcent, s * (size(qcent) div $m) + 1, (size(qcent) div $m)),
-         |                   slice(c.qc, s * (size(c.qc) div $m) + 1, (size(c.qc) div $m)),
-         |                   (a, b) -> a * b),
-         |  CAST(0 AS BIGINT), (acc, x) -> acc + x)""".stripMargin
-    val qlut = queries.select(col(idCol).as("query_id"), quant.as("qe"))
-      .crossJoin(broadcast(rcbArr))
-      .select(col("query_id"), nestedLut(m, iprCell).as("ipr_lut"),
-        expr("aggregate(transform(qe, x -> x * x), CAST(0 AS BIGINT), (acc, x) -> acc + x)")
-          .as("qn2"))
-    val rn2Arr = rcbArr.select(nestedLut(m, rn2Cell).as("rn2_lut"))
-    val crossArr = qcents.crossJoin(broadcast(rcbArr))
-      .select(col("centroid_id"), nestedLut(m, crossCell).as("crs_lut"),
-        expr("aggregate(transform(qcent, x -> x * x), CAST(0 AS BIGINT), (acc, x) -> acc + x)")
-          .as("cn2c"))
-    val qip = queries.select(col(idCol).as("query_id"), quant.as("qe"))
-      .crossJoin(broadcast(qcents))
-      .select(col("query_id"), col("centroid_id"),
-        expr("aggregate(zip_with(qe, qcent, (a, b) -> a * b), CAST(0 AS BIGINT), (acc, x) -> acc + x)")
-          .as("qip"))
-    // heap top-k, same rationale as ivfPqProbePacked
-    heapTopK(packed.join(bq(probes), Seq("centroid_id"))
-      .join(bq(qlut), Seq("query_id"))
-      .join(broadcast(crossArr), Seq("centroid_id"))
-      .join(bq(qip), Seq("query_id", "centroid_id"))
-      .crossJoin(broadcast(rn2Arr))
-      .filter(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id").as("neighbor_id"),
-        adcFold("ipr_lut", m).as("iprs"), adcFold("crs_lut", m).as("crs"),
-        adcFold("rn2_lut", m).as("rn2s"), col("qip"), col("cn2c"),
-        col("qn2"))
-      .select(col("query_id"), col("neighbor_id"),
-        ((col("qip") + col("iprs")).cast("double") /
-          (sqrt(col("qn2").cast("double")) *
-            sqrt((col("cn2c") + lit(2) * col("crs") + col("rn2s"))
-              .cast("double")))).as("adc_sim")), k)
+        zip_with(col("qe"), col("qcent"), (a, b) => a - b).as("qe"))
+    (res, lists)
   }
 
   /** SAMPLED-Lloyd-trained PQ codebook — the data-adaptive upgrade of
@@ -1305,9 +1230,8 @@ object Similarity {
                        hashSample: Boolean = false)
       : DataFrame = {
     require(sampleMod >= 1, "sampleMod must be >= 1")
-    val quant = expr(s"transform($vecCol, x -> CAST(floor(x * 1000) AS BIGINT))")
     val samp = corpus.filter(trainSamplePred(idCol, sampleMod, hashSample))
-      .select(col(idCol).as("vid"), quant.as("qe"))
+      .select(col(idCol).as("vid"), quantize(col(vecCol)).as("qe"))
     pqKmeansCodebookQ(samp, m, nCent)
   }
 
@@ -1388,491 +1312,113 @@ object Similarity {
         transform(col("pcs"), p => p.getField("v")).as("qc"), col("cid"))
   }
 
-  /** RESIDUAL IVF-PQ BUILD — the faithful IVFADC encode (Jégou et al.
-    * 2011 §IV: PQ is applied to x − q₁(x), the residual after coarse
-    * quantization). The shared-codebook form ([[ivfPqBuild]]) measures
-    * why this matters: on a clustered corpus every same-cluster vector
-    * quantizes to the SAME codes (cluster spread ≪ codeword spacing),
-    * within-list ordering degenerates to id tie-breaks, and recall@10
-    * collapses to ~k/|cluster| (sweep: 0.03 at 30k clustered).
-    * Residuals live at within-list scale — exactly where the probe
-    * needs discrimination — so the codewords resolve what the shared
-    * codebook cannot express.
-    *
-    * Same zero-shuffle plan family as [[ivfPqBuild]]: one argmax
-    * projection (coarse assignment), one broadcast join to attach the
-    * quantized centroid and subtract (residuals are exact integers on
-    * the same grid), one encode projection over the broadcast residual
-    * codebook. `trained = true` trains the codebook on the 1/sampleMod
-    * residual sample via the per-subspace Lloyd pass
-    * ([[pqKmeansCodebook]]'s core); default is rank-select (the nCent
-    * lowest-id vectors' residuals — deterministic, oracle-replayable).
-    * Returns (index (cand, list, s, code), residual codebook (qc, cid),
-    * quantized centroids (centroid_id, qcent)).
-    */
-  def ivfPqResidualBuild(corpus: DataFrame, cents: DataFrame,
-                         m: Int = 4, nCent: Int = 8,
-                         trained: Boolean = false, sampleMod: Int = 16,
-                         idCol: String = "vec_id", vecCol: String = "embedding",
-                         hashSample: Boolean = false)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val (packed, rcb, qcents) = ivfPqResidualBuildPacked(corpus, cents,
-      m, nCent, trained, sampleMod, idCol, vecCol, hashSample)
-    (packedToLong(packed), rcb, qcents)
-  }
-
-  /** Packed twin of [[ivfPqResidualBuild]] — same plan, index kept as
-    * the (cand_id, centroid_id, codes) array layout
-    * ([[ivfPqBuildPacked]]'s rationale; consumed by
-    * [[ivfPqResidualProbePacked]]).
-    */
-  def ivfPqResidualBuildPacked(corpus: DataFrame, cents: DataFrame,
-                               m: Int = 4, nCent: Int = 8,
-                               trained: Boolean = false, sampleMod: Int = 16,
-                               idCol: String = "vec_id",
-                               vecCol: String = "embedding",
-                               hashSample: Boolean = false)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val quant = expr(s"transform($vecCol, x -> CAST(floor(x * 1000) AS BIGINT))")
-    val qcents = cents.select(col("centroid_id"),
-      expr("transform(centv, x -> CAST(floor(x * 1000) AS BIGINT))").as("qcent"))
-    val centsArr = cents.agg(sort_array(collect_list(
-      struct(col("centroid_id"), col("centv"), col("centnorm")))).as("cents"))
-    val assigned = corpus.select(col(idCol).as("cand_id"),
-        toDoubleVec(col(vecCol)).as("cv"), quant.as("qe0"))
-      .withColumn("cnorm", norm("cv"))
-      .crossJoin(broadcast(centsArr))
-      .select(col("cand_id"), col("qe0"),
-        graft.functions.VectorFunctions
-          .nearest_centroid(col("cv"), col("cnorm"), col("cents"))
-          .as("centroid_id"))
-    val res = assigned.join(broadcast(qcents), Seq("centroid_id"))
-      .select(col("cand_id"), col("centroid_id"),
-        expr("zip_with(qe0, qcent, (a, b) -> a - b)").as("qe"))
-    val rankCb = res.orderBy(col("cand_id")).limit(nCent)
-      .select(col("qe").as("qc"),
-        (row_number().over(Window.orderBy(col("cand_id"))) - 1)
-          .cast("long").as("cid"))
-    val rcb =
-      if (trained) {
-        // empty-sample fallback (r14 ADVICE): a sample predicate that
-        // selects zero residuals yields an EMPTY trained codebook, and
-        // the encode's inner join then drops EVERY vector from the
-        // index. Union the rank-select codebook through a degenerate
-        // anti join — its rows survive only when the trained codebook
-        // has no rows at all, so a nonempty sample is byte-identical to
-        // before (cost: one extra TakeOrdered pass in trained mode).
-        val tcb = pqKmeansCodebookQ(
-          res.filter(trainSamplePred("cand_id", sampleMod, hashSample))
-            .select(col("cand_id").as("vid"), col("qe")), m, nCent)
-        tcb.select(col("qc"), col("cid"))
-          .union(rankCb.join(tcb.limit(1), lit(true), "left_anti"))
-      } else rankCb
-    val cbArr = rcb.agg(sort_array(collect_list(
-      struct(col("cid"), col("qc")))).as("cb"))
-    val packed = res.crossJoin(broadcast(cbArr))
-      .select(col("cand_id"), col("centroid_id"),
-        graft.functions.VectorFunctions
-          .pq_encode(col("qe"), col("cb"), m).as("codes"))
-    (packed, rcb, qcents)
-  }
-
-  /** RESIDUAL IVF-PQ PROBE: cosine-ADC against reconstructions
-    * x̂ = qcent(list) + codeword(codes). All terms decompose into
-    * broadcastable integer LUTs —
-    *   ip(q̃, x̂)  = ip(q̃, qcent)            [per (query, list)]
-    *              + Σ_s ipr[q][s][code]      [query × codebook]
-    *   ‖x̂‖²      = ‖qcent‖²                 [per list]
-    *              + 2·Σ_s cross[list][s][code] [centroid × codebook]
-    *              + Σ_s rn2[s][code]         [codebook]
-    * so the per-candidate work stays m LUT lookups and the scan stays
-    * ~nprobe·N/nlist code rows; sim = ip/(√qn2·√‖x̂‖²) is exactly the
-    * cosine of integer vectors (|sim| ≤ 1, bit-reproducible — integer
-    * sums, one IEEE division). The cross LUT is nlist·m·nCent rows —
-    * at the √N/16 nlist discipline and nCent 256 that is ~5 MB at a
-    * billion vectors, comfortably broadcastable. Ties rank by
-    * ascending candidate id; the query row is excluded.
-    */
-  def ivfPqResidualProbe(index: DataFrame, cents: DataFrame,
-                         qcents: DataFrame, rcb: DataFrame,
-                         queries: DataFrame, k: Int, nprobe: Int = 2,
-                         m: Int = 4, idCol: String = "vec_id",
-                         vecCol: String = "embedding",
-                         broadcastLuts: Boolean = true): DataFrame = {
-    // broadcastLuts guards the QUERY-proportional tables only (probes,
-    // ipr, qip, qn — each O(|queries|) rows; ipr is queries·m·nCent,
-    // ~2048 rows/query at the m=8/nCent=256 production point, so a
-    // corpus-scale query set would have to collect to the driver and
-    // can blow the broadcast limit — r14 ADVICE). `false` drops those
-    // hints and every query-keyed join becomes a shuffle join on slim
-    // rows; the codebook/centroid LUTs (rn2, cross, qc2 — bounded by
-    // nlist·m·nCent) stay force-broadcast either way. The probed-pair
-    // restriction ivfPqLocalProbe uses was rejected here: with a SHARED
-    // codebook it would GROW ipr by nprobe× (queries·nprobe·m·nCent)
-    // without removing the |queries| scaling.
-    def bq(df: DataFrame): DataFrame = if (broadcastLuts) broadcast(df) else df
-    val q = queries
-      .select(col(idCol).as("query_id"), toDoubleVec(col(vecCol)).as("qv"))
-      .withColumn("qnorm", norm("qv"))
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(desc("csim"), asc("centroid_id"))
-    val probes = q.crossJoin(broadcast(cents))
-      .select(col("query_id"), col("centroid_id"),
-        (graft.functions.VectorFunctions.vec_dot(col("qv"), col("centv"))
-          / (col("qnorm") * col("centnorm"))).as("csim"))
-      .withColumn("rn", row_number().over(probeW)).filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("centroid_id"))
-    val quant = expr(s"transform($vecCol, x -> CAST(floor(x * 1000) AS BIGINT))")
-    val qq = queries.select(col(idCol).as("query_id"), quant.as("qe"))
-    val subQc = s"(size(qc) div $m)"
-    val ipr = qq.crossJoin(broadcast(rcb))
-      .withColumn("s", explode(sequence(lit(0), lit(m - 1))))
-      .select(col("query_id"), col("s"), col("cid"), pqSubIp(m).as("ipr"))
-    val rn2 = rcb.withColumn("s", explode(sequence(lit(0), lit(m - 1))))
-      .select(col("s"), col("cid"),
-        expr(s"""aggregate(transform(slice(qc, s * $subQc + 1, $subQc), x -> x * x),
-                 CAST(0 AS BIGINT), (acc, x) -> acc + x)""").as("rn2"))
-    val cross = qcents.crossJoin(broadcast(rcb))
-      .withColumn("s", explode(sequence(lit(0), lit(m - 1))))
-      .select(col("centroid_id"), col("s"), col("cid"),
-        expr(s"""aggregate(zip_with(slice(qcent, s * $subQc + 1, $subQc),
-                                    slice(qc, s * $subQc + 1, $subQc),
-                                    (a, b) -> a * b),
-                 CAST(0 AS BIGINT), (acc, x) -> acc + x)""").as("cross"))
-    val qc2 = qcents.select(col("centroid_id"),
-      expr("aggregate(transform(qcent, x -> x * x), CAST(0 AS BIGINT), (acc, x) -> acc + x)")
-        .as("cn2c"))
-    val qip = qq.crossJoin(broadcast(qcents))
-      .select(col("query_id"), col("centroid_id"),
-        expr("aggregate(zip_with(qe, qcent, (a, b) -> a * b), CAST(0 AS BIGINT), (acc, x) -> acc + x)")
-          .as("qip"))
-    val qn = qq.select(col("query_id"),
-      expr("aggregate(transform(qe, x -> x * x), CAST(0 AS BIGINT), (acc, x) -> acc + x)")
-        .as("qn2"))
-    val cand = index.join(bq(probes), Seq("centroid_id"))
-      .select(col("cand_id"), col("centroid_id"), col("query_id"),
-        col("s"), col("code"))
-    val sums = cand.alias("cand")
-      .join(bq(ipr.alias("ipr")),
-        col("cand.query_id") === col("ipr.query_id") &&
-          col("cand.s") === col("ipr.s") && col("cand.code") === col("ipr.cid"))
-      .join(broadcast(cross.alias("cr")),
-        col("cand.centroid_id") === col("cr.centroid_id") &&
-          col("cand.s") === col("cr.s") && col("cand.code") === col("cr.cid"))
-      .join(broadcast(rn2.alias("r2")),
-        col("cand.s") === col("r2.s") && col("cand.code") === col("r2.cid"))
-      .filter(col("cand.query_id") =!= col("cand.cand_id"))
-      .groupBy(col("cand.query_id").as("query_id"),
-        col("cand.cand_id").as("neighbor_id"),
-        col("cand.centroid_id").as("centroid_id"))
-      .agg(sum(col("ipr.ipr")).as("iprs"), sum(col("cr.cross")).as("crs"),
-        sum(col("r2.rn2")).as("rn2s"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_sim").desc, col("neighbor_id").asc)
-    sums.join(bq(qip), Seq("query_id", "centroid_id"))
-      .join(broadcast(qc2), Seq("centroid_id"))
-      .join(bq(qn), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        ((col("qip") + col("iprs")).cast("double") /
-          (sqrt(col("qn2").cast("double")) *
-            sqrt((col("cn2c") + lit(2) * col("crs") + col("rn2s"))
-              .cast("double")))).as("adc_sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        col("adc_sim"), col("rank"))
-  }
-
-  /** LOCAL-CODEBOOK residual IVF-PQ BUILD — one codebook PER INVERTED
-    * LIST (the FAISS "local codebooks" layout). The shared residual
-    * codebook measures its own capacity wall on the sweep: residuals
-    * of a clustered corpus form ~one mode per (cluster, list) offset,
-    * and once modes outnumber codewords the within-mode resolution is
-    * zero (clustered 1M: 244 modes vs 256 codewords → recall 0.058
-    * where 100k's 64 modes gave 0.475). Per-list codebooks divide the
-    * mode space by nlist — each list's nCent codewords cover only ITS
-    * ~clusters/nlist residual modes, restoring within-mode levels
-    * without growing the code width.
-    *
-    * Same plan family as [[ivfPqResidualBuild]]; the encode joins each
-    * residual row with ITS list's broadcast codebook array (nlist rows)
-    * instead of one global array. One honest deviation from the
-    * zero-shuffle claim: the rank-select default pays a single
-    * list-keyed exchange (the per-list row_number window); the trained
-    * path's Lloyd shuffles only the 1/sampleMod sample. `trained = true` runs the grouped
-    * per-subspace Lloyd ([[pqKmeansCodebookGrouped]], gid = list);
-    * default rank-select takes each list's nCent lowest-id residuals.
-    * Storage: nlist·nCent·dim ints — ~50 MB at a billion vectors under
-    * the √N/16 nlist discipline, still a broadcast table. Returns
-    * (index, local codebook (centroid_id, cid, qc), qcents).
-    */
-  def ivfPqLocalBuild(corpus: DataFrame, cents: DataFrame,
-                      m: Int = 4, nCent: Int = 8,
-                      trained: Boolean = false, sampleMod: Int = 16,
-                      idCol: String = "vec_id", vecCol: String = "embedding",
-                      hashSample: Boolean = false)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val quant = expr(s"transform($vecCol, x -> CAST(floor(x * 1000) AS BIGINT))")
-    val qcents = cents.select(col("centroid_id"),
-      expr("transform(centv, x -> CAST(floor(x * 1000) AS BIGINT))").as("qcent"))
-    val centsArr = cents.agg(sort_array(collect_list(
-      struct(col("centroid_id"), col("centv"), col("centnorm")))).as("cents"))
-    val assigned = corpus.select(col(idCol).as("cand_id"),
-        toDoubleVec(col(vecCol)).as("cv"), quant.as("qe0"))
-      .withColumn("cnorm", norm("cv"))
-      .crossJoin(broadcast(centsArr))
-      .select(col("cand_id"), col("qe0"),
-        graft.functions.VectorFunctions
-          .nearest_centroid(col("cv"), col("cnorm"), col("cents"))
-          .as("centroid_id"))
-    val res = assigned.join(broadcast(qcents), Seq("centroid_id"))
-      .select(col("cand_id"), col("centroid_id"),
-        expr("zip_with(qe0, qcent, (a, b) -> a - b)").as("qe"))
-    val rcb =
-      if (trained) {
-        val tcb = pqKmeansCodebookGrouped(
-          res.filter(trainSamplePred("cand_id", sampleMod, hashSample))
-            .select(col("centroid_id").as("gid"),
-              col("cand_id").as("vid"), col("qe")), m, nCent)
-          .withColumnRenamed("gid", "centroid_id")
-        // missing-list fallback (r14 ADVICE): a list whose training
-        // sample is EMPTY gets no codebook rows, and the encode's inner
-        // join on centroid_id then silently drops every vector of that
-        // list — unreachable at probe time. Each such list gets ONE
-        // rank-select codeword (its lowest-id residual): enough to keep
-        // all its vectors reachable, and capacity is degenerate only
-        // for lists the sample already proved near-empty. The trained
-        // codebook's own gid set IS the sampled-list set, so the check
-        // costs one partial-agg pass over `res` plus an anti join
-        // against the (nlist-bounded) codebook — never a second
-        // full-width window exchange.
-        val fb = res.groupBy(col("centroid_id"))
-          .agg(min(struct(col("cand_id"), col("qe"))).as("mn"))
-          .join(tcb.select(col("centroid_id")).distinct(),
-            Seq("centroid_id"), "left_anti")
-          .select(col("centroid_id"), col("mn.qe").as("qc"),
-            lit(0L).as("cid"))
-        tcb.select(col("centroid_id"), col("qc"), col("cid")).union(fb)
-      } else {
-        val w = Window.partitionBy(col("centroid_id")).orderBy(col("cand_id"))
-        res.withColumn("rn", row_number().over(w)).filter(col("rn") <= nCent)
-          .select(col("centroid_id"), col("qe").as("qc"),
-            (col("rn") - 1).cast("long").as("cid"))
-      }
-    val cbArr = rcb.groupBy(col("centroid_id"))
-      .agg(sort_array(collect_list(struct(col("cid"), col("qc")))).as("cb"))
-    val index = res.join(broadcast(cbArr), Seq("centroid_id"))
-      .select(col("cand_id"), col("centroid_id"),
-        graft.functions.VectorFunctions
-          .pq_encode(col("qe"), col("cb"), m).as("codes"))
-      .select(col("cand_id"), col("centroid_id"), posexplode(col("codes")))
-      .select(col("cand_id"), col("centroid_id"),
-        col("pos").as("s"), col("col").as("code"))
-    (index, rcb, qcents)
-  }
-
-  /** LOCAL-CODEBOOK residual IVF-PQ PROBE: identical score
-    * decomposition to [[ivfPqResidualProbe]], with every codebook LUT
-    * keyed by (centroid_id, …) and the query-side inner-product LUT
-    * built only for PROBED (query, list) pairs — queries·nprobe·m·nCent
-    * rows, so per-list codebooks do not grow the broadcast volume the
-    * way a naive queries×nlist LUT would.
-    */
-  def ivfPqLocalProbe(index: DataFrame, cents: DataFrame,
-                      qcents: DataFrame, rcb: DataFrame,
-                      queries: DataFrame, k: Int, nprobe: Int = 2,
-                      m: Int = 4, idCol: String = "vec_id",
-                      vecCol: String = "embedding",
-                      broadcastLuts: Boolean = true): DataFrame = {
-    // same escape hatch as [[ivfPqResidualProbe]]: `false` un-hints the
-    // query-proportional tables (probes, qq, ipr, qip, qn) for
-    // corpus-scale query sets; codebook/centroid LUTs stay broadcast.
-    def bq(df: DataFrame): DataFrame = if (broadcastLuts) broadcast(df) else df
-    val q = queries
-      .select(col(idCol).as("query_id"), toDoubleVec(col(vecCol)).as("qv"))
-      .withColumn("qnorm", norm("qv"))
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(desc("csim"), asc("centroid_id"))
-    val probes = q.crossJoin(broadcast(cents))
-      .select(col("query_id"), col("centroid_id"),
-        (graft.functions.VectorFunctions.vec_dot(col("qv"), col("centv"))
-          / (col("qnorm") * col("centnorm"))).as("csim"))
-      .withColumn("rn", row_number().over(probeW)).filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("centroid_id"))
-    val quant = expr(s"transform($vecCol, x -> CAST(floor(x * 1000) AS BIGINT))")
-    val qq = queries.select(col(idCol).as("query_id"), quant.as("qe"))
-    val subQc = s"(size(qc) div $m)"
-    // query×codeword LUT restricted to probed (query, list) pairs
-    val ipr = probes.join(bq(qq), Seq("query_id"))
-      .join(broadcast(rcb), Seq("centroid_id"))
-      .withColumn("s", explode(sequence(lit(0), lit(m - 1))))
-      .select(col("query_id"), col("centroid_id"), col("s"), col("cid"),
-        pqSubIp(m).as("ipr"))
-    val rn2 = rcb.withColumn("s", explode(sequence(lit(0), lit(m - 1))))
-      .select(col("centroid_id"), col("s"), col("cid"),
-        expr(s"""aggregate(transform(slice(qc, s * $subQc + 1, $subQc), x -> x * x),
-                 CAST(0 AS BIGINT), (acc, x) -> acc + x)""").as("rn2"))
-    val cross = qcents.join(broadcast(rcb), Seq("centroid_id"))
-      .withColumn("s", explode(sequence(lit(0), lit(m - 1))))
-      .select(col("centroid_id"), col("s"), col("cid"),
-        expr(s"""aggregate(zip_with(slice(qcent, s * $subQc + 1, $subQc),
-                                    slice(qc, s * $subQc + 1, $subQc),
-                                    (a, b) -> a * b),
-                 CAST(0 AS BIGINT), (acc, x) -> acc + x)""").as("cross"))
-    val qc2 = qcents.select(col("centroid_id"),
-      expr("aggregate(transform(qcent, x -> x * x), CAST(0 AS BIGINT), (acc, x) -> acc + x)")
-        .as("cn2c"))
-    val qip = qq.crossJoin(broadcast(qcents))
-      .select(col("query_id"), col("centroid_id"),
-        expr("aggregate(zip_with(qe, qcent, (a, b) -> a * b), CAST(0 AS BIGINT), (acc, x) -> acc + x)")
-          .as("qip"))
-    val qn = qq.select(col("query_id"),
-      expr("aggregate(transform(qe, x -> x * x), CAST(0 AS BIGINT), (acc, x) -> acc + x)")
-        .as("qn2"))
-    val cand = index.join(bq(probes), Seq("centroid_id"))
-      .select(col("cand_id"), col("centroid_id"), col("query_id"),
-        col("s"), col("code"))
-    val sums = cand.alias("cand")
-      .join(bq(ipr.alias("ipr")),
-        col("cand.query_id") === col("ipr.query_id") &&
-          col("cand.centroid_id") === col("ipr.centroid_id") &&
-          col("cand.s") === col("ipr.s") && col("cand.code") === col("ipr.cid"))
-      .join(broadcast(cross.alias("cr")),
-        col("cand.centroid_id") === col("cr.centroid_id") &&
-          col("cand.s") === col("cr.s") && col("cand.code") === col("cr.cid"))
-      .join(broadcast(rn2.alias("r2")),
-        col("cand.centroid_id") === col("r2.centroid_id") &&
-          col("cand.s") === col("r2.s") && col("cand.code") === col("r2.cid"))
-      .filter(col("cand.query_id") =!= col("cand.cand_id"))
-      .groupBy(col("cand.query_id").as("query_id"),
-        col("cand.cand_id").as("neighbor_id"),
-        col("cand.centroid_id").as("centroid_id"))
-      .agg(sum(col("ipr.ipr")).as("iprs"), sum(col("cr.cross")).as("crs"),
-        sum(col("r2.rn2")).as("rn2s"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_sim").desc, col("neighbor_id").asc)
-    sums.join(bq(qip), Seq("query_id", "centroid_id"))
-      .join(broadcast(qc2), Seq("centroid_id"))
-      .join(bq(qn), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        ((col("qip") + col("iprs")).cast("double") /
-          (sqrt(col("qn2").cast("double")) *
-            sqrt((col("cn2c") + lit(2) * col("crs") + col("rn2s"))
-              .cast("double")))).as("adc_sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        col("adc_sim"), col("rank"))
-  }
-
-  /** [[ivfPqLocalBuild]] + [[ivfPqLocalProbe]] composed inline — the
-    * gated-catalog shape (`q_knn_ivfpq_local`).
-    */
-  def ivfPqLocalSearch(corpus: DataFrame, queryPred: Column, k: Int = 5,
-                       nlist: Int = 8, nprobe: Int = 2,
-                       m: Int = 4, nCent: Int = 8,
-                       trained: Boolean = false, sampleMod: Int = 16,
-                       idCol: String = "vec_id",
-                       vecCol: String = "embedding",
-                       hashSample: Boolean = false): DataFrame = {
-    val cents = ivfCentroids(corpus, nlist, idCol, vecCol)
-    // NOT plan-truncated (r15): eagerly localCheckpoint-ing the built
-    // index/codebooks to shrink the probe plan was tried and REGRESSED
-    // 1.40 → 2.40 s at sf0.1 — three extra sequential jobs (each with
-    // its own planning + cold codegen) cost more than the analysis
-    // time the smaller probe plan saved. The single-action composed
-    // plan stays.
-    val (index, rcb, qcents) = ivfPqLocalBuild(corpus, cents, m, nCent,
-      trained, sampleMod, idCol, vecCol, hashSample)
-    ivfPqLocalProbe(index, cents, qcents, rcb,
-      corpus.filter(queryPred), k, nprobe, m, idCol, vecCol)
-  }
-
-  /** [[ivfPqResidualBuild]] + [[ivfPqResidualProbe]] composed inline —
-    * queries drawn from the corpus by predicate, the gated-catalog
-    * shape (`q_knn_ivfpq_res`).
-    */
-  def ivfPqResidualSearch(corpus: DataFrame, queryPred: Column, k: Int = 5,
-                          nlist: Int = 8, nprobe: Int = 2,
-                          m: Int = 4, nCent: Int = 8,
-                          trained: Boolean = false, sampleMod: Int = 16,
-                          idCol: String = "vec_id",
-                          vecCol: String = "embedding",
-                          hashSample: Boolean = false): DataFrame = {
-    val cents = ivfCentroids(corpus, nlist, idCol, vecCol)
-    val (index, rcb, qcents) = ivfPqResidualBuild(corpus, cents, m, nCent,
-      trained, sampleMod, idCol, vecCol, hashSample)
-    ivfPqResidualProbe(index, cents, qcents, rcb,
-      corpus.filter(queryPred), k, nprobe, m, idCol, vecCol)
-  }
-
-  /** IVF-PQ PROBE over a built index ([[ivfPqBuild]] output): each
-    * query ranks its `nprobe` nearest coarse centroids (broadcast,
-    * same csim-desc/id-asc rule as [[ivfProbe]]), builds a per-query
-    * integer LUT over the codebook, and scores ONLY the code rows
-    * whose list is probed — ~nprobe·N/nlist rows per query through a
-    * broadcast hash-join and a partial-aggregated (query, cand) sum.
+  /** IVF-PQ PROBE — the one probe for every codebook layout: it takes
+    * the three frames any IVF-PQ build returns ([[ivfPqBuild]],
+    * [[ivfPqResidualBuild]], [[ivfPqLocalBuild]]: index, codebook,
+    * lists). Each query ranks its `nprobe` nearest coarse centroids
+    * (broadcast, same csim-desc/id-asc rule as [[ivfProbe]]) and scores
+    * ONLY the code rows whose list is probed.
     *
     * Scoring is COSINE-ADC, not L2-ADC — the dense tier's ground truth
     * ([[bruteForceTopK]], [[ivfProbe]], the recall audits) is cosine,
     * and an L2-ranked ADC measured recall@10 ≤ 0.17 against it on the
-    * sweep fixtures (metric mismatch, not quantization error). The LUT
-    * carries two integer cells per (query, s, cid): the subspace inner
-    * product ⟨q_s, c_s⟩ and the codeword's squared sub-norm ‖c_s‖²;
-    * summed over a candidate's codes they give the exact inner product
-    * and squared norm OF THE QUANTIZED RECONSTRUCTION, so
-    *   adc_sim = Σ ip / (√qn2 · √Σ cn2)
-    * is exactly cosine(q̃, reconstruction(codes)) on the floor(x·1000)
-    * grid — integer sums, one IEEE division, bit-reproducible
-    * cross-engine. Ties rank by ascending candidate id; the query row
-    * is excluded.
+    * sweep fixtures (metric mismatch, not quantization error). The score
+    * is the exact cosine of the quantized query q̃ and the reconstruction
+    * x̂ = qcent(list) + codeword(codes), and every term decomposes into
+    * integer LUTs —
+    *   ip(q̃, x̂)  = ip(q̃, qcent)              [per (query, list)]
+    *              + Σ_s ipr[q][s][code]        [query × codebook]
+    *   ‖x̂‖²      = ‖qcent‖²                   [per list]
+    *              + 2·Σ_s crs[list][s][code]   [centroid × codebook]
+    *              + Σ_s rn2[s][code]           [codebook]
+    *   adc_sim   = ip / (√‖q̃‖² · √‖x̂‖²)
+    * — integer sums, one IEEE division: |adc_sim| ≤ 1 and
+    * bit-reproducible cross-engine. With the shared layout's zero qcent
+    * the qcent terms are exactly 0 and this is cosine(q̃, codeword(codes)).
+    * A per-list codebook (one carrying `centroid_id`) keys its ipr and
+    * rn2 LUTs by list too, and builds ipr only for PROBED (query, list)
+    * pairs (queries·nprobe·m·nCent cells, not queries·nlist·…); a global
+    * codebook builds ipr once per query — keying it by probed pair would
+    * grow it nprobe× without removing the |queries| scaling.
+    *
+    * Plan: every LUT is a nested array (lut[s][cid], one projection
+    * over the broadcast codebook array) attached by a slim join, and each
+    * candidate row scores itself with three m-lookup folds ([[adcFold]])
+    * in one codegen'd projection — per-candidate cost is m lookups,
+    * independent of dim, and candidates never explode into (s, code)
+    * rows. Top-k is a bounded heap ([[heapTopK]]), not a window: the
+    * window sorts every candidate row of a query (~nprobe·N/nlist rows
+    * through one exchange + sort); the heap keeps ≤k per partition per
+    * query, so only survivors shuffle. Same (sim desc, id asc) order;
+    * NULL sims are EXCLUDED (the documented heap-vs-window NULL
+    * divergence — [[bruteForceTopKHeap]]'s contract). The query row is
+    * excluded.
+    *
+    * Each candidate row meets its LUTs through at most three slim
+    * joins: the probed (query, list) pair's scalars (qip and ‖q̃‖², both
+    * computed beside the coarse cosine — plus the pair's ipr LUT for a
+    * per-list codebook), the query's ipr LUT for a global one, and its
+    * list's crs/rn2 LUTs.
+    *
+    * `broadcastLuts` guards the QUERY-proportional tables only (the
+    * probed pairs and ipr — O(|queries|) rows each; ipr is m·nCent
+    * cells per query, so a corpus-scale query set would collect to the
+    * driver and can blow the broadcast limit). `false` drops those
+    * hints and every query-keyed join becomes a shuffle join on slim
+    * rows; the codebook/centroid tables (nlist-bounded) stay broadcast
+    * either way.
     */
-  def ivfPqProbe(index: DataFrame, cents: DataFrame, pqCents: DataFrame,
-                 queries: DataFrame, k: Int, nprobe: Int = 2, m: Int = 4,
-                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = queries
-      .select(col(idCol).as("query_id"), toDoubleVec(col(vecCol)).as("qv"))
-      .withColumn("qnorm", norm("qv"))
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(desc("csim"), asc("centroid_id"))
-    val probes = q.crossJoin(broadcast(cents))
-      .select(col("query_id"), col("centroid_id"),
-        (graft.functions.VectorFunctions.vec_dot(col("qv"), col("centv"))
-          / (col("qnorm") * col("centnorm"))).as("csim"))
-      .withColumn("rn", row_number().over(probeW)).filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("centroid_id"))
-    val quant = expr(s"transform($vecCol, x -> CAST(floor(x * 1000) AS BIGINT))")
-    val lut = queries.select(col(idCol).as("query_id"), quant.as("qe"))
-      .crossJoin(broadcast(pqCents))
-      .withColumn("s", explode(sequence(lit(0), lit(m - 1))))
-      .select(col("query_id"), col("s"), col("cid"),
-        pqSubIp(m).as("ip"), pqSubCn2(m).as("cn2"))
-    val qn = queries.select(col(idCol).as("query_id"), quant.as("qe"))
-      .select(col("query_id"),
-        expr("aggregate(transform(qe, x -> x * x), CAST(0 AS BIGINT), (acc, x) -> acc + x)")
-          .as("qn2"))
-    val cand = index.join(broadcast(probes), Seq("centroid_id"))
-      .select(col("cand_id"), col("query_id"), col("s"), col("code"))
-    val adc = cand.alias("cand")
-      .join(broadcast(lut.alias("lut")),
-        col("cand.query_id") === col("lut.query_id") &&
-          col("cand.s") === col("lut.s") && col("cand.code") === col("lut.cid"))
-      .filter(col("cand.query_id") =!= col("cand.cand_id"))
-      .groupBy(col("cand.query_id").as("query_id"),
-        col("cand.cand_id").as("neighbor_id"))
-      .agg(sum(col("lut.ip")).as("ipsum"), sum(col("lut.cn2")).as("rn2"))
-      .join(broadcast(qn), Seq("query_id"))
+  def ivfPqProbe(index: DataFrame, lists: DataFrame, codebook: DataFrame,
+                 queries: DataFrame, k: Int, nprobe: Int = 2,
+                 m: Int = 4, idCol: String = "vec_id",
+                 vecCol: String = "embedding",
+                 broadcastLuts: Boolean = true): DataFrame = {
+    import graft.functions.VectorFunctions.vec_dot_long
+    def bq(df: DataFrame): DataFrame = if (broadcastLuts) broadcast(df) else df
+    val perList = isPerList(codebook)
+    val q = queryVectors(queries, idCol, vecCol, quantize(col(vecCol)).as("qe"))
+    val pairs = coarseProbes(q, lists, nprobe, Seq(
+        vec_dot_long(col("qe"), col("qcent")).as("qip"),
+        vec_dot_long(col("qe"), col("qe")).as("qn2")) ++
+      (if (perList) Seq(col("qe")) else Nil): _*)
+    val iprLut = nestedLut(m, "qe", "a * b").as("ipr_lut")
+    val cands =
+      if (perList)
+        index.join(bq(withCodebook(pairs, codebook).select(col("query_id"),
+          col("centroid_id"), col("qip"), col("qn2"), iprLut)), Seq("centroid_id"))
+      else
+        index.join(bq(pairs), Seq("centroid_id"))
+          .join(bq(withCodebook(q.select(col("query_id"), col("qe")), codebook)
+            .select(col("query_id"), iprLut)), Seq("query_id"))
+    val listLuts = withCodebook(lists.select(col("centroid_id"), col("qcent")), codebook)
+      .select(col("centroid_id"), nestedLut(m, "qcent", "a * b").as("crs_lut"),
+        nestedLut(m, "c.qc", "a * b").as("rn2_lut"),
+        vec_dot_long(col("qcent"), col("qcent")).as("cn2c"))
+    heapTopK(cands.join(broadcast(listLuts), Seq("centroid_id"))
+      .filter(col("query_id") =!= col("cand_id"))
+      .select(col("query_id"), col("cand_id").as("neighbor_id"),
+        adcFold("ipr_lut").as("iprs"), adcFold("crs_lut").as("crs"),
+        adcFold("rn2_lut").as("rn2s"), col("qip"), col("cn2c"), col("qn2"))
       .select(col("query_id"), col("neighbor_id"),
-        (col("ipsum").cast("double") /
-          (sqrt(col("qn2").cast("double")) * sqrt(col("rn2").cast("double"))))
-          .as("adc_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_sim").desc, col("neighbor_id").asc)
-    adc.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        col("adc_sim"), col("rank"))
+        ((col("qip") + col("iprs")).cast("double") /
+          (sqrt(col("qn2").cast("double")) *
+            sqrt((col("cn2c") + lit(2) * col("crs") + col("rn2s"))
+              .cast("double")))).as("adc_sim")), k)
   }
+
+  /** Per-query bounded-heap top-k over (query_id, neighbor_id,
+    * adc_sim) rows — (adc_sim desc, neighbor_id asc), rank = heap
+    * position, NULL sims excluded.
+    */
+  private def heapTopK(scored: DataFrame, k: Int): DataFrame =
+    scored.filter(col("adc_sim").isNotNull)
+      .groupBy(col("query_id"))
+      .agg(graft.functions.TopKStruct.topK(
+        struct(col("adc_sim"), col("neighbor_id")), k, true, false).as("top"))
+      .select(col("query_id"), posexplode(col("top")))
+      .select(col("query_id"), col("col.neighbor_id").as("neighbor_id"),
+        col("col.adc_sim").as("adc_sim"),
+        (col("pos") + 1).cast("long").as("rank"))
 
   /** Sub-quadratic embedding near-dup PAIRS — the 100 TB composition the
     * exact [[cosineNearDuplicates]] documents as its scale path:
@@ -1910,6 +1456,15 @@ object Similarity {
       .filter(col("sim") >= threshold)
   }
 
+  /** Approximate corpus-wide nearest neighbor — the sub-quadratic scale
+    * path. Candidates come from a sign-LSH equi-join: every vector hashes
+    * to one bucket; each query probes its own bucket plus all buckets at
+    * Hamming distance ≤ 1 (multi-probe recovers most of the recall a
+    * single bucket loses). Compute is Σ|bucket|·|probes| — linear in the
+    * corpus for balanced buckets — and the only join is an equi-join on
+    * the bucket id. Vectors whose probed buckets hold no other vector
+    * produce no row (standard ANN semantics).
+    */
   def approxNearestNeighbor(corpus: DataFrame,
                             idCol: String = "vec_id", vecCol: String = "embedding",
                             planes: Int = 4): DataFrame = {

@@ -28,6 +28,18 @@ object SimilarityQueries {
     */
   private val exactCap = 500
 
+  // IVF-PQ search with the shared (q_knn_ivfpq) and residual
+  // (q_knn_ivfpq_res) codebooks. Each also serves its former
+  // `_packed` name: there is one IVF-PQ probe, so the pair now runs one
+  // plan, and the alias keeps the catalog's names and oracles intact.
+  private val knnIvfpq: Q = (s, d) =>
+    Similarity.ivfPqSearch(Tables.embeddings(s, d),
+      col("vec_id") % 25 === 0, k = 5, nlist = 8, nprobe = 2,
+      m = 4, nCent = 8)
+  private val knnIvfpqRes: Q = (s, d) =>
+    Similarity.ivfPqResidualSearch(Tables.embeddings(s, d),
+      col("vec_id") % 25 === 0, k = 5, nlist = 8, nprobe = 2,
+      m = 4, nCent = 8)
 
   val queries: Map[String, Q] = Map(
 
@@ -419,37 +431,8 @@ object SimilarityQueries {
     // — raw vectors touched at build only, probe scans ~nprobe/nlist of
     // the code rows. Same query sample as q_pq_search so the two
     // catalogs price the list restriction directly.
-    "q_knn_ivfpq" -> ((s, d) =>
-      Similarity.ivfPqSearch(Tables.embeddings(s, d),
-        col("vec_id") % 25 === 0, k = 5, nlist = 8, nprobe = 2,
-        m = 4, nCent = 8)),
-
-    // PACKED IVF-PQ probe (r15): the value-identical fast path — the
-    // index keeps the m-code ARRAY per vector and each candidate
-    // scores itself with m LUT lookups in one codegen'd fold, instead
-    // of the long form's m rows through a join + hash aggregate.
-    // Same params/sample as q_knn_ivfpq, same oracle (bit-equal by
-    // construction; IvfPqPackedSpec pins it; the pqdim sweep prices
-    // the plan difference).
-    "q_knn_ivfpq_packed" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val cents = Similarity.ivfCentroids(emb, 8)
-      val (packed, cb) = Similarity.ivfPqBuildPacked(emb, cents,
-        m = 4, nCent = 8)
-      Similarity.ivfPqProbePacked(packed, cents, cb,
-        emb.filter(col("vec_id") % 25 === 0), k = 5, nprobe = 2, m = 4)
-    }),
-
-    // Packed twin of the residual (IVFADC) probe — same oracle as
-    // q_knn_ivfpq_res.
-    "q_knn_ivfpq_res_packed" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val cents = Similarity.ivfCentroids(emb, 8)
-      val (packed, rcb, qcents) = Similarity.ivfPqResidualBuildPacked(
-        emb, cents, m = 4, nCent = 8)
-      Similarity.ivfPqResidualProbePacked(packed, cents, qcents, rcb,
-        emb.filter(col("vec_id") % 25 === 0), k = 5, nprobe = 2, m = 4)
-    }),
+    "q_knn_ivfpq" -> knnIvfpq,
+    "q_knn_ivfpq_packed" -> knnIvfpq,
 
     // RESIDUAL IVF-PQ (the faithful IVFADC): codes quantize
     // x − coarse_centroid, so the codewords resolve within-list
@@ -458,10 +441,8 @@ object SimilarityQueries {
     // quantizer, query sample and k as q_knn_ivfpq — the pair prices
     // residual encoding directly. Rank-select residual codebook
     // (deterministic; the trained twin is sweep-priced + spec-pinned).
-    "q_knn_ivfpq_res" -> ((s, d) =>
-      Similarity.ivfPqResidualSearch(Tables.embeddings(s, d),
-        col("vec_id") % 25 === 0, k = 5, nlist = 8, nprobe = 2,
-        m = 4, nCent = 8)),
+    "q_knn_ivfpq_res" -> knnIvfpqRes,
+    "q_knn_ivfpq_res_packed" -> knnIvfpqRes,
 
     // PER-LIST ("local") residual codebooks — the capacity fix the
     // r14 sweep measures the need for: a SHARED residual codebook
@@ -488,9 +469,9 @@ object SimilarityQueries {
       val cents = Similarity.ivfCentroids(emb, 8)
       val cb = Similarity.pqKmeansCodebook(emb, m = 4, nCent = 8,
         sampleMod = 2)
-      val (index, cbOut) = Similarity.ivfPqBuild(emb, cents, m = 4,
+      val (index, cbOut, lists) = Similarity.ivfPqBuild(emb, cents, m = 4,
         nCent = 8, codebook = Some(cb))
-      Similarity.ivfPqProbe(index, cents, cbOut,
+      Similarity.ivfPqProbe(index, lists, cbOut,
         emb.filter(col("vec_id") % 25 === 0), k = 5, nprobe = 2, m = 4)
     }),
 
@@ -848,8 +829,8 @@ object SimilarityQueries {
   }
 
   val oracles: Map[String, String] = oraclesBase ++ Map(
-    // packed probes are value-identical to their long forms by
-    // construction (IvfPqSpec pins bit-equality), so they share oracles
+    // the `_packed` names are aliases of their base queries (one
+    // IVF-PQ probe), so they share oracles
     "q_knn_ivfpq_packed" -> oraclesBase("q_knn_ivfpq"),
     "q_knn_ivfpq_res_packed" -> oraclesBase("q_knn_ivfpq_res"))
 
@@ -1704,8 +1685,8 @@ object SimilarityQueries {
          |FROM art WHERE rn = 1 GROUP BY centroid_id""".stripMargin
     },
 
-    // Mirrors Similarity.pqSearch stage-for-stage: identical encode as
-    // q_pq_codes (long format), per-query subspace LUTs to the same 8
+    // Replays Similarity.pqSearch: identical encode as q_pq_codes (one
+    // row per subspace here), per-query subspace LUTs to the same 8
     // centroids, ADC = sum of the code-indexed LUT cells, top-5 by
     // (adc, neighbor_id), self excluded. Every subspace-split unnest in
     // this family is bounded to 4·(len//4) — the Spark side's

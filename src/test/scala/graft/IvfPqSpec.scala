@@ -17,7 +17,10 @@ import graft.operators.Similarity
   *     is among the query's probed lists;
   *   - adc_sim is a true cosine of quantized vectors (Cauchy-Schwarz
   *     on exact integers): |adc_sim| ≤ 1 always;
-  *   - determinism: two runs are bit-identical.
+  *   - determinism: two runs are bit-identical;
+  *   - the one probe, [[Similarity.ivfPqProbe]], equals a plain-Scala
+  *     cosine-ADC replay bit for bit for the shared, residual and
+  *     per-list codebook layouts.
   */
 class IvfPqSpec extends SparkSpec {
 
@@ -180,15 +183,15 @@ class IvfPqSpec extends SparkSpec {
     val cents = Similarity.ivfCentroids(c, 16).persist()
     cents.count()
     val sharedCb = Similarity.pqKmeansCodebook(c, m = 8, nCent = 64, sampleMod = 7)
-    val (sIdx, sCb) = Similarity.ivfPqBuild(c, cents, m = 8, nCent = 64,
+    val (sIdx, sCb, sLists) = Similarity.ivfPqBuild(c, cents, m = 8, nCent = 64,
       codebook = Some(sharedCb))
     val shared = recallOf(topIds(
-      Similarity.ivfPqProbe(sIdx, cents, sCb, qs, k, nprobe = 2, m = 8),
+      Similarity.ivfPqProbe(sIdx, sLists, sCb, qs, k, nprobe = 2, m = 8),
       "neighbor_id"))
-    val (rIdx, rCb, rQc) = Similarity.ivfPqResidualBuild(c, cents,
+    val (rIdx, rCb, rLists) = Similarity.ivfPqResidualBuild(c, cents,
       m = 8, nCent = 64, trained = true, sampleMod = 7)
     val res = recallOf(topIds(
-      Similarity.ivfPqResidualProbe(rIdx, cents, rQc, rCb, qs, k,
+      Similarity.ivfPqProbe(rIdx, rLists, rCb, qs, k,
         nprobe = 2, m = 8), "neighbor_id"))
     cents.unpersist()
     info(s"shared-codebook recall=$shared residual recall=$res")
@@ -248,15 +251,15 @@ class IvfPqSpec extends SparkSpec {
     }
     val cents = Similarity.ivfCentroids(c, 24).persist()
     cents.count()
-    val (rIdx, rCb, rQc) = Similarity.ivfPqResidualBuild(c, cents,
+    val (rIdx, rCb, rLists) = Similarity.ivfPqResidualBuild(c, cents,
       m = 4, nCent = 16, trained = true, sampleMod = 3, hashSample = true)
     val res = recallOf(topIds(
-      Similarity.ivfPqResidualProbe(rIdx, cents, rQc, rCb, qs, k,
+      Similarity.ivfPqProbe(rIdx, rLists, rCb, qs, k,
         nprobe = 2, m = 4), "neighbor_id"))
-    val (lIdx, lCb, lQc) = Similarity.ivfPqLocalBuild(c, cents,
+    val (lIdx, lCb, lLists) = Similarity.ivfPqLocalBuild(c, cents,
       m = 4, nCent = 16, trained = true, sampleMod = 3, hashSample = true)
     val loc = recallOf(topIds(
-      Similarity.ivfPqLocalProbe(lIdx, cents, lQc, lCb, qs, k,
+      Similarity.ivfPqProbe(lIdx, lLists, lCb, qs, k,
         nprobe = 2, m = 4), "neighbor_id"))
     cents.unpersist()
     info(s"shared-residual recall=$res local-codebook recall=$loc")
@@ -312,74 +315,100 @@ class IvfPqSpec extends SparkSpec {
     val cents = Similarity.ivfCentroids(corpus, 6)
     val emptyCb = Similarity.pqKmeansCodebook(corpus, m = 4, nCent = 8,
       sampleMod = 1).filter(lit(false))
-    val (gotIdx, _) = Similarity.ivfPqBuild(corpus, cents, m = 4, nCent = 8,
+    val (gotIdx, _, _) = Similarity.ivfPqBuild(corpus, cents, m = 4, nCent = 8,
       codebook = Some(emptyCb))
-    val (wantIdx, _) = Similarity.ivfPqBuild(corpus, cents, m = 4, nCent = 8)
+    val (wantIdx, _, _) = Similarity.ivfPqBuild(corpus, cents, m = 4, nCent = 8)
     val g = gotIdx.collect().map(_.toSeq).toSet
     val w = wantIdx.collect().map(_.toSeq).toSet
     assert(g == w && w.nonEmpty)
   }
 
-  test("residual probe: broadcastLuts=false (shuffle-join escape hatch) is value-identical") {
+  test("ivfPqBuild: a supplied codebook's cids need not be 0-based or contiguous") {
+    // the probe's LUTs index codewords by position in cid order, so
+    // gapped cids score the same as the default codebook they relabel
     val cents = Similarity.ivfCentroids(corpus, 6)
-    val (index, rcb, qcents) = Similarity.ivfPqResidualBuild(corpus, cents,
-      m = 4, nCent = 8)
+    val (idx, cb, lists) = Similarity.ivfPqBuild(corpus, cents, m = 4, nCent = 8)
+    val gapped = cb.select(col("qc"), (col("cid") * 3 + 7).as("cid"))
+    val (gIdx, gCb, gLists) = Similarity.ivfPqBuild(corpus, cents, m = 4,
+      nCent = 8, codebook = Some(gapped))
     val q = corpus.filter(queryPred)
-    val hinted = rows(Similarity.ivfPqResidualProbe(index, cents, qcents,
-      rcb, q, k = 5, nprobe = 2, m = 4))
-    val shuffled = rows(Similarity.ivfPqResidualProbe(index, cents, qcents,
-      rcb, q, k = 5, nprobe = 2, m = 4, broadcastLuts = false))
-    assert(hinted == shuffled && hinted.nonEmpty)
+    val want = rows(Similarity.ivfPqProbe(idx, lists, cb, q, k = 5))
+    assert(want.nonEmpty &&
+      rows(Similarity.ivfPqProbe(gIdx, gLists, gCb, q, k = 5)) == want)
   }
 
-  test("PACKED probes are bit-identical to the long-form probes (shared + residual)") {
-    val cents = Similarity.ivfCentroids(corpus, 6)
-    val q = corpus.filter(queryPred)
-    // shared codebook
-    val (longIdx, cb) = Similarity.ivfPqBuild(corpus, cents, m = 4, nCent = 8)
-    val (packedIdx, cbP) = Similarity.ivfPqBuildPacked(corpus, cents,
-      m = 4, nCent = 8)
-    val longRows = rows(Similarity.ivfPqProbe(longIdx, cents, cb, q,
-      k = 5, nprobe = 2, m = 4))
-    val packedRows = rows(Similarity.ivfPqProbePacked(packedIdx, cents, cbP,
-      q, k = 5, nprobe = 2, m = 4))
-    assert(longRows == packedRows && longRows.nonEmpty)
-    // residual (IVFADC) — rank-select and trained codebooks
-    for (trained <- Seq(false, true)) {
-      val (li, rcb, qc) = Similarity.ivfPqResidualBuild(corpus, cents,
-        m = 4, nCent = 8, trained = trained, sampleMod = 4)
-      val (pi, rcbP, qcP) = Similarity.ivfPqResidualBuildPacked(corpus,
-        cents, m = 4, nCent = 8, trained = trained, sampleMod = 4)
-      val lr = rows(Similarity.ivfPqResidualProbe(li, cents, qc, rcb, q,
-        k = 5, nprobe = 2, m = 4))
-      val pr = rows(Similarity.ivfPqResidualProbePacked(pi, cents, qcP,
-        rcbP, q, k = 5, nprobe = 2, m = 4))
-      assert(lr == pr && lr.nonEmpty, s"trained=$trained diverged")
+  test("ivfPqProbe == a plain-Scala cosine-ADC replay, all layouts") {
+    // the score recomputed from the collected index, codebook and
+    // quantized centroids in plain Scala: reconstruct x̂ = qcent(list) +
+    // codeword(codes) per subspace, Long sums, one double division,
+    // ranked (sim desc, id asc). The probe's LUT decomposition must give
+    // exactly this, bit for bit, whatever layout the build returned.
+    val (m, k, nprobe) = (4, 5, 2)
+    val small = ScaleSweep.embCorpus(spark, 60, dim)
+    val pred = col("vec_id") % 10 === 0
+    val qs = small.filter(pred)
+    val cents = Similarity.ivfCentroids(small, 4)
+    val qe = qs.select(col("vec_id").cast("long"),
+        expr("transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT))"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toVector).toMap
+    // each query's candidates: the other vectors of its probed lists
+    // (ivfProbe applies the same coarse-probe rule to the same lists)
+    val cands = Similarity.ivfProbe(Similarity.ivfAssign(small, cents), cents,
+        qs, k = 1000, nprobe = nprobe)
+      .select(col("query_id").cast("long"), col("cand_id").cast("long"))
+      .collect().groupBy(_.getLong(0))
+      .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSeq }
+    def replay(index: org.apache.spark.sql.DataFrame,
+               cb: org.apache.spark.sql.DataFrame,
+               lists: org.apache.spark.sql.DataFrame) = {
+      val perList = cb.columns.contains("centroid_id")
+      val codes = index.select(col("cand_id").cast("long"),
+          col("centroid_id").cast("long"), col("codes")).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getSeq[Long](2))).toMap
+      val words = cb.select(
+          (if (perList) col("centroid_id") else lit(-1L)).cast("long"),
+          col("cid").cast("long"), col("qc")).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getSeq[Long](2)).toMap
+      val qcent = lists.select(col("centroid_id").cast("long"), col("qcent"))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+      qe.toSeq.flatMap { case (q, qv) =>
+        val sub = qv.length / m
+        val qn2 = qv.map(x => x * x).sum
+        cands.getOrElse(q, Seq.empty).map { c =>
+          val (list, cs) = codes(c)
+          val xhat = qv.indices.map(i =>
+            qcent(list)(i) + words((if (perList) list else -1L, cs(i / sub)))(i))
+          val ip = qv.indices.map(i => qv(i) * xhat(i)).sum
+          val n2 = xhat.map(x => x * x).sum
+          (q, c, ip.toDouble / (math.sqrt(qn2.toDouble) * math.sqrt(n2.toDouble)))
+        }.sortBy { case (_, c, sim) => (-sim, c) }(
+          Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
+          .take(k).zipWithIndex
+          .map { case ((q, c, sim), i) => (q, c, sim, i + 1L) }
+      }.toSet
     }
-    // packed + un-hinted LUTs (shuffle-join escape hatch)
-    val shuffled = rows(Similarity.ivfPqProbePacked(packedIdx, cents, cbP,
-      q, k = 5, nprobe = 2, m = 4, broadcastLuts = false))
-    assert(shuffled == packedRows)
-  }
-
-  test("packCodes inverts the packed/long layouts") {
-    val cents = Similarity.ivfCentroids(corpus, 6)
-    val (longIdx, _) = Similarity.ivfPqBuild(corpus, cents, m = 4, nCent = 8)
-    val (packedIdx, _) = Similarity.ivfPqBuildPacked(corpus, cents,
-      m = 4, nCent = 8)
-    val repacked = Similarity.packCodes(longIdx)
-      .collect().map(_.toSeq).toSet
-    assert(repacked == packedIdx.collect().map(_.toSeq).toSet &&
-      repacked.nonEmpty)
+    val layouts = Seq(
+      "shared" -> Similarity.ivfPqBuild(small, cents, m = m, nCent = 8),
+      "residual" -> Similarity.ivfPqResidualBuild(small, cents, m = m, nCent = 8),
+      "per-list" -> Similarity.ivfPqLocalBuild(small, cents, m = m, nCent = 8))
+    for ((name, (index, cb, lists)) <- layouts) {
+      val want = replay(index, cb, lists)
+      assert(want.size == qe.size * k, s"$name: replay ranked too few")
+      for (bl <- Seq(true, false)) {
+        val got = rows(Similarity.ivfPqProbe(index, lists, cb, qs, k,
+          nprobe = nprobe, m = m, broadcastLuts = bl))
+        assert(got == want, s"$name layout, broadcastLuts=$bl diverged from the replay")
+      }
+    }
   }
 
   test("probe over a trained codebook keeps the cosine contract") {
     val cents = Similarity.ivfCentroids(clustered, 4)
     val cb = Similarity.pqKmeansCodebook(clustered, m = 4, nCent = 8,
       sampleMod = 1)
-    val (index, cbOut) = Similarity.ivfPqBuild(clustered, cents,
+    val (index, cbOut, lists) = Similarity.ivfPqBuild(clustered, cents,
       m = 4, nCent = 8, codebook = Some(cb))
-    val got = rows(Similarity.ivfPqProbe(index, cents, cbOut,
+    val got = rows(Similarity.ivfPqProbe(index, lists, cbOut,
       clustered.filter(col("vec_id") % 40 === 0), k = 5, nprobe = 2, m = 4))
     assert(got.nonEmpty)
     got.foreach { case (_, _, sim, _) =>

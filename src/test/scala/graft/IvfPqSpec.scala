@@ -337,41 +337,51 @@ class IvfPqSpec extends SparkSpec {
       rows(Similarity.ivfPqProbe(gIdx, gLists, gCb, q, k = 5)) == want)
   }
 
-  test("ivfPqProbe == a plain-Scala cosine-ADC replay, all layouts") {
-    // the score recomputed from the collected index, codebook and
-    // quantized centroids in plain Scala: reconstruct x̂ = qcent(list) +
-    // codeword(codes) per subspace, Long sums, one double division,
-    // ranked (sim desc, id asc). The probe's LUT decomposition must give
-    // exactly this, bit for bit, whatever layout the build returned.
-    val (m, k, nprobe) = (4, 5, 2)
-    val small = ScaleSweep.embCorpus(spark, 60, dim)
-    val pred = col("vec_id") % 10 === 0
-    val qs = small.filter(pred)
-    val cents = Similarity.ivfCentroids(small, 4)
+  /** The score recomputed from the collected index, codebook and
+    * quantized centroids in plain Scala: reconstruct x̂ = qcent(list) +
+    * codeword(codes) per subspace, Long sums, one double division,
+    * ranked (sim desc, id asc). The probe's LUT decomposition must give
+    * exactly this, bit for bit, whatever layout the build returned.
+    * With `longForm` the codes are read through the long
+    * (cand_id, s, code) relation — one row per subspace — instead of
+    * the packed array. */
+  private def adcReplay(data: org.apache.spark.sql.DataFrame,
+                        qs: org.apache.spark.sql.DataFrame,
+                        cents: org.apache.spark.sql.DataFrame,
+                        k: Int, nprobe: Int, m: Int) = {
     val qe = qs.select(col("vec_id").cast("long"),
         expr("transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT))"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toVector).toMap
     // each query's candidates: the other vectors of its probed lists
     // (ivfProbe applies the same coarse-probe rule to the same lists)
-    val cands = Similarity.ivfProbe(Similarity.ivfAssign(small, cents), cents,
+    val cands = Similarity.ivfProbe(Similarity.ivfAssign(data, cents), cents,
         qs, k = 1000, nprobe = nprobe)
       .select(col("query_id").cast("long"), col("cand_id").cast("long"))
       .collect().groupBy(_.getLong(0))
       .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSeq }
-    def replay(index: org.apache.spark.sql.DataFrame,
-               cb: org.apache.spark.sql.DataFrame,
-               lists: org.apache.spark.sql.DataFrame) = {
+    (index: org.apache.spark.sql.DataFrame,
+     cb: org.apache.spark.sql.DataFrame,
+     lists: org.apache.spark.sql.DataFrame,
+     longForm: Boolean) => {
       val perList = cb.columns.contains("centroid_id")
-      val codes = index.select(col("cand_id").cast("long"),
-          col("centroid_id").cast("long"), col("codes")).collect()
-        .map(r => r.getLong(0) -> (r.getLong(1), r.getSeq[Long](2))).toMap
+      val codes =
+        if (longForm)
+          index.select(col("cand_id").cast("long"),
+              col("centroid_id").cast("long"), posexplode(col("codes")))
+            .collect().groupBy(r => (r.getLong(0), r.getLong(1)))
+            .map { case ((c, list), rs) =>
+              c -> (list, rs.sortBy(_.getInt(2)).map(_.getLong(3)).toSeq) }
+        else
+          index.select(col("cand_id").cast("long"),
+              col("centroid_id").cast("long"), col("codes")).collect()
+            .map(r => r.getLong(0) -> (r.getLong(1), r.getSeq[Long](2))).toMap
       val words = cb.select(
           (if (perList) col("centroid_id") else lit(-1L)).cast("long"),
           col("cid").cast("long"), col("qc")).collect()
         .map(r => (r.getLong(0), r.getLong(1)) -> r.getSeq[Long](2)).toMap
       val qcent = lists.select(col("centroid_id").cast("long"), col("qcent"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-      qe.toSeq.flatMap { case (q, qv) =>
+      val want = qe.toSeq.flatMap { case (q, qv) =>
         val sub = qv.length / m
         val qn2 = qv.map(x => x * x).sum
         cands.getOrElse(q, Seq.empty).map { c =>
@@ -386,14 +396,56 @@ class IvfPqSpec extends SparkSpec {
           .take(k).zipWithIndex
           .map { case ((q, c, sim), i) => (q, c, sim, i + 1L) }
       }.toSet
+      assert(want.size == qe.size * k, "replay ranked too few")
+      want
     }
+  }
+
+  test("residual probe: broadcastLuts=false (shuffle-join escape hatch) is value-identical") {
+    val cents = Similarity.ivfCentroids(corpus, 6)
+    val (index, rcb, lists) = Similarity.ivfPqResidualBuild(corpus, cents,
+      m = 4, nCent = 8)
+    val q = corpus.filter(queryPred)
+    val hinted = rows(Similarity.ivfPqProbe(index, lists, rcb, q,
+      k = 5, nprobe = 2, m = 4))
+    val shuffled = rows(Similarity.ivfPqProbe(index, lists, rcb, q,
+      k = 5, nprobe = 2, m = 4, broadcastLuts = false))
+    assert(hinted == shuffled && hinted.nonEmpty)
+  }
+
+  test("PACKED probes are bit-identical to the long-form probes (shared + residual)") {
+    // the probe reads the packed codes array; the reference scores the
+    // same index read back as the long (cand_id, s, code) relation
+    val cents = Similarity.ivfCentroids(corpus, 6)
+    val q = corpus.filter(queryPred)
+    val replay = adcReplay(corpus, q, cents, k = 5, nprobe = 2, m = 4)
+    // shared codebook, with and without the LUT broadcast hint
+    val (idx, cb, lists) = Similarity.ivfPqBuild(corpus, cents, m = 4, nCent = 8)
+    val want = replay(idx, cb, lists, true)
+    for (bl <- Seq(true, false))
+      assert(rows(Similarity.ivfPqProbe(idx, lists, cb, q, k = 5, nprobe = 2,
+        m = 4, broadcastLuts = bl)) == want, s"shared, broadcastLuts=$bl diverged")
+    // residual (IVFADC) — rank-select and trained codebooks
+    for (trained <- Seq(false, true)) {
+      val (ri, rcb, rl) = Similarity.ivfPqResidualBuild(corpus, cents,
+        m = 4, nCent = 8, trained = trained, sampleMod = 4)
+      assert(rows(Similarity.ivfPqProbe(ri, rl, rcb, q, k = 5, nprobe = 2,
+        m = 4)) == replay(ri, rcb, rl, true), s"residual trained=$trained diverged")
+    }
+  }
+
+  test("ivfPqProbe == a plain-Scala cosine-ADC replay, all layouts") {
+    val (m, k, nprobe) = (4, 5, 2)
+    val small = ScaleSweep.embCorpus(spark, 60, dim)
+    val qs = small.filter(col("vec_id") % 10 === 0)
+    val cents = Similarity.ivfCentroids(small, 4)
+    val replay = adcReplay(small, qs, cents, k, nprobe, m)
     val layouts = Seq(
       "shared" -> Similarity.ivfPqBuild(small, cents, m = m, nCent = 8),
       "residual" -> Similarity.ivfPqResidualBuild(small, cents, m = m, nCent = 8),
       "per-list" -> Similarity.ivfPqLocalBuild(small, cents, m = m, nCent = 8))
     for ((name, (index, cb, lists)) <- layouts) {
-      val want = replay(index, cb, lists)
-      assert(want.size == qe.size * k, s"$name: replay ranked too few")
+      val want = replay(index, cb, lists, false)
       for (bl <- Seq(true, false)) {
         val got = rows(Similarity.ivfPqProbe(index, lists, cb, qs, k,
           nprobe = nprobe, m = m, broadcastLuts = bl))

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import graft.core.StageMetrics
 
 /** Benchmark main (driver contract): runs every registered query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   * Methodology: one UNTIMED full-catalog warm-up pass (r14 —
   * published as pass 0 in pass_detail, excluded from all medians; the
   * r13 driver's timed passes ran 250/197/153 s on bit-equal
-  * invariants, pure JIT/cache ramp), then every query runs
+  * invariants, pure JIT/cache ramp; a dev-loop run repeats it until it
+  * settles, see main), then every query runs
   * SPARK_GRAFT_BENCH_N times (default 3) and the reported number is
   * the per-query ROBUST median (r15): passes are admitted by the same
   * cpu_ms-cluster rule the stream headline uses, computed over the
@@ -59,8 +60,8 @@ object Bench {
     // delta brackets the timed window with listener-bus drains so a
     // prior query's late stage events can't be attributed here; both
     // drains run OUTSIDE the wall clock.
-    def materialize(name: String, acct: Option[StageAccounting]): QM = {
-      val cpu0 = acct.map { a => drainListenerBus(spark); a.totals.cpuMs }
+    def materialize(name: String, acct: Option[StageMetrics]): QM = {
+      val cpu0 = acct.map { a => StageMetrics.drain(spark); a.totals().cpuMs }
       val t0 = System.nanoTime()
       val elapsed =
         try {
@@ -71,7 +72,7 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           -1.0
         }
-      val cpu1 = acct.map { a => drainListenerBus(spark); a.totals.cpuMs }
+      val cpu1 = acct.map { a => StageMetrics.drain(spark); a.totals().cpuMs }
       // release checkpoint stragglers PER QUERY, not per pass: a
       // CC/localCheckpoint-family query's final-round blocks stay
       // resident after its materialize (unrecomputable by design) and
@@ -103,11 +104,24 @@ object Bench {
     // of the TIMED passes a warm-capability number. Its wall is
     // published in pass_detail (pass 0, "warmup":true) so the ramp
     // stays visible in the artifact; it feeds no median.
+    // A dev-loop run (query names given) times a few queries whose
+    // first warm pass leaves them well short of their plateau (seen:
+    // q_knn_ivfpq's timed passes falling 1.19 → 0.62 s over 7 passes),
+    // so it repeats the warm-up pass until one is less than 3 % faster
+    // than the one before (the graftbench catalog_mix rule), at most 8
+    // passes; each pass is published, in order, as its own pass-0 entry.
     // SPARK_GRAFT_BENCH_WARMUP=0 skips it (dev loop / budget fallback).
     if (sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1").toInt > 0) {
-      val t0 = System.nanoTime()
-      names.foreach(n => materialize(n, None))
-      passDetails += s"""{"pass":0,"warmup":true,"wall_sec":${round2((System.nanoTime() - t0) / 1e9)}}"""
+      val maxWarm = if (args.nonEmpty) 8 else 1
+      val walls = scala.collection.mutable.ArrayBuffer.empty[Double]
+      while (walls.size < maxWarm &&
+          (walls.size < 2 || walls.last < 0.97 * walls(walls.size - 2))) {
+        val t0 = System.nanoTime()
+        names.foreach(n => materialize(n, None))
+        walls += (System.nanoTime() - t0) / 1e9
+      }
+      walls.foreach(w =>
+        passDetails += s"""{"pass":0,"warmup":true,"wall_sec":${round2(w)}}""")
       System.gc()
     }
     val passes = (1 to n).map { passNo =>
@@ -115,18 +129,12 @@ object Bench {
       // rows/MB, shuffle MB, tasks) must agree across passes — they are
       // functions of the plans, not the machine — so a pass whose wall
       // diverges with identical invariants is named as contention by
-      // the artifact itself (see RunTotals)
-      val acct = new StageAccounting
-      spark.sparkContext.addSparkListener(acct)
+      // the artifact itself (see StageMetrics.RunTotals)
       val t0 = System.nanoTime()
-      val pass =
-        try names.map(n => materialize(n, Some(acct)))
-        finally {
-          drainListenerBus(spark)
-          spark.sparkContext.removeSparkListener(acct)
-        }
+      val (pass, acct) = StageMetrics.during(spark)(a =>
+        names.map(n => materialize(n, Some(a))))
       val wall = (System.nanoTime() - t0) / 1e9
-      val t = acct.totals
+      val t = acct.totals()
       val rowsPerTaskMs =
         if (t.taskMs > 0) round2(t.inputRows.toDouble / t.taskMs) else -1.0
       // CPU-normalized twin (r12 verdict #1): task WALL time inflates
@@ -155,60 +163,6 @@ object Bench {
       // across queries unless collection actually runs between passes
       System.gc()
       pass
-    }
-    def median(xs: Seq[Double]): Double = {
-      val ok = xs.filter(_ >= 0).sorted
-      if (ok.isEmpty) -1.0 else ok(ok.size / 2)
-    }
-    // ROBUST per-query value (r14 verdict #1): the r14 driver artifact
-    // manufactured an 18× phantom regression (q_embedding_clusters
-    // 25.1 s median vs 2.07 s judge-isolated) because the per-query
-    // median-of-3 had no exclusion rule and no per-pass evidence. Each
-    // query's passes now go through the SAME cpu_ms-cluster rule the
-    // stream headline uses: sort its passes by the query's own cpu_ms
-    // delta ascending, admit each next pass while its cpu_ms ≤
-    // max(2× cluster median, median + 250 ms) — cpu_ms is the
-    // plan-work proxy (it cannot legitimately double on identical
-    // invariants; the measured contention band is ±30%), and the
-    // 250 ms absolute slack keeps sub-second queries from tripping the
-    // ratio test on JIT/GC-attribution jitter where 2× is tens of ms.
-    // The reported value is the median WALL over admitted passes;
-    // excluded (query, pass) pairs are LISTED in the artifact with
-    // their wall + cpu_ms, never silently dropped. Queries whose
-    // cpu_ms deltas are unavailable (listener breakage) fall back to
-    // the plain median — visible as cpu_ms -1 in query_pass_detail.
-    // Stage 2 exists because the two contention modes leave DIFFERENT
-    // fingerprints (r13 controlled experiment + the r14 driver
-    // artifact): memory-system contention inflates on-CPU cycles
-    // themselves (the two r14 stream outliers burned 4-9× cpu_ms —
-    // stage 1 catches those), while pure core starvation stretches
-    // wall with near-calm cpu_ms (the r14 18× phantom's pass-level cpu
-    // was only 1.67× — a cpu rule alone admits it). A pass whose
-    // cpu_ms sits in the calm cluster but whose wall is > 2× the
-    // cluster's minimum did the SAME plan work and spent the excess
-    // descheduled — contention by definition, never a plan change.
-    // The 100 ms absolute slack keeps 30 ms queries from tripping on
-    // scheduler noise.
-    def robustQuery(ms: Seq[QM]): (Double, Seq[Int]) = {
-      val valid = ms.zipWithIndex.filter(_._1.wall >= 0)
-      val withCpu = valid.filter(_._1.cpuMs >= 0)
-      if (withCpu.size < 2) (median(valid.map(_._1.wall)), Nil)
-      else {
-        val sorted = withCpu.sortBy(_._1.cpuMs)
-        val cpuOk = sorted.foldLeft(Vector.empty[(QM, Int)]) { (acc, p) =>
-          if (acc.isEmpty) acc :+ p
-          else {
-            val med = acc.map(_._1.cpuMs).apply((acc.size - 1) / 2)
-            if (p._1.cpuMs <= math.max(2 * med, med + 250)) acc :+ p else acc
-          }
-        }
-        val wmin = cpuOk.map(_._1.wall).min
-        val admitted =
-          cpuOk.filter(_._1.wall <= math.max(2 * wmin, wmin + 0.1))
-        val admitIdx = admitted.map(_._2).toSet
-        (median(admitted.map(_._1.wall)),
-          withCpu.map(_._2).filterNot(admitIdx))
-      }
     }
     val perQuery = names.zipWithIndex.map { case (q, i) =>
       val ms = passes.map(_(i))
@@ -247,84 +201,47 @@ object Bench {
     val streamRuns =
       if (args.nonEmpty && !sys.env.contains("SPARK_GRAFT_STREAM_ROWS")) Seq.empty[StreamRun]
       else streamThroughput(spark)
-    // run-ORDERED list published (a cold-first-run / warm-cache trend must
-    // stay distinguishable from random spread); sorted copy only feeds the
-    // median/spread math. Even-run-count tie-break picks the LOWER rps —
-    // for a throughput metric the conservative pick is the slower run
-    // (the per-query seconds median above correctly picks the larger).
-    val ordered = streamRuns.map(_.rps).filter(_ >= 0)
-    val okRuns = ordered.sorted
-    val streamRps = if (okRuns.isEmpty) -1L else okRuns((okRuns.size - 1) / 2)
-    // spread = (max-min)/median in percent — the headline's own error bar,
-    // so a round-over-round delta can be read against within-round noise
-    val streamSpreadPct =
-      if (okRuns.isEmpty || streamRps == 0) -1L
-      else (okRuns.last - okRuns.head) * 100 / streamRps
-    val streamJson = ordered.mkString("[", ",", "]")
+    // run-ORDERED lists published (a cold-first-run / warm-cache trend
+    // must stay distinguishable from random spread); each headline is
+    // the median of its list with (max-min)/median in percent beside it
+    // — the headline's own error bar, so a round-over-round delta can
+    // be read against within-round noise.
+    val rpsRuns = streamRuns.map(_.rps).filter(_ >= 0)
+    val (streamRps, streamSpreadPct) = medianSpread(rpsRuns.map(_.toDouble))
     // contention-normalized twin of the headline: dataset rows per task
     // run-time ms. Wall clock counts every second the 32 threads spent
     // descheduled by a noisy neighbor; task run time counts only time
     // on-CPU-or-blocked inside tasks, so its run-to-run spread is the
     // residual that ISN'T explained by scheduler starvation — the
     // artifact's own contention discriminator (r11 verdict item 1)
-    val normOrdered = streamRuns.map(_.rowsPerTaskMs).filter(_ >= 0)
-    val normSorted = normOrdered.sorted
-    val streamNorm =
-      if (normSorted.isEmpty) -1.0 else normSorted((normSorted.size - 1) / 2)
-    val streamNormSpreadPct =
-      if (normSorted.isEmpty || streamNorm <= 0) -1L
-      else math.round((normSorted.last - normSorted.head) * 100 / streamNorm)
-    val streamNormJson = normOrdered.mkString("[", ",", "]")
+    val normRuns = streamRuns.map(_.rowsPerTaskMs).filter(_ >= 0)
+    val (streamNorm, streamNormSpreadPct) = medianSpread(normRuns)
     // CPU-normalized headline (r12 verdict #1): rows_per_task_ms still
     // spread 184% on the contended driver box because task WALL time
     // itself inflates when 32 task threads share fewer real CPUs.
     // executorCpuTime does not (descheduled time accrues no CPU ns), so
     // dataset rows per CPU-second is the environment-independent number.
-    val cpuOrdered = streamRuns.map(_.rowsPerCpuSec).filter(_ >= 0)
-    val cpuSorted = cpuOrdered.sorted
-    val streamCpuNorm =
-      if (cpuSorted.isEmpty) -1L else cpuSorted((cpuSorted.size - 1) / 2)
-    val streamCpuSpreadPct =
-      if (cpuSorted.isEmpty || streamCpuNorm <= 0) -1L
-      else (cpuSorted.last - cpuSorted.head) * 100 / streamCpuNorm
-    val streamCpuJson = cpuOrdered.mkString("[", ",", "]")
+    val cpuRuns = streamRuns.map(_.rowsPerCpuSec).filter(_ >= 0)
+    val (streamCpuNorm, streamCpuSpreadPct) =
+      medianSpread(cpuRuns.map(_.toDouble))
     // ROBUST stream headline (r13 verdict #1): the r13 driver artifact
     // had 3 of 5 runs agreeing at 29-35k rows/CPU-sec while 2 burned
     // 4-9× the CPU on bit-equal plans — memory-system contention
     // inflates on-CPU cycles beyond the ±30% band the 24-spinner
     // experiment measured, so no per-task counter can normalize an
     // outlier run away. Instead the headline is computed over the
-    // largest mutually-consistent run CLUSTER, grown by rule: sort
-    // successful runs by cpu_ms ascending and admit each next run while
-    // its cpu_ms ≤ 2× the current cluster median (cpu_ms is the
-    // plan-work proxy — it cannot legitimately double on identical
-    // invariants; the measured contention band is ±30%). Excluded runs
-    // are LISTED in the artifact (run id + cpu_ms + rps), never
-    // silently dropped, and the rule itself rides the JSON.
-    val consistent = streamRuns.filter(r => r.rps >= 0 && r.cpuMs > 0)
-      .sortBy(_.cpuMs)
-      .foldLeft(Vector.empty[StreamRun]) { (acc, r) =>
-        if (acc.isEmpty) acc :+ r
-        else {
-          val med = acc.map(_.cpuMs).apply((acc.size - 1) / 2) // acc is cpu-ascending
-          if (r.cpuMs <= 2 * med) acc :+ r else acc
-        }
-      }
-    val excluded = streamRuns.filter(r => r.rps >= 0 && r.cpuMs > 0 &&
-      !consistent.exists(_.run == r.run))
-    def robustMedian(xs: Seq[Long]): Long = {
-      val s = xs.sorted
-      if (s.isEmpty) -1L else s((s.size - 1) / 2)
-    }
-    def robustSpread(xs: Seq[Long]): Long = {
-      val s = xs.sorted
-      val m = robustMedian(s)
-      if (s.isEmpty || m <= 0) -1L else (s.last - s.head) * 100 / m
-    }
-    val robustRps = robustMedian(consistent.map(_.rps))
-    val robustRpsSpread = robustSpread(consistent.map(_.rps))
-    val robustCpu = robustMedian(consistent.map(_.rowsPerCpuSec))
-    val robustCpuSpread = robustSpread(consistent.map(_.rowsPerCpuSec))
+    // cpuCluster of the successful runs with no absolute slack (whole
+    // runs are seconds of CPU). Excluded runs are LISTED in the artifact
+    // (run id + cpu_ms + rps), never silently dropped, and the rule
+    // itself rides the JSON.
+    val measured = streamRuns.filter(r => r.rps >= 0 && r.cpuMs > 0)
+    val admitted = cpuCluster(measured.map(_.cpuMs), slackMs = 0).toSet
+    val consistent = measured.indices.filter(admitted).map(measured)
+    val excluded = measured.indices.filterNot(admitted).map(measured)
+    val (robustRps, robustRpsSpread) =
+      medianSpread(consistent.map(_.rps.toDouble))
+    val (robustCpu, robustCpuSpread) =
+      medianSpread(consistent.map(_.rowsPerCpuSec.toDouble))
     val excludedJson = excluded.map(r =>
         s"""{"run":${r.run},"cpu_ms":${r.cpuMs},"rps":${r.rps},"rows_per_cpu_sec":${r.rowsPerCpuSec}}""")
       .mkString("[", ",", "]")
@@ -333,7 +250,7 @@ object Bench {
     val streamDetail = streamRuns.map(_.detailJson).mkString("[", ",", "]")
     val passJson = passDetails.mkString("[", ",", "]")
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","n":$n,"queries":$qs,"total_naive":${round2(totalNaive)},"queries_naive_median":$qsNaive,"queries_min":$qsMin,"query_pass_detail":$qPassDetail,"query_excluded":$qExcludedJson,"query_exclusion_rule":"$qExclusionRule","pass_detail":$passJson,"stream_rows_per_sec":$streamRps,"stream_rps_runs":$streamJson,"stream_rps_spread_pct":$streamSpreadPct,"stream_rows_per_task_ms":$streamNorm,"stream_rows_per_task_ms_runs":$streamNormJson,"stream_norm_spread_pct":$streamNormSpreadPct,"stream_rows_per_cpu_sec":$streamCpuNorm,"stream_rows_per_cpu_sec_runs":$streamCpuJson,"stream_cpu_spread_pct":$streamCpuSpreadPct,"stream_rps_robust":$robustRps,"stream_robust_rps_spread_pct":$robustRpsSpread,"stream_rows_per_cpu_sec_robust":$robustCpu,"stream_robust_cpu_spread_pct":$robustCpuSpread,"stream_excluded_runs":$excludedJson,"stream_exclusion_rule":"$exclusionRule","stream_run_detail":$streamDetail,"leaked_rdds":$leakedRdds,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n":$n,"queries":$qs,"total_naive":${round2(totalNaive)},"queries_naive_median":$qsNaive,"queries_min":$qsMin,"query_pass_detail":$qPassDetail,"query_excluded":$qExcludedJson,"query_exclusion_rule":"$qExclusionRule","pass_detail":$passJson,"stream_rows_per_sec":${streamRps.toLong},"stream_rps_runs":${rpsRuns.mkString("[", ",", "]")},"stream_rps_spread_pct":${streamSpreadPct.toLong},"stream_rows_per_task_ms":$streamNorm,"stream_rows_per_task_ms_runs":${normRuns.mkString("[", ",", "]")},"stream_norm_spread_pct":${math.round(streamNormSpreadPct)},"stream_rows_per_cpu_sec":${streamCpuNorm.toLong},"stream_rows_per_cpu_sec_runs":${cpuRuns.mkString("[", ",", "]")},"stream_cpu_spread_pct":${streamCpuSpreadPct.toLong},"stream_rps_robust":${robustRps.toLong},"stream_robust_rps_spread_pct":${robustRpsSpread.toLong},"stream_rows_per_cpu_sec_robust":${robustCpu.toLong},"stream_robust_cpu_spread_pct":${robustCpuSpread.toLong},"stream_excluded_runs":$excludedJson,"stream_exclusion_rule":"$exclusionRule","stream_run_detail":$streamDetail,"leaked_rdds":$leakedRdds,"sf":"$sfDir"}"""
     println(fullLine)
     // The per-query line above is ~3KB and the harness captures a bounded
     // stdout tail, which can truncate its head — so the full map is ALSO
@@ -349,12 +266,121 @@ object Bench {
       }
     // Repeat the headline numbers as a short (<200 byte) FINAL line so the
     // last line is always a complete JSON object whatever the tail size.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n":$n,"queries_n":${results.size},"total_naive":${round2(totalNaive)},"query_excluded_n":${qExcluded.size},"stream_rows_per_sec":$streamRps,"stream_rps_spread_pct":$streamSpreadPct,"stream_rows_per_cpu_sec":$streamCpuNorm,"stream_cpu_spread_pct":$streamCpuSpreadPct,"stream_rps_robust":$robustRps,"stream_rows_per_cpu_sec_robust":$robustCpu,"stream_robust_cpu_spread_pct":$robustCpuSpread,"excluded_n":${excluded.size},"leaked_rdds":$leakedRdds}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n":$n,"queries_n":${results.size},"total_naive":${round2(totalNaive)},"query_excluded_n":${qExcluded.size},"stream_rows_per_sec":${streamRps.toLong},"stream_rps_spread_pct":${streamSpreadPct.toLong},"stream_rows_per_cpu_sec":${streamCpuNorm.toLong},"stream_cpu_spread_pct":${streamCpuSpreadPct.toLong},"stream_rps_robust":${robustRps.toLong},"stream_rows_per_cpu_sec_robust":${robustCpu.toLong},"stream_robust_cpu_spread_pct":${robustCpuSpread.toLong},"excluded_n":${excluded.size},"leaked_rdds":$leakedRdds}""")
     spark.stop()
     // hard tripwire AFTER the artifacts exist: leaked blocks mean the
     // numbers above are suspect — fail the run so it can't pass silently
     require(leakedRdds == 0, s"$leakedRdds persistent RDDs leaked across passes")
   }
+
+  /** Median of a query's pass seconds, ignoring failed (−1) passes: on
+    * even counts it picks the LARGER pass — conservative for a timing
+    * (the stream headlines' [[medianSpread]] picks the lower, slower
+    * run).
+    */
+  private def median(xs: Seq[Double]): Double = {
+    val ok = xs.filter(_ >= 0).sorted
+    if (ok.isEmpty) -1.0 else ok(ok.size / 2)
+  }
+
+  /** Median (the LOWER middle on even counts — for a throughput the
+    * conservative pick is the slower run) and spread (max-min)/median in
+    * percent; -1 for both when `xs` is empty, and -1 spread when the
+    * median is not positive.
+    */
+  private def medianSpread(xs: Seq[Double]): (Double, Double) = {
+    val s = xs.sorted
+    if (s.isEmpty) (-1.0, -1.0)
+    else {
+      val m = s((s.size - 1) / 2)
+      (m, if (m <= 0) -1.0 else (s.last - s.head) * 100 / m)
+    }
+  }
+
+  /** The cpu_ms-cluster rule shared by the per-query value and the
+    * stream headline: indices of `cpuMs` admitted by sorting ascending
+    * and admitting each next entry while its cpu_ms ≤ max(2× the
+    * current cluster's median, median + `slackMs`). cpu_ms is the
+    * plan-work proxy — it cannot legitimately double on identical
+    * invariants (the measured contention band is ±30%), so an entry
+    * outside the cluster burned its excess on memory-system contention.
+    */
+  private[graft] def cpuCluster(cpuMs: Seq[Long], slackMs: Long): Seq[Int] =
+    cpuMs.indices.sortBy(cpuMs).foldLeft(Vector.empty[Int]) { (acc, i) =>
+      if (acc.isEmpty) acc :+ i
+      else {
+        val med = cpuMs(acc((acc.size - 1) / 2)) // acc is cpu-ascending
+        if (cpuMs(i) <= math.max(2 * med, med + slackMs)) acc :+ i else acc
+      }
+    }
+
+  /** ROBUST per-query value (r14): the r14 full-catalog artifact
+    * manufactured an 18× phantom regression (q_embedding_clusters 25.1 s
+    * median vs 2.07 s run alone) because the per-query median-of-3
+    * had no exclusion rule and no per-pass evidence. Returns the median
+    * WALL over admitted passes and the indices of the excluded passes.
+    *
+    * Stage 1 is [[cpuCluster]] over the query's own per-pass cpu_ms with
+    * 250 ms absolute slack, which keeps sub-second queries from tripping
+    * the ratio test on JIT/GC-attribution jitter where 2× is tens of ms.
+    * Stage 2 exists because the two contention modes leave DIFFERENT
+    * fingerprints: memory-system contention inflates on-CPU cycles
+    * themselves (the two r14 stream outliers burned 4-9× cpu_ms — stage
+    * 1 catches those), while pure core starvation stretches wall with
+    * near-calm cpu_ms (the r14 18× phantom's pass-level cpu was only
+    * 1.67× — a cpu rule alone admits it). A pass whose cpu_ms sits in
+    * the calm cluster but whose wall is > max(2× the cluster's minimum,
+    * minimum + 100 ms) did the SAME plan work and spent the excess
+    * descheduled — contention by definition, never a plan change.
+    * Passes whose wall failed (−1) are ignored; with fewer than two
+    * cpu_ms deltas (listener breakage) the value falls back to the plain
+    * median — visible as cpu_ms −1 in query_pass_detail.
+    */
+  private[graft] def robustQuery(ms: Seq[QM]): (Double, Seq[Int]) = {
+    val valid = ms.zipWithIndex.filter(_._1.wall >= 0)
+    val withCpu = valid.filter(_._1.cpuMs >= 0)
+    if (withCpu.size < 2) (median(valid.map(_._1.wall)), Nil)
+    else {
+      val cpuOk = cpuCluster(withCpu.map(_._1.cpuMs), slackMs = 250)
+        .map(withCpu)
+      val wmin = cpuOk.map(_._1.wall).min
+      val admitted =
+        cpuOk.filter(_._1.wall <= math.max(2 * wmin, wmin + 0.1))
+      val admitIdx = admitted.map(_._2).toSet
+      (median(admitted.map(_._1.wall)),
+        withCpu.map(_._2).filterNot(admitIdx))
+    }
+  }
+
+  /** One per-query, per-pass measurement: wall seconds + the query's
+    * executorCpuTime delta in ms (−1 when no accounting listener is
+    * attached — warmup pass — or the wall itself failed).
+    */
+  private[graft] final case class QM(wall: Double, cpuMs: Long)
+
+  /** One streaming-bench run: headline rows/sec, the normalized
+    * rows-per-task-ms (DATASET rows — the headline's own numerator —
+    * ÷ summed executorRunTime: the contention-normalized throughput,
+    * since wall absorbs scheduler gaps and oversubscription stalls that
+    * task run time largely does not), and
+    * a JSON detail record carrying the per-run
+    * [[org.apache.spark.sql.streaming.StreamingQueryProgress]] phase
+    * totals (addBatch / getBatch / latestOffset / queryPlanning /
+    * walCommit / commitOffsets, summed over triggers) so a slow run
+    * NAMES its slow phase — the r9 headline was bimodal (105k/112k/525k
+    * rows/s, 373% spread) and indistinguishable between machine
+    * interference and a real data-path stall without this breakdown —
+    * plus the run's [[StageMetrics]] totals and top stages, so a 3×
+    * addBatch collapse (r10 run 2) is attributable to a STAGE and cause
+    * (JIT? GC? one skewed scan?) from the BENCH artifact alone.
+    */
+  private final case class StreamRun(run: Int, rps: Long,
+      rowsPerTaskMs: Double, rowsPerCpuSec: Long, cpuMs: Long,
+      detailJson: String)
+
+  private def round2(x: Double): Double = math.round(x * 100) / 100.0
+
+  private def round3(x: Double): Double = math.round(x * 1000) / 1000.0
 
   /** Streaming throughput (dataset rows/sec end-to-end through the
     * single-source pivot topology — see [[StreamBench]] for the full
@@ -380,122 +406,6 @@ object Bench {
     * linearly in volume — see writeSyntheticDay's no-midnight-wrap
     * contract). SPARK_GRAFT_STREAM_ROWS overrides.
     */
-  /** One streaming-bench run: headline rows/sec, the normalized
-    * rows-per-task-ms (DATASET rows — the headline's own numerator —
-    * ÷ summed executorRunTime: the contention-normalized throughput
-    * the r11 verdict asked for, since wall absorbs scheduler gaps and
-    * oversubscription stalls that task run time largely does not), and
-    * a JSON detail record carrying the per-run
-    * [[org.apache.spark.sql.streaming.StreamingQueryProgress]] phase
-    * totals (addBatch / getBatch / latestOffset / queryPlanning /
-    * walCommit / commitOffsets, summed over triggers) so a slow run
-    * NAMES its slow phase — the r9 headline was bimodal (105k/112k/525k
-    * rows/s, 373% spread) and indistinguishable between sandbox
-    * interference and a real data-path stall without this breakdown.
-    */
-  private final case class StreamRun(run: Int, rps: Long,
-      rowsPerTaskMs: Double, rowsPerCpuSec: Long, cpuMs: Long,
-      detailJson: String)
-
-  /** Per-run stage-level accounting (the r10 verdict demand): the
-    * trigger-phase breakdown names addBatch as the slow PHASE but not
-    * the slow STAGE or cause (JIT? GC? one skewed scan?). This listener
-    * aggregates executorRunTime/jvmGCTime per completed stage during a
-    * run; the top task-time stages + run GC total ride the detail JSON,
-    * so a 3× addBatch collapse (r10 run 2) is attributable from the
-    * BENCH artifact alone. Listener delivery is async —
-    * [[drainListenerBus]] empties the bus before every snapshot; if its
-    * reflective path ever breaks, a late stage at worst drops out of a
-    * diagnostic, never out of the headline.
-    */
-  private final case class StageRow(id: Int, tasks: Int, taskMs: Long,
-      cpuMs: Long, gcMs: Long, inputRows: Long, inputMb: Long,
-      shuffleReadMb: Long, shuffleWriteMb: Long)
-
-  /** Run-level totals of the listener's stage rows. input_rows and
-    * input_mb are HARD plan invariants — fixed by (code, data, plan),
-    * so two runs of the same HEAD must agree on them regardless of
-    * sandbox load; tasks jitters only with AQE coalescing (measured
-    * ±0.4% across full-catalog passes) and shuffle MB can wobble tens
-    * of percent pass-to-pass (AQE runtime join/coalesce choices plus
-    * block-eviction recompute in the iterative localCheckpoint-family
-    * queries — r12 passes read 756/589/756 MB on identical code).
-    * Reading rule: a wall-clock delta with matching input/task
-    * invariants is contention or JIT/GC (which task_ms/gc_ms then
-    * name), never a plan change — which makes a driver-vs-builder or
-    * run-vs-run delta adjudicable from the BENCH artifact alone (the
-    * r11 verdict's headline ask: its 136% stream spread and
-    * 148.9-vs-135.0 s totals were only attributable to contention via
-    * out-of-band builder runs).
-    */
-  private final case class RunTotals(tasks: Long, taskMs: Long, cpuMs: Long,
-      gcMs: Long, inputRows: Long, inputMb: Long, shuffleReadMb: Long,
-      shuffleWriteMb: Long) {
-    def json: String =
-      s""""tasks":$tasks,"task_ms":$taskMs,"cpu_ms":$cpuMs,"gc_ms":$gcMs,"input_rows":$inputRows,"input_mb":$inputMb,"shuffle_read_mb":$shuffleReadMb,"shuffle_write_mb":$shuffleWriteMb"""
-  }
-
-  private final class StageAccounting extends org.apache.spark.scheduler.SparkListener {
-    private val rows = scala.collection.mutable.ArrayBuffer.empty[StageRow]
-    override def onStageCompleted(
-        e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val si = e.stageInfo
-      val tm = si.taskMetrics
-      if (tm != null) rows.synchronized {
-        // executorCpuTime is NANOSECONDS (executorRunTime/jvmGCTime are
-        // ms) — normalized to ms here so the artifact carries one unit
-        rows += StageRow(si.stageId, si.numTasks,
-          tm.executorRunTime, tm.executorCpuTime / 1000000, tm.jvmGCTime,
-          tm.inputMetrics.recordsRead,
-          tm.inputMetrics.bytesRead >> 20,
-          tm.shuffleReadMetrics.totalBytesRead >> 20,
-          tm.shuffleWriteMetrics.bytesWritten >> 20)
-      }
-    }
-    def totals: RunTotals = rows.synchronized {
-      RunTotals(rows.map(_.tasks.toLong).sum, rows.map(_.taskMs).sum,
-        rows.map(_.cpuMs).sum, rows.map(_.gcMs).sum,
-        rows.map(_.inputRows).sum, rows.map(_.inputMb).sum,
-        rows.map(_.shuffleReadMb).sum, rows.map(_.shuffleWriteMb).sum)
-    }
-    def stagesJson: String = rows.synchronized {
-      // volumes instead of names: streaming stages all share one
-      // action call site, so input/shuffle MB is what actually tells
-      // the scan stage from the aggregation stages in the artifact
-      val top = rows.sortBy(-_.taskMs).take(3).map { r =>
-        s"""{"stage":${r.id},"tasks":${r.tasks},"task_ms":${r.taskMs},"cpu_ms":${r.cpuMs},"gc_ms":${r.gcMs},"input_mb":${r.inputMb},"shuffle_read_mb":${r.shuffleReadMb},"shuffle_write_mb":${r.shuffleWriteMb}}"""
-      }.mkString("[", ",", "]")
-      s""""stages_n":${rows.size},"top_stages":$top"""
-    }
-  }
-
-  /** Drain the async listener bus before reading an accounting
-    * snapshot: stage-completed events are delivered on a separate
-    * thread, so reading (or removing the listener) right after the
-    * action returns can miss the tail. LiveListenerBus.waitUntilEmpty
-    * is `private[spark]` — public in bytecode, so a reflective call
-    * reaches it without shipping code in Spark's package; the fixed
-    * sleep remains only as the fallback if the internals move.
-    */
-  private[graft] def drainListenerBus(spark: SparkSession): Unit =
-    try {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
-        .invoke(bus, java.lang.Long.valueOf(10000L))
-      ()
-    } catch { case _: Throwable => Thread.sleep(200) }
-
-  private def round2(x: Double): Double = math.round(x * 100) / 100.0
-
-  private def round3(x: Double): Double = math.round(x * 1000) / 1000.0
-
-  /** One per-query, per-pass measurement: wall seconds + the query's
-    * executorCpuTime delta in ms (−1 when no accounting listener is
-    * attached — warmup pass — or the wall itself failed).
-    */
-  private final case class QM(wall: Double, cpuMs: Long)
-
   private def streamThroughput(spark: SparkSession): Seq[StreamRun] = {
     val rows = sys.env.getOrElse("SPARK_GRAFT_STREAM_ROWS", "4608000").toInt
     // n=5 (r11 verdict): with a 136% worst-case sandbox spread, 3 runs
@@ -503,15 +413,13 @@ object Bench {
     // the median robust to two bad draws and the per-run invariants
     // (RunTotals) adjudicate the rest
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_STREAM_N", "5").toInt
-    import graft.core.PipelineConfig
-    import graft.streaming.StreamingPipeline
     try {
       val dir = Files.createTempDirectory("benchstream").toString
       // fleet size scales with volume so the time-of-day wire never
       // wraps midnight (see StreamBench.writeSyntheticDay)
       StreamBench.writeSyntheticDay(spark, dir, rows)
 
-      def onePass(run: Int): (Double, String, Long, Double, Long, Long) = {
+      def onePass(run: Int): StreamRun = {
         // box-load telemetry bracketing the run (r13 verdict #1): the
         // two r13 outlier runs burned 4-9× the CPU on identical plans —
         // memory-system contention inflates on-CPU cycles themselves —
@@ -527,47 +435,23 @@ object Bench {
         }
         val procCpu0 = procCpuNs
         val wall0 = System.nanoTime()
-        val dataset = spark.readStream.schema(graft.core.Schemas.dataset)
-          .option("header", "true").csv(s"$dir/in")
-        val cfg = PipelineConfig.default
-        val wire = StreamingPipeline.producerWire(dataset)
-        // single-scan fan-in demux: the union-of-landedTable form scans
-        // the source once PER family (measured 1.25× slower end-to-end)
-        val landed = StreamingPipeline.landedFamilies(wire,
-            Seq(cfg.cpuTopic -> "cpu", cfg.memTopic -> "mem"))
-          .withColumn("ts", graft.operators.RefOps.anchorTimeOfDay(col("ts")))
-        val acct = new StageAccounting
-        spark.sparkContext.addSparkListener(acct)
-        // finally-protected: a throwing run must not leak the listener
-        // (it would keep accumulating every later run's stages) or a
-        // still-running query into the next measured pass
-        val (secs, progs) =
+        val alerts = StreamBench.pivotAlerts(
+          spark.readStream.schema(graft.core.Schemas.dataset)
+            .option("header", "true").csv(s"$dir/in"))
+        // a throwing run leaks neither the listener (StageMetrics.during)
+        // nor a still-running query into the next measured pass
+        val ((secs, progs), acct) = StageMetrics.during(spark) { _ =>
+          val t0 = System.nanoTime()
+          val q = StreamBench.noopSink(alerts, s"$dir/ckpt$run").start()
           try {
-            val t0 = System.nanoTime()
-            val q = StreamingPipeline.streamingJob1SingleSource(landed)
-              .writeStream.format("noop").outputMode("append")
-              .option("checkpointLocation", s"$dir/ckpt$run").start()
-            try {
-              q.processAllAvailable()
-              ((System.nanoTime() - t0) / 1e9, q.recentProgress)
-            } finally q.stop()
-          } finally {
-            drainListenerBus(spark)
-            spark.sparkContext.removeSparkListener(acct)
-          }
-        // sum each durationMs phase across triggers; a run's wall is
-        // dominated by whichever phase grew, and only addBatch is the
-        // data path — everything else is fixed/coordination cost
-        val phases = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-        var rowsIn = 0L
-        progs.foreach { p =>
-          rowsIn += p.numInputRows
-          p.durationMs.forEach((k, v) =>
-            phases.update(k, phases.getOrElse(k, 0L) + v.longValue()))
+            q.processAllAvailable()
+            ((System.nanoTime() - t0) / 1e9, q.recentProgress)
+          } finally q.stop()
         }
-        val phaseJson = phases.toSeq.sortBy(_._1)
+        val phaseJson = StreamBench.phaseTotals(progs).toSeq.sortBy(_._1)
           .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-        val t = acct.totals
+        val rowsIn = progs.map(_.numInputRows).sum
+        val t = acct.totals()
         // normalized throughput: DATASET rows — the HEADLINE's own
         // numerator (`rows`, the generated volume) — over total task
         // run time, so rps and rows_per_task_ms share one unit and
@@ -610,9 +494,9 @@ object Bench {
         // ≈ families × dataset rows); t.json's input_rows is the
         // stage-level scan record count — same unit, different
         // subsystem, so the two cross-check each other
-        val detail =
-          s""""secs":${round2(secs)},"batches":${progs.length},"source_rows":$rowsIn,"phases_ms":$phaseJson,${t.json},"rows_per_task_ms":$rowsPerTaskMs,"rows_per_cpu_sec":$rowsPerCpuSec,"os_load_avg":$osLoad,"jvm_cpu_share":${round2(jvmShare)},${acct.stagesJson}"""
-        (secs, detail, rowsIn, rowsPerTaskMs, rowsPerCpuSec, t.cpuMs)
+        val rps = (rows / secs).round
+        StreamRun(run, rps, rowsPerTaskMs, rowsPerCpuSec, t.cpuMs,
+          s"""{"run":$run,"rps":$rps,"secs":${round2(secs)},"batches":${progs.length},"source_rows":$rowsIn,"phases_ms":$phaseJson,${t.json},"rows_per_task_ms":$rowsPerTaskMs,"rows_per_cpu_sec":$rowsPerCpuSec,"os_load_avg":$osLoad,"jvm_cpu_share":${round2(jvmShare)},${acct.stagesJson}}""")
       }
 
       // Unreported warm-up pass over the SAME input (own checkpoint):
@@ -631,11 +515,9 @@ object Bench {
       (1 to nRuns).map { run =>
         try {
           System.gc()
-          val (secs, detail, _, norm, cpuNorm, cpuMs) = onePass(run)
-          val rps = (rows / secs).round
-          val line = s"""{"run":$run,"rps":$rps,$detail}"""
-          System.err.println(s"[bench] stream $line")
-          StreamRun(run, rps, norm, cpuNorm, cpuMs, line)
+          val r = onePass(run)
+          System.err.println(s"[bench] stream ${r.detailJson}")
+          r
         } catch { case e: Throwable =>
           System.err.println(s"[bench] stream run $run failed: ${e.getMessage}")
           StreamRun(run, -1L, -1.0, -1L, -1L, s"""{"run":$run,"rps":-1}""")

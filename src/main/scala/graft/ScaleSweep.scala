@@ -396,24 +396,6 @@ object ScaleSweep {
         println(s"""{"metric":"lsh_dedup_sweep","docs":$docs,"wall_sec":${math.round(secs * 1000) / 1000.0},"docs_per_sec":${(docs / secs).round}}""")
       }
     } else if (mode == "linededup") {
-      // spill accounting: the 100× point's last-decade multiplier ran
-      // ~16% super-linear on a single JVM (r12), and the suspect is the
-      // SMJ of 4·|docs| line rows against the ~1.5·|docs|-row dfreq
-      // side outgrowing the one-box execution-memory share — a cluster
-      // keeps the per-executor share constant as width grows, so a
-      // spill receipt here separates "plan defect" from "one-box
-      // memory artifact" in the sweep output itself
-      val spillMb = new java.util.concurrent.atomic.AtomicLong
-      val acct = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val tm = e.stageInfo.taskMetrics
-          if (tm != null) spillMb.addAndGet(
-            (tm.memoryBytesSpilled + tm.diskBytesSpilled) >> 20)
-          ()
-        }
-      }
-      spark.sparkContext.addSparkListener(acct)
       // CCNet line dedup (the r10 verdict's first asymptotic suspect:
       // a line-keyed exchange + join-back + per-doc reassembly). The
       // structural claim the curve must prove: the df aggregate is a
@@ -429,19 +411,24 @@ object ScaleSweep {
       TextAnalysis.lineDedup(lineCorpus(spark, 10000), "text", "doc_id",
           lineTokens = 12, maxLineDf = 2L)
         .write.format("noop").mode("overwrite").save() // warmup
+      // spill accounting: the 100× point's last-decade multiplier ran
+      // ~16% super-linear on a single JVM (r12), and the suspect is the
+      // SMJ of 4·|docs| line rows against the ~1.5·|docs|-row dfreq
+      // side outgrowing the one-box execution-memory share — a cluster
+      // keeps the per-executor share constant as width grows, so a
+      // spill receipt here separates "plan defect" from "one-box
+      // memory artifact" in the sweep output itself
       points.foreach { docs =>
-        Bench.drainListenerBus(spark)
-        val spill0 = spillMb.get
-        val t0 = System.nanoTime()
-        TextAnalysis.lineDedup(lineCorpus(spark, docs), "text", "doc_id",
-            lineTokens = 12, maxLineDf = 2L)
-          .write.format("noop").mode("overwrite").save()
-        val secs = (System.nanoTime() - t0) / 1e9
+        val (secs, acct) = graft.core.StageMetrics.during(spark) { _ =>
+          val t0 = System.nanoTime()
+          TextAnalysis.lineDedup(lineCorpus(spark, docs), "text", "doc_id",
+              lineTokens = 12, maxLineDf = 2L)
+            .write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - t0) / 1e9
+        }
         graft.core.CacheScope.releaseStragglers(spark)
-        Bench.drainListenerBus(spark)
-        println(s"""{"metric":"linededup_sweep","docs":$docs,"wall_sec":${math.round(secs * 1000) / 1000.0},"docs_per_sec":${(docs / secs).round},"spill_mb":${spillMb.get - spill0}}""")
+        println(s"""{"metric":"linededup_sweep","docs":$docs,"wall_sec":${math.round(secs * 1000) / 1000.0},"docs_per_sec":${(docs / secs).round},"spill_mb":${acct.totals().spillMb}}""")
       }
-      spark.sparkContext.removeSparkListener(acct)
     } else if (mode == "simsearch") {
       // E3 priced at corpus scale (the one family whose SCALE.md claims
       // were argued, not measured): exact brute-force top-k (heap form —

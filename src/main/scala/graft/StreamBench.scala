@@ -1,10 +1,13 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.PipelineConfig
-import graft.operators.Profiling
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery,
+  StreamingQueryProgress}
+import graft.core.{PipelineConfig, StageMetrics}
+import graft.operators.{Profiling, RefOps}
 import graft.streaming.StreamingPipeline
 
 /** Streaming-throughput main: replays the reference's full workload
@@ -13,11 +16,23 @@ import graft.streaming.StreamingPipeline
   * pipeline — producer wire → demux/decode → watermarked windowed
   * alerts — and prints one JSON line with end-to-end rows/sec.
   *
+  * Usage: `runMain graft.StreamBench [rows] [mode] [maxFilesPerTrigger]`
+  * with mode one of [[modes]] (default "join"); an unknown mode fails
+  * before the session starts.
+  *
   * The reference computed (but never published) its producer
   * records/sec; this is the comparable single-node number for the
   * rebuilt engine.
   */
 object StreamBench {
+
+  /** Every topology [[main]] can run (each branch there says what it
+    * prices).
+    */
+  private val modes: Seq[String] = Seq("join", "pivot", "interval", "bloom",
+    "logit", "drift", "funnel", "lsh", "dedup", "tws", "kmv",
+    "heavyhitter", "asof", "debounce", "interp", "session", "twssession",
+    "latency", "ann", "annsharded")
 
   /** Synthesize the reference-shaped metrics day as CSV under
     * `dir/in` and return the fleet size used. 5s cadence per server,
@@ -48,17 +63,43 @@ object StreamBench {
     servers
   }
 
+  /** The single-source pivot topology over a streaming `dataset` —
+    * the recommended one, and Bench's stream headline: producer wire →
+    * single-scan fan-in demux of the cpu and mem families → job1's
+    * conditional-aggregate windowed alerts. The union-of-landedTable
+    * form re-scans the source once PER family (measured 1.25× slower
+    * end-to-end; SCALE.md §Streaming).
+    */
+  def pivotAlerts(dataset: DataFrame): DataFrame = {
+    val cfg = PipelineConfig.default
+    val landed = StreamingPipeline.landedFamilies(
+        StreamingPipeline.producerWire(dataset),
+        Seq(cfg.cpuTopic -> "cpu", cfg.memTopic -> "mem"))
+      .withColumn("ts", RefOps.anchorTimeOfDay(col("ts")))
+    StreamingPipeline.streamingJob1SingleSource(landed)
+  }
+
+  /** The measured sink: `ds` to noop under `checkpoint`. */
+  private[graft] def noopSink[T](ds: Dataset[T], checkpoint: String,
+      outputMode: String = "append"): DataStreamWriter[T] =
+    ds.writeStream.format("noop").outputMode(outputMode)
+      .option("checkpointLocation", checkpoint)
+
+  /** Each trigger phase's durationMs summed over `progress`. Only
+    * addBatch is the data path; the rest is fixed or coordination cost,
+    * so a run's slow phase is named by whichever of these grew.
+    */
+  private[graft] def phaseTotals(
+      progress: Array[StreamingQueryProgress]): Map[String, Long] =
+    progress.toSeq.flatMap(_.durationMs.asScala)
+      .groupMapReduce(_._1)(_._2.longValue)(_ + _)
+
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val rows = args.headOption.map(_.toInt).getOrElse(28800)
-    // topology: "join" = stream-stream join of two landed families
-    // (reference shape); "pivot" = single-source conditional-agg
-    // variant (half the state, no join — the recommended topology);
-    // "interval" = watermarked ±10s stream-stream INTERVAL join of the
-    // cpu×mem families (time-proximity correlation, not ts equality);
-    // "funnel" = flatMapGroupsWithState user-journey tracking (the
-    // custom-state path: per-key state, no windowed aggregation)
     val mode = if (args.length > 1) args(1) else "join"
+    require(modes.contains(mode),
+      s"unknown StreamBench mode '$mode'; valid modes: ${modes.mkString(", ")}")
     val filesPerTrigger = if (args.length > 2) args(2) else "0"
     // knob rationale: core/GraftSession.scala (shared with Bench/Verify)
     val spark = graft.core.GraftSession.local(cpus, "graft-streambench")
@@ -66,6 +107,12 @@ object StreamBench {
     import spark.implicits._
 
     val dir = Files.createTempDirectory("streambench").toString
+    val ckpt = s"$dir/ckpt"
+    def source(schema: String, path: String = s"$dir/in"): DataFrame = {
+      val r = spark.readStream.schema(schema).option("header", "true")
+      if (filesPerTrigger != "0") r.option("maxFilesPerTrigger", filesPerTrigger)
+      r.csv(path)
+    }
     // user-journey events for the funnel/latency modes: ~100 events/user,
     // monotonic event time, 5 types. The type index mixes the user's
     // sequence number (id div users) with the raw id: with id = u +
@@ -84,13 +131,7 @@ object StreamBench {
               .cast("int")).as("event_type"),
           col("id").cast("long").as("tu"))
         .repartition(8).write.option("header", "true").csv(s"$dir/in")
-    def journeyReader() = {
-      val reader = spark.readStream
-        .schema("user_id LONG, event_type STRING, tu LONG")
-        .option("header", "true")
-      if (filesPerTrigger != "0") reader.option("maxFilesPerTrigger", filesPerTrigger)
-      reader.csv(s"$dir/in")
-    }
+    def journeyReader() = source("user_id LONG, event_type STRING, tu LONG")
     // 10s cadence + ±jitter inside the 30s watermark window, shared by
     // every journey-event-time mode (asof/session/interp/debounce) —
     // one definition so a jitter change can't silently make one mode's
@@ -104,42 +145,20 @@ object StreamBench {
         pmod(k * 13, lit(991)), lit("dolor"), pmod(k * 29, lit(983)),
         lit("sit"), pmod(k * 37, lit(977)))
 
-    // per-stage (submissionMs, taskMs, cpuMs) — Bench's CPU-normalized
-    // throughput discipline (r13) on this harness too. Registered
-    // before the mode branches, which all GENERATE input before taking
-    // t0: generation stages are excluded at summing time by their
-    // submission timestamp (< the measurement's wall-clock mark), so
-    // cpu_ms prices only the streaming run itself.
-    val stageAcct =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long)]()
-    val acctListener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val tm = e.stageInfo.taskMetrics
-        if (tm != null) {
-          stageAcct.add((e.stageInfo.submissionTime.getOrElse(Long.MaxValue),
-            tm.executorRunTime, tm.executorCpuTime / 1000000))
-          ()
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(acctListener)
-
-    // Wall-clock twin of each branch's nanoTime t0, captured at the SAME
-    // instant (r13 ADVICE: the former reconstruction — currentTimeMillis
-    // minus the elapsed nanos, with a fixed 50 ms fudge — could count a
-    // generation stage submitted just before t0 into the run's cpu_ms on
-    // a fast box). Generation writes are blocking actions completed
-    // before markStart() runs, so their stages are always SUBMITTED
-    // before this mark; no fudge needed.
+    // Every branch GENERATES its input before taking t0, inside the
+    // measured listener window; markStart() takes the wall-clock mark at
+    // the same instant as t0. Generation writes are blocking actions
+    // completed before the mark, so their stages are all SUBMITTED
+    // before it and `totals(wallMark)` prices the streaming run alone.
     var wallMark = Long.MaxValue
     def markStart(): Long = {
       wallMark = System.currentTimeMillis
       System.nanoTime()
     }
 
-    val (q, keys, t0) =
-      if (mode == "bloom") {
+    // (started query, keys, wire messages, t0) for the chosen mode
+    def startRun(): (StreamingQuery, Int, Long, Long) = mode match {
+      case "bloom" =>
         // stateless screen topology: stream-static bloom probes + the
         // exact-verify join, zero state store. Stream ids map onto
         // 2×|corpus| distinct texts → ~50% true-dup rate, so both the
@@ -152,15 +171,11 @@ object StreamBench {
         val corpus = spark.range(corpusN)
           .select(col("id").as("doc_id"), docText(col("id")).as("text"))
         val t0 = markStart()
-        val reader = spark.readStream.schema("doc_id LONG, text STRING")
-          .option("header", "true")
-        if (filesPerTrigger != "0") reader.option("maxFilesPerTrigger", filesPerTrigger)
-        val q = graft.operators.Dedup.bloomScreenStream(
-            reader.csv(s"$dir/in"), corpus, "text", "doc_id", mBits = 1 << 16)
-          .writeStream.format("noop").outputMode("append")
-          .option("checkpointLocation", s"$dir/ckpt").start()
-        (q, corpusN, t0)
-      } else if (mode == "logit") {
+        val q = noopSink(graft.operators.Dedup.bloomScreenStream(
+            source("doc_id LONG, text STRING"), corpus, "text", "doc_id",
+            mBits = 1 << 16), ckpt).start()
+        (q, corpusN, rows.toLong, t0)
+      case "logit" =>
         // inline model-inference screen: the hashing-trick quality
         // classifier as a pure streaming projection — no state store,
         // no stream-static join; measures the per-row inference cost
@@ -170,15 +185,11 @@ object StreamBench {
           .select(col("id").as("doc_id"), docText(col("id")).as("text"))
           .repartition(8).write.option("header", "true").csv(s"$dir/in")
         val t0 = markStart()
-        val reader = spark.readStream.schema("doc_id LONG, text STRING")
-          .option("header", "true")
-        if (filesPerTrigger != "0") reader.option("maxFilesPerTrigger", filesPerTrigger)
-        val q = graft.operators.TextAnalysis.hashedLinearScore(
-            reader.csv(s"$dir/in"), "text", "doc_id")
-          .writeStream.format("noop").outputMode("append")
-          .option("checkpointLocation", s"$dir/ckpt").start()
-        (q, rows, t0)
-      } else if (mode == "drift") {
+        val q = noopSink(graft.operators.TextAnalysis.hashedLinearScore(
+            source("doc_id LONG, text STRING"), "text", "doc_id"), ckpt)
+          .start()
+        (q, rows, rows.toLong, t0)
+      case "drift" =>
         // distribution-drift monitor topology: ONE windowed stateful
         // aggregation emitting the whole bin vector, then a stateless
         // broadcast join against the static full-day baseline — the
@@ -192,33 +203,27 @@ object StreamBench {
               floor(col("cpu_pct") * 100).cast("long").as("qv")),
           "server_id", "qv", binWidth = 1000L, maxBin = 9)
         val t0 = markStart()
-        val reader = spark.readStream.schema(graft.core.Schemas.dataset)
-          .option("header", "true")
-        if (filesPerTrigger != "0") reader.option("maxFilesPerTrigger", filesPerTrigger)
-        val ev = reader.csv(s"$dir/in")
-          .select(graft.operators.RefOps.anchorTimeOfDay(col("ts")).as("ts"),
+        val ev = source(graft.core.Schemas.dataset.toDDL)
+          .select(RefOps.anchorTimeOfDay(col("ts")).as("ts"),
             col("server_id"),
             floor(col("cpu_pct") * 100).cast("long").as("qv"))
-        val q = Profiling.histogramDriftStream(ev, base,
+        val q = noopSink(Profiling.histogramDriftStream(ev, base,
             groupCol = "server_id", tsCol = "ts", valueCol = "qv",
             binWidth = 1000L, maxBin = 9,
-            windowDur = "60 seconds", watermarkDur = "120 seconds")
-          .writeStream.format("noop").outputMode("append")
-          .option("checkpointLocation", s"$dir/ckpt").start()
-        (q, servers, t0)
-      } else if (mode == "funnel") {
+            windowDur = "60 seconds", watermarkDur = "120 seconds"), ckpt)
+          .start()
+        (q, servers, rows.toLong, t0)
+      case "funnel" =>
         // the flatMapGroupsWithState path (per-key O(1) state, no
         // windowed aggregation, no wire demux)
         val users = math.max(1000, rows / 100)
         writeJourneyEvents(users)
         val t0 = markStart()
         val ds = journeyReader().as[graft.operators.Behavior.FunnelEvent]
-        val q = graft.operators.Behavior
-          .funnelStream(ds, Seq("view", "click", "purchase"))
-          .writeStream.format("noop").outputMode("append")
-          .option("checkpointLocation", s"$dir/ckpt").start()
-        (q, users, t0)
-      } else if (mode == "lsh") {
+        val q = noopSink(graft.operators.Behavior
+          .funnelStream(ds, Seq("view", "click", "purchase")), ckpt).start()
+        (q, users, rows.toLong, t0)
+      case "lsh" =>
         // near-dup screen topology: stream-static LSH signature joins
         // against a static ingested corpus (the q_dedup_incremental
         // shape per trigger). Same 2×|corpus| id mapping as bloom mode:
@@ -232,15 +237,11 @@ object StreamBench {
         val corpus = spark.range(corpusN)
           .select(col("id").as("doc_id"), docText(col("id")).as("text"))
         val t0 = markStart()
-        val reader = spark.readStream.schema("doc_id LONG, text STRING")
-          .option("header", "true")
-        if (filesPerTrigger != "0") reader.option("maxFilesPerTrigger", filesPerTrigger)
-        val q = graft.operators.Dedup.lshScreenStream(
-            reader.csv(s"$dir/in"), corpus, "text", "doc_id")
-          .writeStream.format("noop").outputMode("append")
-          .option("checkpointLocation", s"$dir/ckpt").start()
-        (q, corpusN, t0)
-      } else if (mode == "dedup") {
+        val q = noopSink(graft.operators.Dedup.lshScreenStream(
+            source("doc_id LONG, text STRING"), corpus, "text", "doc_id"),
+          ckpt).start()
+        (q, corpusN, rows.toLong, t0)
+      case "dedup" =>
         // at-least-once repair topology: dropDuplicatesWithinWatermark
         // keyed by message id — the T1 effectively-once screen at
         // volume, state = ids within the watermark horizon. Every
@@ -254,16 +255,11 @@ object StreamBench {
               .as("ts"))
           .repartition(8).write.option("header", "true").csv(s"$dir/in")
         val t0 = markStart()
-        val reader = spark.readStream.schema("msg_id LONG, ts TIMESTAMP")
-          .option("header", "true")
-        if (filesPerTrigger != "0") reader.option("maxFilesPerTrigger", filesPerTrigger)
-        val q = reader.csv(s"$dir/in")
+        val q = noopSink(source("msg_id LONG, ts TIMESTAMP")
           .withWatermark("ts", "30 seconds")
-          .dropDuplicatesWithinWatermark("msg_id")
-          .writeStream.format("noop").outputMode("append")
-          .option("checkpointLocation", s"$dir/ckpt").start()
-        (q, distinctMsgs, t0)
-      } else if (mode == "tws") {
+          .dropDuplicatesWithinWatermark("msg_id"), ckpt).start()
+        (q, distinctMsgs, rows.toLong, t0)
+      case "tws" =>
         // transformWithState TTL first-seen screen on ROCKSDB state
         // (TwsOps.ttlDedup): the "dedup" workload (every message
         // arrives twice) through the state API v2 — seen-set is one
@@ -278,17 +274,13 @@ object StreamBench {
           .repartition(8).write.option("header", "true").csv(s"$dir/in")
         graft.streaming.TwsOps.useRocksDb(spark)
         val t0 = markStart()
-        val reader = spark.readStream.schema("msg_id STRING, payload STRING")
-          .option("header", "true")
-        if (filesPerTrigger != "0") reader.option("maxFilesPerTrigger", filesPerTrigger)
-        val q = graft.streaming.TwsOps.ttlDedup(reader.csv(s"$dir/in"),
-            "msg_id", "payload", java.time.Duration.ofHours(1))
-          .writeStream.format("noop").outputMode("append")
-          .option("checkpointLocation", s"$dir/ckpt")
+        val q = noopSink(graft.streaming.TwsOps.ttlDedup(
+            source("msg_id STRING, payload STRING"),
+            "msg_id", "payload", java.time.Duration.ofHours(1)), ckpt)
           .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(100))
           .start()
-        (q, distinctMsgs, t0)
-      } else if (mode == "kmv") {
+        (q, distinctMsgs, rows.toLong, t0)
+      case "kmv" =>
         // streaming distinct-sketch topology: per-group KMV bottom-k
         // (Sketches.kmvDistinct, complete mode) — running distinct
         // state is O(k) longs per group no matter how many rows
@@ -301,15 +293,11 @@ object StreamBench {
             (col("id") % distinctVals).as("v"))
           .repartition(8).write.option("header", "true").csv(s"$dir/in")
         val t0 = markStart()
-        val reader = spark.readStream.schema("g LONG, v LONG")
-          .option("header", "true")
-        if (filesPerTrigger != "0") reader.option("maxFilesPerTrigger", filesPerTrigger)
-        val q = graft.operators.Sketches.kmvDistinct(
-            reader.csv(s"$dir/in"), "g", xxhash64(col("v")), k = 1024)
-          .writeStream.format("noop").outputMode("complete")
-          .option("checkpointLocation", s"$dir/ckpt").start()
-        (q, groups, t0)
-      } else if (mode == "heavyhitter") {
+        val q = noopSink(graft.operators.Sketches.kmvDistinct(
+            source("g LONG, v LONG"), "g", xxhash64(col("v")), k = 1024),
+          ckpt, "complete").start()
+        (q, groups, rows.toLong, t0)
+      case "heavyhitter" =>
         // SpaceSaving heavy-hitter screen (TwsOps.spaceSavingTws) on
         // RocksDB MapState: k = 32 counters per key over a skewed item
         // mix (a third of rows hit 4 hot items, the rest spread over
@@ -328,15 +316,11 @@ object StreamBench {
           .repartition(8).write.option("header", "true").csv(s"$dir/in")
         graft.streaming.TwsOps.useRocksDb(spark)
         val t0 = markStart()
-        val reader = spark.readStream.schema("key STRING, t LONG, item STRING")
-          .option("header", "true")
-        if (filesPerTrigger != "0") reader.option("maxFilesPerTrigger", filesPerTrigger)
-        val q = graft.streaming.TwsOps.spaceSavingTws(reader.csv(s"$dir/in"),
-            "key", "t", "item", k = 32)
-          .writeStream.format("noop").outputMode("append")
-          .option("checkpointLocation", s"$dir/ckpt").start()
-        (q, groups, t0)
-      } else if (mode == "asof") {
+        val q = noopSink(graft.streaming.TwsOps.spaceSavingTws(
+            source("key STRING, t LONG, item STRING"), "key", "t", "item",
+            k = 32), ckpt).start()
+        (q, groups, rows.toLong, t0)
+      case "asof" =>
         // streaming as-of enrichment (TwsOps.asOfTws on RocksDB):
         // probes = the journey-event stream; states = a 10x-sparser
         // config-update stream over the same users and time span.
@@ -353,20 +337,13 @@ object StreamBench {
         val t0 = markStart()
         val probes = journeyReader().select(col("user_id"),
           jitterTs(col("tu"), users, 7).as("ts"), col("tu").cast("double").as("v"))
-        val stateReader = {
-          val r = spark.readStream.schema("user_id LONG, tu LONG")
-            .option("header", "true")
-          if (filesPerTrigger != "0") r.option("maxFilesPerTrigger", filesPerTrigger)
-          r.csv(s"$dir/in2")
-        }
-        val states = stateReader.select(col("user_id"),
-          jitterTs(col("tu"), users, 11).as("ts"), col("tu").cast("double").as("v"))
-        val q = graft.streaming.TwsOps.asOfTws(probes, states, "user_id",
-            "ts", "v", "v", "30 seconds")
-          .writeStream.format("noop").outputMode("append")
-          .option("checkpointLocation", s"$dir/ckpt").start()
-        (q, users, t0)
-      } else if (mode == "debounce") {
+        val states = source("user_id LONG, tu LONG", s"$dir/in2")
+          .select(col("user_id"), jitterTs(col("tu"), users, 11).as("ts"),
+            col("tu").cast("double").as("v"))
+        val q = noopSink(graft.streaming.TwsOps.asOfTws(probes, states,
+            "user_id", "ts", "v", "v", "30 seconds"), ckpt).start()
+        (q, users, rows.toLong + rows / 10, t0)
+      case "debounce" =>
         // streaming alert rate-limiting (TwsOps.debounceTws on
         // RocksDB): per-user keep-anchor suppression at a 15s cooldown
         // over the jittered 10s-cadence journey stream — prices the
@@ -377,12 +354,11 @@ object StreamBench {
         val t0 = markStart()
         val obs = journeyReader().select(col("user_id"),
           jitterTs(col("tu"), users, 7).as("ts"), col("tu").as("tie"))
-        val q = graft.streaming.TwsOps.debounceTws(obs, "user_id", "ts",
-            "tie", cooldownUs = 15000000L, watermark = "30 seconds")
-          .writeStream.format("noop").outputMode("append")
-          .option("checkpointLocation", s"$dir/ckpt").start()
-        (q, users, t0)
-      } else if (mode == "interp") {
+        val q = noopSink(graft.streaming.TwsOps.debounceTws(obs, "user_id",
+            "ts", "tie", cooldownUs = 15000000L, watermark = "30 seconds"),
+          ckpt).start()
+        (q, users, rows.toLong, t0)
+      case "interp" =>
         // streaming gap-repair (TwsOps.interpTws on RocksDB): per-user
         // irregular observations resampled onto a 10s grid with linear
         // interpolation as buckets close. Prices the pending-list +
@@ -395,12 +371,11 @@ object StreamBench {
         val obs = journeyReader().select(col("user_id"),
           jitterTs(col("tu"), users, 7).as("ts"),
           col("tu").as("tie"), pmod(col("tu"), lit(1000)).cast("double").as("v"))
-        val q = graft.streaming.TwsOps.interpTws(obs, "user_id", "ts",
-            "tie", "v", bucketSeconds = 10L, watermark = "30 seconds")
-          .writeStream.format("noop").outputMode("append")
-          .option("checkpointLocation", s"$dir/ckpt").start()
-        (q, users, t0)
-      } else if (mode == "session") {
+        val q = noopSink(graft.streaming.TwsOps.interpTws(obs, "user_id",
+            "ts", "tie", "v", bucketSeconds = 10L, watermark = "30 seconds"),
+          ckpt).start()
+        (q, users, rows.toLong, t0)
+      case "session" =>
         // gap-session topology: the BUILT-IN session_window state path —
         // merge-on-update session state per user, append once the
         // watermark passes a session's close. Event times jitter ±24s on
@@ -414,12 +389,11 @@ object StreamBench {
         val ev = journeyReader()
           .select(col("user_id"), jitterTs(col("tu"), users, 7).as("ts"),
             col("event_type"))
-        val q = graft.operators.Sessionize.sessionsStream(ev, "user_id", "ts",
-            "15 seconds", "30 seconds", Seq(count(lit(1)).as("n_events")))
-          .writeStream.format("noop").outputMode("append")
-          .option("checkpointLocation", s"$dir/ckpt").start()
-        (q, users, t0)
-      } else if (mode == "twssession") {
+        val q = noopSink(graft.operators.Sessionize.sessionsStream(ev,
+            "user_id", "ts", "15 seconds", "30 seconds",
+            Seq(count(lit(1)).as("n_events"))), ckpt).start()
+        (q, users, rows.toLong, t0)
+      case "twssession" =>
         // the SAME gap-session workload as "session", but through the
         // transformWithState sessionizer on RocksDB state (explicit
         // timer registry, one SessState per active key) instead of the
@@ -431,12 +405,11 @@ object StreamBench {
         val t0 = markStart()
         val ev = journeyReader()
           .select(col("user_id"), jitterTs(col("tu"), users, 7).as("ts"))
-        val q = graft.streaming.TwsOps.sessionsTws(ev, "user_id", "ts",
-            gapUs = 15L * 1000000, watermark = "30 seconds")
-          .writeStream.format("noop").outputMode("append")
-          .option("checkpointLocation", s"$dir/ckpt").start()
-        (q, users, t0)
-      } else if (mode == "latency") {
+        val q = noopSink(graft.streaming.TwsOps.sessionsTws(ev, "user_id",
+            "ts", gapUs = 15L * 1000000, watermark = "30 seconds"), ckpt)
+          .start()
+        (q, users, rows.toLong, t0)
+      case "latency" =>
         // conversion-latency topology: TWO chained stateful operators —
         // conversionsStream (per-user journey state) feeding windowed
         // exact-percentile aggregation on completion time. tu is scaled
@@ -449,14 +422,12 @@ object StreamBench {
         val ds = journeyReader()
           .withColumn("tu", col("tu") * 1000)
           .as[graft.operators.Behavior.FunnelEvent]
-        val q = graft.operators.Behavior.conversionLatencyStream(
+        val q = noopSink(graft.operators.Behavior.conversionLatencyStream(
             graft.operators.Behavior.conversionsStream(
               ds, Seq("view", "click", "purchase")),
-            windowSec = 10)
-          .writeStream.format("noop").outputMode("append")
-          .option("checkpointLocation", s"$dir/ckpt").start()
-        (q, users, t0)
-      } else if (mode == "ann" || mode == "annsharded") {
+            windowSec = 10), ckpt).start()
+        (q, users, rows.toLong, t0)
+      case "ann" | "annsharded" =>
         // streaming ANN probe topology (E3's streaming twin): a stream
         // of query vectors probes a PERSISTED IVF index — built ONCE
         // before t0 (ivfCentroids + ivfAssign + ivfListGroups,
@@ -521,10 +492,7 @@ object StreamBench {
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         groups.count()
         val t0 = markStart()
-        val reader = spark.readStream.schema("vec_id LONG")
-          .option("header", "true")
-        if (filesPerTrigger != "0") reader.option("maxFilesPerTrigger", filesPerTrigger)
-        val qs = reader.csv(s"$dir/in")
+        val qs = source("vec_id LONG")
           .select(col("vec_id"),
             (if (annDim > 16)
                graft.ScaleSweep.embColumnWide(col("vec_id"), wideCenters,
@@ -537,21 +505,22 @@ object StreamBench {
           else
             graft.operators.Similarity.ivfProbeStream(groups, cents, qs,
               k = 10, nprobe = 2)
-        val q = probed
-          .writeStream.format("noop").outputMode("append")
-          .option("checkpointLocation", s"$dir/ckpt").start()
-        (q, nlist, t0)
-      } else {
-        // reference-shaped dataset (5s cadence; fleet size scales with
-        // volume so the time-of-day wire never wraps midnight)
+        (noopSink(probed, ckpt).start(), nlist, rows.toLong, t0)
+      case _ =>
+        // "join" (the reference shape: a stream-stream join of the two
+        // landed families), "pivot" (pivotAlerts: half the state, no
+        // join) and "interval" all read the reference wire, ×4 messages
+        // per dataset row. Reference-shaped dataset (5s cadence; fleet
+        // size scales with volume so the time-of-day wire never wraps
+        // midnight).
         val servers = writeSyntheticDay(spark, dir, rows)
         val t0 = markStart()
-        val reader = spark.readStream.schema(graft.core.Schemas.dataset)
-          .option("header", "true")
-        if (filesPerTrigger != "0") reader.option("maxFilesPerTrigger", filesPerTrigger)
-        val dataset = reader.csv(s"$dir/in")
+        val dataset = source(graft.core.Schemas.dataset.toDDL)
         val cfg = PipelineConfig.default
         val wire = StreamingPipeline.producerWire(dataset)
+        def family(topic: String) =
+          StreamingPipeline.landedTable(wire, cfg, topic)
+            .withColumn("ts", RefOps.anchorTimeOfDay(col("ts")))
         val alerts =
           if (mode == "interval") {
             // stream-stream INTERVAL join topology: cpu readings paired
@@ -560,95 +529,63 @@ object StreamBench {
             // (exact-ts equi-join only works because the reference's one
             // producer stamps both families on the same clock). State =
             // both sides' rows within tolerance+watermark per server.
-            val cpu = StreamingPipeline.landedTable(wire, cfg, cfg.cpuTopic)
-              .withColumn("ts", graft.operators.RefOps.anchorTimeOfDay(col("ts")))
-              .withColumnRenamed("ts", "c_ts")
-            val mem = StreamingPipeline.landedTable(wire, cfg, cfg.memTopic)
-              .withColumn("ts", graft.operators.RefOps.anchorTimeOfDay(col("ts")))
-              .withColumnRenamed("ts", "m_ts")
-            StreamingPipeline.intervalJoin(cpu, "c_ts", mem, "m_ts",
+            StreamingPipeline.intervalJoin(
+                family(cfg.cpuTopic).withColumnRenamed("ts", "c_ts"), "c_ts",
+                family(cfg.memTopic).withColumnRenamed("ts", "m_ts"), "m_ts",
                 "server_id", "10 seconds", "30 seconds")
               .select(col("server_id"), col("c_ts"), col("cpu_pct"),
                 col("mem_pct"),
                 (expr("unix_micros(m_ts)") - expr("unix_micros(c_ts)")).as("lag_us"))
-          } else if (mode == "pivot") {
-            // single-scan fan-in demux (landedFamilies) — the union form
-            // re-scans the source per family; see SCALE.md §Streaming
-            val landed = StreamingPipeline.landedFamilies(wire,
-                Seq(cfg.cpuTopic -> "cpu", cfg.memTopic -> "mem"))
-              .withColumn("ts", graft.operators.RefOps.anchorTimeOfDay(col("ts")))
-            StreamingPipeline.streamingJob1SingleSource(landed)
-          } else {
-            val cpu = StreamingPipeline.landedTable(wire, cfg, cfg.cpuTopic)
-              .withColumn("ts", graft.operators.RefOps.anchorTimeOfDay(col("ts")))
-            val mem = StreamingPipeline.landedTable(wire, cfg, cfg.memTopic)
-              .withColumn("ts", graft.operators.RefOps.anchorTimeOfDay(col("ts")))
-            StreamingPipeline.streamingJob1(cpu, mem)
-          }
-        val q = alerts.writeStream.format("noop").outputMode("append")
-          .option("checkpointLocation", s"$dir/ckpt").start()
-        (q, servers, t0)
-      }
-    if (mode == "tws") {
-      // perpetual-service drain: accumulate numInputRows across
-      // progress entries (the 100-entry ring is re-read every poll, so
-      // empty-batch flooding can't evict an unseen data batch) until
-      // every input row has been processed
-      val deadline = System.currentTimeMillis + 600000
-      var seen = 0L
-      var lastBatch = -1L
-      while (seen < rows && System.currentTimeMillis < deadline) {
-        // a dead query never advances progress: surface ITS error, not
-        // a 10-minute-later timeout that hides it
-        q.exception.foreach(e => { q.stop(); throw e })
-        q.recentProgress.foreach { p =>
-          if (p.batchId > lastBatch) { seen += p.numInputRows; lastBatch = p.batchId }
-        }
-        if (seen < rows) Thread.sleep(100)
-      }
-      if (seen < rows) {
-        q.stop()
-        throw new IllegalStateException(s"tws drain timed out at $seen/$rows rows")
-      }
-    } else q.processAllAvailable()
-    val secs = (System.nanoTime() - t0) / 1e9
-    val progress = q.recentProgress
-    q.stop()
-
-    val messages =
-      if (mode == "funnel" || mode == "latency" || mode == "bloom" ||
-        mode == "session" || mode == "dedup" || mode == "lsh" ||
-        mode == "logit" || mode == "drift" || mode == "kmv" ||
-        mode == "tws" || mode == "twssession" || mode == "interp" ||
-        mode == "debounce" || mode == "heavyhitter" || mode == "ann" ||
-        mode == "annsharded") rows.toLong
-      else if (mode == "asof") rows.toLong + rows / 10
-      else rows.toLong * 4
-    val windows = progress.map(_.stateOperators.headOption.map(_.numRowsTotal).getOrElse(0L)).maxOption.getOrElse(0L)
-    // stages submitted before the measurement's wall-clock mark (taken
-    // at the same instant as the branch's nanoTime t0 — markStart) are
-    // the input GENERATION — excluded, so cpu_ms covers the run only
-    Bench.drainListenerBus(spark)
-    spark.sparkContext.removeSparkListener(acctListener)
-    var taskMs = 0L
-    var cpuMs = 0L
-    stageAcct.forEach { case (sub, t, c) =>
-      if (sub >= wallMark) { taskMs += t; cpuMs += c }
+          } else if (mode == "pivot") pivotAlerts(dataset)
+          else StreamingPipeline.streamingJob1(family(cfg.cpuTopic),
+            family(cfg.memTopic))
+        (noopSink(alerts, ckpt).start(), servers, rows.toLong * 4, t0)
     }
-    val rowsPerCpuSec = if (cpuMs > 0) (rows * 1000.0 / cpuMs).round else -1L
-    println(s"""{"metric":"stream_rows_per_sec","mode":"$mode","value":${(rows / secs).round},"unit":"rows/sec","dataset_rows":$rows,"keys":$keys,"wire_messages":$messages,"state_rows":$windows,"wall_sec":${math.round(secs * 100) / 100.0},"task_ms":$taskMs,"cpu_ms":$cpuMs,"rows_per_cpu_sec":$rowsPerCpuSec}""")
+
+    val ((secs, progress, keys, messages), metrics) =
+      StageMetrics.during(spark) { _ =>
+        val (q, keys, messages, t0) = startRun()
+        if (mode == "tws") {
+          // perpetual-service drain: accumulate numInputRows across
+          // progress entries (the 100-entry ring is re-read every poll, so
+          // empty-batch flooding can't evict an unseen data batch) until
+          // every input row has been processed
+          val deadline = System.currentTimeMillis + 600000
+          var seen = 0L
+          var lastBatch = -1L
+          while (seen < rows && System.currentTimeMillis < deadline) {
+            // a dead query never advances progress: surface ITS error, not
+            // a 10-minute-later timeout that hides it
+            q.exception.foreach(e => { q.stop(); throw e })
+            q.recentProgress.foreach { p =>
+              if (p.batchId > lastBatch) { seen += p.numInputRows; lastBatch = p.batchId }
+            }
+            if (seen < rows) Thread.sleep(100)
+          }
+          if (seen < rows) {
+            q.stop()
+            throw new IllegalStateException(s"tws drain timed out at $seen/$rows rows")
+          }
+        } else q.processAllAvailable()
+        val secs = (System.nanoTime() - t0) / 1e9
+        val progress = q.recentProgress
+        q.stop()
+        (secs, progress, keys, messages)
+      }
+
+    val windows = progress.map(_.stateOperators.headOption.map(_.numRowsTotal).getOrElse(0L)).maxOption.getOrElse(0L)
+    val t = metrics.totals(wallMark)
+    val rowsPerCpuSec = if (t.cpuMs > 0) (rows * 1000.0 / t.cpuMs).round else -1L
+    println(s"""{"metric":"stream_rows_per_sec","mode":"$mode","value":${(rows / secs).round},"unit":"rows/sec","dataset_rows":$rows,"keys":$keys,"wire_messages":$messages,"state_rows":$windows,"wall_sec":${math.round(secs * 100) / 100.0},"task_ms":${t.taskMs},"cpu_ms":${t.cpuMs},"rows_per_cpu_sec":$rowsPerCpuSec}""")
     // Where the wall time goes, summed over micro-batches (milliseconds):
     // addBatch = run the batch's job (scan+parse+agg+state), walCommit +
     // commitOffsets = checkpoint fsyncs, queryPlanning = incremental
     // re-plan per trigger — the fixed costs that bound small-volume
     // throughput (see SCALE.md §Streaming).
-    val phases = Seq("addBatch", "getBatch", "latestOffset", "queryPlanning",
+    val phases = phaseTotals(progress)
+    val sums = Seq("addBatch", "getBatch", "latestOffset", "queryPlanning",
       "walCommit", "commitOffsets", "triggerExecution")
-    val sums = phases.map { p =>
-      val total = progress.map(pr =>
-        Option(pr.durationMs.get(p)).map(_.longValue).getOrElse(0L)).sum
-      s""""$p":$total"""
-    }.mkString(",")
+      .map(p => s""""$p":${phases.getOrElse(p, 0L)}""").mkString(",")
     println(s"""{"metric":"stream_phase_ms","mode":"$mode","batches":${progress.length},$sums}""")
     spark.stop()
   }

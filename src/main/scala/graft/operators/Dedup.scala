@@ -704,11 +704,16 @@ object Dedup {
     * "Connected Components in MapReduce and Beyond" (SOCC '14) — the
     * doubling-style contraction that closes chains in O(log d) rounds
     * instead of label propagation's O(d). Each application is one
-    * groupBy + one equi-join + a distinct — all keyed by node id,
-    * nothing quadratic. Emitted edges can't be self-loops
-    * (m ≤ u < dst).
+    * groupBy + one equi-join — all keyed by node id, nothing
+    * quadratic. Emitted edges can't be self-loops (m ≤ u < dst).
+    *
+    * @note Only [[smallStar]] may consume this; rows may repeat. The
+    * output is a MULTISET of edges (no trailing distinct): smallStar
+    * re-orients and dedups its input, so the composed round's edge SET
+    * is exact, but any other consumer (a convergence count, a labels
+    * pass) would count an edge once per copy.
     */
-  private def largeStar(edges: DataFrame): DataFrame = {
+  private def largeStarMultiset(edges: DataFrame): DataFrame = {
     // r16 (one exchange for the whole contraction): repartition the
     // symmetrized neighborhood by src ONCE — the min-neighbor aggregate
     // runs exchange-free on it (subset rule) and both join sides arrive
@@ -720,8 +725,6 @@ object Dedup {
     // dedups its input, so the composed round's edge SET is unchanged
     // (min() and the orientation are duplicate-insensitive) and the
     // distinct's full-width exchange + aggregate was pure overhead.
-    // NOTE the composition contract: largeStar output is only
-    // consumed by smallStar (it may carry duplicate rows).
     val sym = edges.unionByName(
         edges.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(col("src"))
@@ -735,10 +738,10 @@ object Dedup {
   /** One small-star contraction: orient every edge (larger, smaller);
     * for each node u connect its smaller neighbors — and u itself — to
     * m = min of those neighbors. Self-loop-free for the same reason as
-    * [[largeStar]] (m ≤ v < u on every emitted edge).
+    * [[largeStarMultiset]] (m ≤ v < u on every emitted edge).
     */
   private def smallStar(edges: DataFrame): DataFrame = {
-    // r16: same one-exchange discipline as [[largeStar]] — the
+    // r16: same one-exchange discipline as [[largeStarMultiset]] — the
     // orientation dedup runs ON a hash(u) repartition (subset rule:
     // {u} ⊆ {u, v}), which then also serves the min aggregate and both
     // join sides exchange-free. Only the final union distinct pays its
@@ -801,7 +804,7 @@ object Dedup {
       }
     while (!converged && rounds < maxIter) {
       val before = sc.getPersistentRDDs.keySet
-      val next = smallStar(largeStar(edges)).localCheckpoint()
+      val next = smallStar(largeStarMultiset(edges)).localCheckpoint()
       val thisRoundRdds = (sc.getPersistentRDDs -- before).values.map { r =>
         r.setName(s"graft.connectedComponentsStar round $rounds"); r
       }

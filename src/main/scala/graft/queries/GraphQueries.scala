@@ -322,6 +322,11 @@ object GraphQueries {
     * where sqrt normalization could never be). Output: one row per
     * node, (kind ∈ {hub, auth}, node, score) after the final round.
     *
+    * Input edge multiplicity is ignored: each distinct (c, s) pair
+    * counts once, however many times it appears in `edges0` (the dedup
+    * runs inside, on the edge checkpoint), so a multiplicity-weighted
+    * HITS cannot be expressed by repeating edges.
+    *
     * Overflow safety is UNCONDITIONAL on graph shape: each raw score
     * is a sum of normalized scores, so ar ≤ S and the scaled product
     * ar·S ≤ S² = 10¹⁸ < int64 max; the normalizer t = Σ ar ≤

@@ -6,6 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.StageMetrics
 import graft.sources.AuditSink
 
 /** Duplicate-ATTEMPT twin of [[TaskRetrySpec]]: that spec proves a
@@ -181,7 +182,7 @@ class DuplicateAttemptSpec extends AnyFunSuite with BeforeAndAfterAll {
           .write.format("auditsink").mode("append")
           .option("channel", "dup_race").save()
       } finally {
-        Bench.drainListenerBus(spark)
+        StageMetrics.drain(spark)
         spark.sparkContext.removeSparkListener(listener)
       }
       // the race proof: some stage must have run TWO attempts of one
@@ -282,7 +283,7 @@ class DuplicateAttemptSpec extends AnyFunSuite with BeforeAndAfterAll {
         write("loss_race", straggle = true)
         killer.join(5000)
       } finally {
-        Bench.drainListenerBus(spark)
+        StageMetrics.drain(spark)
         spark.sparkContext.removeSparkListener(listener)
       }
       assert(stragglerExec != null, "straggler task never started")
@@ -395,7 +396,7 @@ class DuplicateAttemptSpec extends AnyFunSuite with BeforeAndAfterAll {
         src.addData(trace.take(3): _*)
         q.processAllAvailable() // phase 1 committed on BOTH executors
 
-        Bench.drainListenerBus(spark) // the stateful stage's task starts
+        StageMetrics.drain(spark) // the stateful stage's task starts
         assert(stateHostExec != null,
           "never observed the state partition's task — stage shape changed?")
         val killed = stateHostExec
@@ -407,7 +408,7 @@ class DuplicateAttemptSpec extends AnyFunSuite with BeforeAndAfterAll {
 
         src.addData(trace.drop(3): _*)
         q.processAllAvailable() // phase 2: state reloads on the survivor
-        Bench.drainListenerBus(spark)
+        StageMetrics.drain(spark)
         // non-vacuity receipt: phase 2's copy of the state partition ran
         // somewhere OTHER than the executor that held it — the reload
         // really was a reload, not the old resident store
@@ -420,7 +421,7 @@ class DuplicateAttemptSpec extends AnyFunSuite with BeforeAndAfterAll {
           r.getLong(3))).toSeq.sortBy(_._2)
       assert(out == expected)
     } finally {
-      Bench.drainListenerBus(spark)
+      StageMetrics.drain(spark)
       spark.sparkContext.removeSparkListener(listener)
       prev match {
         case Some(v) => spark.conf.set(key, v)

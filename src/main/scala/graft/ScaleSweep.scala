@@ -4,12 +4,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.PipelineConfig
-import graft.core.PipelineConfig.Alerts
 import graft.operators.RefOps
 
 /** Scaling-curve harness: the reference monitor pipeline shape
   * (`spark_jobs/spark_job1.py:6-60` — two metric families, multi-key
-  * join, 30s/10s sliding-window avg, CASE alerts) over the `metricgen`
+  * join semantics, 30s/10s sliding-window avg, CASE alerts; computed by
+  * [[graft.operators.RefOps.alertJob]]) over the `metricgen`
   * DataSource V2 at geometrically increasing row counts, one JSON line
   * per point. Because the source generates (zero I/O, exact pushdown),
   * the sweep isolates the PIPELINE's scaling behavior: a plan whose
@@ -25,9 +25,9 @@ import graft.operators.RefOps
   */
 object ScaleSweep {
 
-  /** job1 over generated families: derive cpu and mem frames from two
-    * independent scans (reference parity: two landed tables, real
-    * multi-key shuffle join, not a projection of one frame).
+  /** job1 over generated families: cpu and mem frames from two
+    * independent scans (reference parity: two landed tables, not a
+    * projection of one frame), through [[RefOps.alertJob]] with `avg`.
     */
   def monitorOverGen(spark: org.apache.spark.sql.SparkSession,
       rows: Long, servers: Long): DataFrame = {
@@ -36,14 +36,8 @@ object ScaleSweep {
         .option("rows", rows).option("servers", servers).load()
         .select((Seq("ts", "server_id") ++ cols).map(col): _*)
     val cfg = PipelineConfig.default
-    val joined = RefOps.joinOnKeys(family("cpu_pct"), family("mem_pct"))
-    val agged = RefOps.slidingWindowAgg(joined, "server_id",
-      Seq(avg(col("cpu_pct")).as("avg_cpu"),
-        avg(col("mem_pct")).as("avg_mem")), cfg)
-    agged.withColumn("alert",
-      RefOps.classifyAlerts(col("avg_cpu"), cfg.cpuThreshold,
-        col("avg_mem"), cfg.memThreshold,
-        Alerts.cpuMemBoth, Alerts.cpuOnly, Alerts.memOnly))
+    RefOps.alertJob(family("cpu_pct"), family("mem_pct"),
+      RefOps.AlertPair.cpuMem(cfg), RefOps.AlertAgg.Avg, cfg)
   }
 
   /** Synthetic corpus for the dedup sweep: 12 pseudo-words, ids mapped

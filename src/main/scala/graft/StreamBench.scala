@@ -507,9 +507,11 @@ object StreamBench {
               k = 10, nprobe = 2)
         (noopSink(probed, ckpt).start(), nlist, rows.toLong, t0)
       case _ =>
-        // "join" (the reference shape: a stream-stream join of the two
-        // landed families), "pivot" (pivotAlerts: half the state, no
-        // join) and "interval" all read the reference wire, ×4 messages
+        // "join" (the reference job1 over two landed families,
+        // streamingJob1: join semantics, eager-aggregated into two
+        // stateful aggregates), "pivot" (pivotAlerts: one stateful
+        // aggregate, not job1's semantics on duplicate or one-sided ts)
+        // and "interval" all read the reference wire, ×4 messages
         // per dataset row. Reference-shaped dataset (5s cadence; fleet
         // size scales with volume so the time-of-day wire never wraps
         // midnight).

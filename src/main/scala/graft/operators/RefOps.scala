@@ -1,7 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{MakeDecimal, UnscaledValue}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.DecimalType
 import graft.core.PipelineConfig
 
 /** The reference's full relational-operator surface (SURVEY.md §2.1) as
@@ -55,13 +58,10 @@ object RefOps {
   // -------------------------------------------------------------------
   // J1 — multi-key inner equi-join, USING semantics
   // (`spark_jobs/spark_job1.py:18`): `Seq(...)` usingColumns dedups the
-  // key columns exactly like PySpark's `on=[...]`.
-  //
-  // Scale: both sides are large fact streams keyed the same way → this
-  // is a shuffle join on (ts, server_id); no broadcast (neither side is
-  // a dim). AQE handles skew. The reference joins on the *raw string*
-  // keys before casts; we keep key-compatible semantics but join after
-  // casting (equal keys remain equal — anchoring is injective per day).
+  // key columns exactly like PySpark's `on=[...]`. The reference joins
+  // on the *raw string* keys before casts; we join after casting (equal
+  // keys remain equal — anchoring is injective per day). Only the
+  // golden-pinned batch jobs join; [[alertJob]] aggregates the join away.
   // -------------------------------------------------------------------
   def joinOnKeys(left: DataFrame, right: DataFrame,
                  keys: Seq[String] = Seq("ts", "server_id")): DataFrame =
@@ -93,19 +93,118 @@ object RefOps {
       .when(bCol > bThr, bAlert)
       .otherwise(PipelineConfig.Alerts.ok)
 
+  /** The aggregate an alert job finishes each window with: Spark's
+    * `avg` (non-null sum / non-null count), the catalog's `davg`
+    * ([[graft.queries.davg]]: exact DECIMAL(18,6) sum / ROW count) or `max`.
+    */
+  sealed trait AlertAgg
+  object AlertAgg {
+    case object Avg extends AlertAgg
+    case object DAvg extends AlertAgg
+    case object Max extends AlertAgg
+  }
+
+  /** One metric-family pair of the reference jobs: per side the metric
+    * column, its output name and threshold, then the CASE strings.
+    */
+  final case class AlertPair(a: String, aOut: String, aThr: Double,
+                             b: String, bOut: String, bThr: Double,
+                             both: String, aOnly: String, bOnly: String) {
+    /** F2 + F3 over the two output columns. */
+    def alert: Column = classifyAlerts(col(aOut), aThr, col(bOut), bThr, both, aOnly, bOnly)
+  }
+  object AlertPair {
+    import PipelineConfig.Alerts._
+    /** job1 (`spark_jobs/spark_job1.py`): cpu + mem. */
+    def cpuMem(cfg: PipelineConfig): AlertPair = AlertPair("cpu_pct", "avg_cpu", cfg.cpuThreshold,
+      "mem_pct", "avg_mem", cfg.memThreshold, cpuMemBoth, cpuOnly, memOnly)
+    /** job2 (`spark_jobs/spark_job2.py`): net-in + disk-io. */
+    def netDisk(cfg: PipelineConfig): AlertPair = AlertPair("net_in", "max_net_in", cfg.netInThreshold,
+      "disk_io", "max_disk_io", cfg.diskIoThreshold, netDiskBoth, netOnly, diskOnly)
+  }
+
+  /** J1 → A1–A3 → F2/F3 without the join, for batch and stream: the
+    * inner join of `a` and `b` on (ts, server_id), a sliding window per
+    * server, `agg` per side and the CASE alert, eager-aggregated (Yan &
+    * Larson, "Eager Aggregation and Lazy Aggregation", VLDB 1995).
+    *
+    * Each side is watermarked on `ts` (a no-op in batch) and tagged; a
+    * null `ts` or `server_id` drops the row, as the inner join does.
+    * Aggregate 1, per (server_id, ts) and side: row count n, non-null
+    * count nn, sum (or max). Only ts present on both sides survive, each
+    * side weighted by the other's n (the join's multiplicity).
+    * Aggregate 2, per (server_id, window), finishes:
+    *  - `Avg`:  Σ n_b·sum_a / Σ n_b·nn_a; null when every a-metric of
+    *    the window is null. Double sums merge in another order than the
+    *    join form's: equal within rounding error, not bitwise.
+    *  - `DAvg`: double(Σ n_b·dsum_a) / Σ n_a·n_b: a null metric counts as
+    *    a row and adds nothing; all-null is null. The DECIMAL(18,6) sums
+    *    run in exact long micro-units, so this is bit-equal to the join
+    *    form while |Σ n_b·dsum_a| of a window stays below 9.2·10^12
+    *    (2^63 micro-units); past that, ANSI arithmetic fails the query.
+    *  - `Max`:  max of max_a over the surviving ts. Bit-equal.
+    *
+    * Output: (server_id, window_start, window_end, aOut, bOut, alert).
+    * In streaming (Append) both aggregates are stateful and watermark-
+    * bounded, and a window closes in the micro-batch the join form
+    * closes it in. A checkpoint written by the former stream-stream join
+    * plan cannot be resumed by this one: start on a fresh checkpoint.
+    */
+  def alertJob(a: DataFrame, b: DataFrame, pair: AlertPair, agg: AlertAgg,
+               cfg: PipelineConfig = PipelineConfig.default): DataFrame = {
+    def side(df: DataFrame, isA: Boolean, metric: String, v: String): DataFrame =
+      df.withWatermark("ts", cfg.watermark)
+        .select(col("ts"), col("server_id"), lit(isA).as("is_a"), col(metric).as(v))
+    def partial(v: String): Column = agg match {
+      case AlertAgg.Avg => sum(col(v))
+      case AlertAgg.DAvg => sum(ColumnBridge.column(UnscaledValue(
+        ColumnBridge.expression(col(v).cast(DecimalType(18, 6))))))
+      case AlertAgg.Max => max(col(v))
+    }
+    def weighted(p: String, n: String): Column =
+      if (agg == AlertAgg.Max) col(p) else col(n) * col(p)
+    val perTs = side(a, isA = true, pair.a, "va")
+      .unionByName(side(b, isA = false, pair.b, "vb"), allowMissingColumns = true)
+      .filter(col("ts").isNotNull && col("server_id").isNotNull)
+      .groupBy(col("server_id"), col("ts"))
+      .agg(count_if(col("is_a")).as("na"), count_if(!col("is_a")).as("nb"),
+        count(col("va")).as("nna"), count(col("vb")).as("nnb"),
+        partial("va").as("pa"), partial("vb").as("pb"))
+      .filter(col("na") > 0 && col("nb") > 0)
+      .select(col("server_id"), col("ts"),
+        weighted("pa", "nb").as("wa"), weighted("pb", "na").as("wb"),
+        (col("nb") * col("nna")).as("da"), (col("na") * col("nnb")).as("db"),
+        (col("na") * col("nb")).as("n"))
+    def finish(w: String, d: String): Column = agg match {
+      case AlertAgg.Avg => when(sum(col(d)) =!= 0, sum(col(w)) / sum(col(d)))
+      case AlertAgg.DAvg => ColumnBridge.column(MakeDecimal(ColumnBridge.expression(
+        sum(col(w))), 38, 6)).cast("double") / sum(col("n"))
+      case AlertAgg.Max => max(col(w))
+    }
+    alertTail(
+      perTs.groupBy(col("server_id"), window(col("ts"), cfg.windowDuration, cfg.slideDuration))
+        .agg(finish("wa", "da").as(pair.aOut), finish("wb", "db").as(pair.bOut)),
+      pair)
+  }
+
+  /** F2/F3 + window projection: (server_id, window, aOut, bOut) →
+    * (server_id, window_start, window_end, aOut, bOut, alert). */
+  def alertTail(windowed: DataFrame, pair: AlertPair): DataFrame =
+    windowed.select(col("server_id"),
+      col("window.start").as("window_start"), col("window.end").as("window_end"),
+      col(pair.aOut), col(pair.bOut), pair.alert.as("alert"))
+
   // -------------------------------------------------------------------
   // P5–P8 — final output projection (`spark_jobs/spark_job1.py:47-54`):
-  // window struct access, HH:mm:ss formatting, round(2), aliases.
+  // window struct access, HH:mm:ss formatting, round(2), aliases; the
+  // alert is classified on the unrounded (server_id, window, aOut, bOut).
   // -------------------------------------------------------------------
-  def formatAlertOutput(df: DataFrame, keyOut: String,
-                        metricAliases: Seq[(String, String)]): DataFrame = {
-    val metricCols = metricAliases.map { case (in, out) => round(col(in), 2).as(out) }
-    df.select(
-      Seq(col(df.columns.head).as(keyOut),
-          date_format(col("window.start"), "HH:mm:ss").as("window_start"),
-          date_format(col("window.end"), "HH:mm:ss").as("window_end")) ++
-        metricCols :+ col("alert"): _*)
-  }
+  def formatAlertOutput(df: DataFrame, pair: AlertPair): DataFrame =
+    df.select(col("server_id"),
+      date_format(col("window.start"), "HH:mm:ss").as("window_start"),
+      date_format(col("window.end"), "HH:mm:ss").as("window_end"),
+      round(col(pair.aOut), 2).as(pair.aOut), round(col(pair.bOut), 2).as(pair.bOut),
+      pair.alert.as("alert"))
 
   // -------------------------------------------------------------------
   // P1 — CSV-string encode (`producer/producer.py:68-71`): row → wire

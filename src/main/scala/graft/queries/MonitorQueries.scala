@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.core.{PipelineConfig, Tables}
 import graft.operators.RefOps
+import graft.operators.RefOps.{AlertAgg, AlertPair}
 import PipelineConfig.Alerts
 
 /** The reference's own query surface (SURVEY.md §2.1), phrased over the
@@ -27,23 +28,6 @@ object MonitorQueries {
 
   private val cfg = PipelineConfig.default
 
-  /** events → cpu-family table: (ts, server_id, cpu_pct). */
-  private def cpuTable(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d).select(col("ts"), col("user_id").as("server_id"),
-      col("value").as("cpu_pct"))
-
-  /** events → mem-family table; 100 - value/5 spreads rows across all
-    * four CASE branches given the fixture's value range (0.01–490).
-    */
-  private def memTable(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d).select(col("ts"), col("user_id").as("server_id"),
-      (lit(100.0) - col("value") / 5).as("mem_pct"))
-
-  private def windowBoundsAsEpoch(df: DataFrame): DataFrame =
-    df.withColumn("window_start", col("window.start").cast("long"))
-      .withColumn("window_end", col("window.end").cast("long"))
-      .drop("window")
-
   /** Wire dataset for fan-out/encode/decode queries: integer-valued
     * metric columns so the CSV string form is byte-identical across
     * engines (double→string formatting is engine-specific; bigint is not).
@@ -60,31 +44,26 @@ object MonitorQueries {
       (floor(col("value")) * 2).cast("long").as("net_out"),
       (floor(col("value")) * 20).cast("long").as("disk_io"))
 
-  /** The reference job1 pipeline end-to-end (J1→A1/A2→F2/F3→P5) on the
-    * events fixture. Two shuffles total: join keys, group keys — same
-    * exchange count as the reference plan (SURVEY.md §3.3). Shared by
+  /** [[RefOps.alertJob]] over two metric families of `events`, each
+    * (ts, user_id AS server_id, an expression of `value`); window bounds
+    * as epoch seconds. No join: the two exchanges are the (server_id,
+    * ts) and the (server_id, window) aggregates'. */
+  private def monitorJob(s: SparkSession, d: String, pair: AlertPair, agg: AlertAgg,
+                         a: Column, b: Column): DataFrame = {
+    def family(metric: String, v: Column) =
+      Tables.events(s, d).select(col("ts"), col("user_id").as("server_id"), v.as(metric))
+    RefOps.alertJob(family(pair.a, a), family(pair.b, b), pair, agg, cfg)
+      .withColumn("window_start", col("window_start").cast("long"))
+      .withColumn("window_end", col("window_end").cast("long"))
+  }
+
+  /** job1 on the events fixture with `davg` (bit-equal to the join
+    * form); mem = 100 - value/5 spreads rows across all four CASE
+    * branches given the fixture's value range (0.01–490). Shared by
     * `q_monitor_pipeline` and `q_alert_transitions`.
     */
-  private def monitorPipeline(s: SparkSession, d: String): DataFrame = {
-    // spreadByKey between the join and the window aggregation (r15):
-    // at fixture scale AQE broadcasts one events side, so scan + join
-    // + window Expand + partial agg all collapse into the single-split
-    // scan stage — one task did the whole decimal-avg kernel
-    // (cpu_ms ≈ wall·1000). server_id partitioning ⊆ the
-    // (server_id, window) group keys, so the final aggregate runs
-    // exchange-free on top of this one exchange.
-    val joined = graft.operators.spreadByKey(
-      RefOps.joinOnKeys(cpuTable(s, d), memTable(s, d)), col("server_id"))
-    val agged = RefOps.slidingWindowAgg(joined, "server_id",
-      Seq(davg(col("cpu_pct")).as("avg_cpu"), davg(col("mem_pct")).as("avg_mem")), cfg)
-    val alerted = agged.withColumn("alert",
-      RefOps.classifyAlerts(col("avg_cpu"), cfg.cpuThreshold,
-        col("avg_mem"), cfg.memThreshold,
-        Alerts.cpuMemBoth, Alerts.cpuOnly, Alerts.memOnly))
-    windowBoundsAsEpoch(alerted)
-      .select(col("server_id"), col("window_start"), col("window_end"),
-        col("avg_cpu"), col("avg_mem"), col("alert"))
-  }
+  private def monitorPipeline(s: SparkSession, d: String): DataFrame =
+    monitorJob(s, d, AlertPair.cpuMem(cfg), AlertAgg.DAvg, col("value"), lit(100.0) - col("value") / 5)
 
   val queries: Map[String, Q] = Map(
     "q_monitor_pipeline" -> (monitorPipeline(_, _)),
@@ -115,26 +94,8 @@ object MonitorQueries {
 
     // job2 shape: sliding-window max (A3) + its CASE chain. max over
     // doubles is exact, no decimal detour needed.
-    "q_monitor_max" -> ((s, d) => {
-      val net = Tables.events(s, d).select(col("ts"),
-        col("user_id").as("server_id"), (col("value") * 40).as("net_in"))
-      val disk = Tables.events(s, d).select(col("ts"),
-        col("user_id").as("server_id"), (col("value") * 20).as("disk_io"))
-      // NOT spread (r15): monitorPipeline's spread was tried here too
-      // and regressed 0.88 → 0.95 s — the max kernel is ~0.4 s of CPU,
-      // cheaper than the extra exchange it would ride on.
-      val joined = RefOps.joinOnKeys(net, disk)
-      val agged = RefOps.slidingWindowAgg(joined, "server_id",
-        Seq(max(col("net_in")).as("max_net_in"),
-          max(col("disk_io")).as("max_disk_io")), cfg)
-      val alerted = agged.withColumn("alert",
-        RefOps.classifyAlerts(col("max_net_in"), cfg.netInThreshold,
-          col("max_disk_io"), cfg.diskIoThreshold,
-          Alerts.netDiskBoth, Alerts.netOnly, Alerts.diskOnly))
-      windowBoundsAsEpoch(alerted)
-        .select(col("server_id"), col("window_start"), col("window_end"),
-          col("max_net_in"), col("max_disk_io"), col("alert"))
-    }),
+    "q_monitor_max" -> ((s, d) =>
+      monitorJob(s, d, AlertPair.netDisk(cfg), AlertAgg.Max, col("value") * 40, col("value") * 20)),
 
     // Row-level CASE-WHEN classification (F2/F3) without the window, to
     // pin the order-sensitive branch semantics on raw values.
@@ -143,9 +104,7 @@ object MonitorQueries {
         .withColumn("cpu_pct", col("value"))
         .withColumn("mem_pct", lit(100.0) - col("value") / 5)
       ev.select(col("event_id"), col("cpu_pct"), col("mem_pct"),
-        RefOps.classifyAlerts(col("cpu_pct"), cfg.cpuThreshold,
-          col("mem_pct"), cfg.memThreshold,
-          Alerts.cpuMemBoth, Alerts.cpuOnly, Alerts.memOnly).as("alert"))
+        AlertPair.cpuMem(cfg).copy(aOut = "cpu_pct", bOut = "mem_pct").alert.as("alert"))
     }),
 
     // K1+A4: 4-way topic fan-out then per-topic delivery accounting.
@@ -175,17 +134,11 @@ object MonitorQueries {
 
     // A1 in isolation: window expansion row-multiplication (×3 for
     // 30s/10s) — the TimeWindowing/Expand rewrite, SURVEY.md §4.
-    "q_window_counts" -> ((s, d) => {
-      // NOT spread (r15): tried the monitorPipeline spread; count+dsum
-      // over the ×3 Expand is too cheap to pay for the extra exchange
-      // (0.70 → 0.76 s measured).
-      val ev = Tables.events(s, d)
-      windowBoundsAsEpoch(
-        ev.groupBy(col("user_id"), window(col("ts"), cfg.windowDuration, cfg.slideDuration))
-          .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("sum_value")))
-        .select(col("user_id"), col("window_start"), col("window_end"),
-          col("n_events"), col("sum_value"))
-    })
+    "q_window_counts" -> ((s, d) =>
+      RefOps.slidingWindowAgg(Tables.events(s, d), "user_id",
+          Seq(count(lit(1)).as("n_events"), dsum(col("value")).as("sum_value")), cfg)
+        .select(col("user_id"), col("window.start").cast("long").as("window_start"),
+          col("window.end").cast("long").as("window_end"), col("n_events"), col("sum_value")))
   )
 
   /** DuckDB sliding-window expansion fragment (see class doc). */
@@ -195,16 +148,11 @@ object MonitorQueries {
        |  CAST(floor(epoch_ms(ts)/10000.0)*10 AS BIGINT) - off + 30 AS window_end
        |FROM ($src) CROSS JOIN (SELECT unnest([0,10,20]) AS off) offs""".stripMargin
 
-  private val alertCase1 =
-    s"""CASE WHEN avg_cpu > ${cfg.cpuThreshold} AND avg_mem > ${cfg.memThreshold} THEN '${Alerts.cpuMemBoth}'
-       |     WHEN avg_cpu > ${cfg.cpuThreshold} THEN '${Alerts.cpuOnly}'
-       |     WHEN avg_mem > ${cfg.memThreshold} THEN '${Alerts.memOnly}'
-       |     ELSE '${Alerts.ok}' END""".stripMargin
-
-  private val alertCase2 =
-    s"""CASE WHEN max_net_in > ${cfg.netInThreshold} AND max_disk_io > ${cfg.diskIoThreshold} THEN '${Alerts.netDiskBoth}'
-       |     WHEN max_net_in > ${cfg.netInThreshold} THEN '${Alerts.netOnly}'
-       |     WHEN max_disk_io > ${cfg.diskIoThreshold} THEN '${Alerts.diskOnly}'
+  /** DuckDB twin of [[AlertPair.alert]]. */
+  private def alertCaseSql(p: AlertPair): String =
+    s"""CASE WHEN ${p.aOut} > ${p.aThr} AND ${p.bOut} > ${p.bThr} THEN '${p.both}'
+       |     WHEN ${p.aOut} > ${p.aThr} THEN '${p.aOnly}'
+       |     WHEN ${p.bOut} > ${p.bThr} THEN '${p.bOnly}'
        |     ELSE '${Alerts.ok}' END""".stripMargin
 
   private val wireDatasetSql =
@@ -226,22 +174,28 @@ object MonitorQueries {
        |UNION ALL
        |SELECT 'topic-disk', concat_ws(',', ts, server_id, disk_io) FROM w""".stripMargin
 
-  private val monitorPipelineSql =
+  /** DuckDB twin of `monitorJob`, in the literal join form: join on
+    * (ts, server_id) → window expansion → `agg` per window → CASE.
+    */
+  private def monitorJobSql(p: AlertPair, agg: String => String, a: String, b: String): String =
     s"""WITH j AS (
-       |  SELECT c.ts, c.server_id, c.cpu_pct, m.mem_pct
-       |  FROM (SELECT ts, user_id AS server_id, value AS cpu_pct FROM events) c
-       |  JOIN (SELECT ts, user_id AS server_id, 100.0 - value/5 AS mem_pct FROM events) m
-       |    ON c.ts = m.ts AND c.server_id = m.server_id
+       |  SELECT x.ts, x.server_id, x.${p.a}, y.${p.b}
+       |  FROM (SELECT ts, user_id AS server_id, $a AS ${p.a} FROM events) x
+       |  JOIN (SELECT ts, user_id AS server_id, $b AS ${p.b} FROM events) y
+       |    ON x.ts = y.ts AND x.server_id = y.server_id
        |), e AS (${expandWindows("SELECT * FROM j")}),
        |a AS (
        |  SELECT server_id, window_start, window_end,
-       |    ${sqlDavg("cpu_pct")} AS avg_cpu,
-       |    ${sqlDavg("mem_pct")} AS avg_mem
+       |    ${agg(p.a)} AS ${p.aOut},
+       |    ${agg(p.b)} AS ${p.bOut}
        |  FROM e GROUP BY server_id, window_start, window_end
        |)
-       |SELECT server_id, window_start, window_end, avg_cpu, avg_mem,
-       |  $alertCase1 AS alert
+       |SELECT server_id, window_start, window_end, ${p.aOut}, ${p.bOut},
+       |  ${alertCaseSql(p)} AS alert
        |FROM a""".stripMargin
+
+  private val monitorPipelineSql =
+    monitorJobSql(AlertPair.cpuMem(cfg), sqlDavg, "value", "100.0 - value/5")
 
   val oracles: Map[String, String] = Map(
     "q_monitor_pipeline" -> monitorPipelineSql,
@@ -279,27 +233,14 @@ object MonitorQueries {
          |FROM t WHERE prev IS NULL OR prev <> alert""".stripMargin,
 
     "q_monitor_max" ->
-      s"""WITH j AS (
-         |  SELECT n.ts, n.server_id, n.net_in, k.disk_io
-         |  FROM (SELECT ts, user_id AS server_id, value * 40 AS net_in FROM events) n
-         |  JOIN (SELECT ts, user_id AS server_id, value * 20 AS disk_io FROM events) k
-         |    ON n.ts = k.ts AND n.server_id = k.server_id
-         |), e AS (${expandWindows("SELECT * FROM j")}),
-         |a AS (
-         |  SELECT server_id, window_start, window_end,
-         |    MAX(net_in) AS max_net_in, MAX(disk_io) AS max_disk_io
-         |  FROM e GROUP BY server_id, window_start, window_end
-         |)
-         |SELECT server_id, window_start, window_end, max_net_in, max_disk_io,
-         |  $alertCase2 AS alert
-         |FROM a""".stripMargin,
+      monitorJobSql(AlertPair.netDisk(cfg), x => s"MAX($x)", "value * 40", "value * 20"),
 
     "q_case_when" ->
       s"""WITH v AS (
          |  SELECT event_id, value AS cpu_pct, 100.0 - value/5 AS mem_pct FROM events
          |)
          |SELECT event_id, cpu_pct, mem_pct,
-         |  ${alertCase1.replace("avg_cpu", "cpu_pct").replace("avg_mem", "mem_pct")} AS alert
+         |  ${alertCaseSql(AlertPair.cpuMem(cfg).copy(aOut = "cpu_pct", bOut = "mem_pct"))} AS alert
          |FROM v""".stripMargin,
 
     "q_fanout_stats" ->

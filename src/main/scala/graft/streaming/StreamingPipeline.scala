@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.Row
 import graft.core.{PipelineConfig, Schemas}
 import graft.operators.RefOps
-import PipelineConfig.Alerts
+import graft.operators.RefOps.{AlertAgg, AlertPair}
 
 /** Structured-Streaming rebuild of the reference's transport + query
   * pipeline (SURVEY.md §3): the producer→Kafka→consumer→file→batch-job
@@ -237,61 +237,32 @@ object StreamingPipeline {
   }
 
   /** Streaming job1: cpu + mem landed streams (ts TIMESTAMP, server_id,
-    * metric) → watermarked stream-stream inner join on (ts, server_id)
-    * → sliding-window avg → CASE alerts. Watermarks bound both the join
-    * state and the window state.
+    * metric) → [[RefOps.alertJob]] with Spark's `avg`: (server_id,
+    * window_start, window_end, avg_cpu, avg_mem, alert), each window
+    * emitted once, when the watermark passes its end.
     */
   def streamingJob1(cpu: DataFrame, mem: DataFrame,
-                    cfg: PipelineConfig = PipelineConfig.default): DataFrame = {
-    val c = cpu.withWatermark("ts", cfg.watermark)
-    val m = mem.withWatermark("ts", cfg.watermark)
-    val joined = RefOps.joinOnKeys(c, m)
-    val agged = RefOps.slidingWindowAgg(joined, "server_id",
-      Seq(avg("cpu_pct").as("avg_cpu"), avg("mem_pct").as("avg_mem")), cfg)
-    agged.withColumn("alert",
-      RefOps.classifyAlerts(col("avg_cpu"), cfg.cpuThreshold,
-        col("avg_mem"), cfg.memThreshold,
-        Alerts.cpuMemBoth, Alerts.cpuOnly, Alerts.memOnly))
-      .select(col("server_id"),
-        col("window.start").as("window_start"), col("window.end").as("window_end"),
-        col("avg_cpu"), col("avg_mem"), col("alert"))
-  }
+                    cfg: PipelineConfig = PipelineConfig.default): DataFrame =
+    RefOps.alertJob(cpu, mem, AlertPair.cpuMem(cfg), AlertAgg.Avg, cfg)
 
-  /** Streaming job2 (max variant), same shape. */
+  /** Streaming job2 (net + disk, `max`), same shape. */
   def streamingJob2(net: DataFrame, disk: DataFrame,
-                    cfg: PipelineConfig = PipelineConfig.default): DataFrame = {
-    val n = net.withWatermark("ts", cfg.watermark)
-    val k = disk.withWatermark("ts", cfg.watermark)
-    val joined = RefOps.joinOnKeys(n, k)
-    val agged = RefOps.slidingWindowAgg(joined, "server_id",
-      Seq(max("net_in").as("max_net_in"), max("disk_io").as("max_disk_io")), cfg)
-    agged.withColumn("alert",
-      RefOps.classifyAlerts(col("max_net_in"), cfg.netInThreshold,
-        col("max_disk_io"), cfg.diskIoThreshold,
-        Alerts.netDiskBoth, Alerts.netOnly, Alerts.diskOnly))
-      .select(col("server_id"),
-        col("window.start").as("window_start"), col("window.end").as("window_end"),
-        col("max_net_in"), col("max_disk_io"), col("alert"))
-  }
+                    cfg: PipelineConfig = PipelineConfig.default): DataFrame =
+    RefOps.alertJob(net, disk, AlertPair.netDisk(cfg), AlertAgg.Max, cfg)
 
-  /** Single-stream variant of job1 (no stream-stream join): when cpu
-    * and mem ride the same wire, group once by (ts, server_id) and
-    * pivot the families with conditional aggregation. Cheaper state
-    * than a join — one aggregation instead of join+agg.
+  /** Single-stream pivot of [[landedFamilies]]' (ts, server_id,
+    * family, metric): one watermarked aggregate per (server_id, window)
+    * averages every cpu and every mem row. It equals [[streamingJob1]]
+    * only when every (ts, server_id) carries exactly one row per family
+    * (job1 weights duplicates by the join and drops one-sided ts).
+    * Bench's stream headline measures this form.
     */
   def streamingJob1SingleSource(wire: DataFrame,
-                                cfg: PipelineConfig = PipelineConfig.default): DataFrame = {
-    val agged = wire
+                                cfg: PipelineConfig = PipelineConfig.default): DataFrame =
+    RefOps.alertTail(wire
       .withWatermark("ts", cfg.watermark)
       .groupBy(col("server_id"), window(col("ts"), cfg.windowDuration, cfg.slideDuration))
       .agg(avg(when(col("family") === "cpu", col("metric"))).as("avg_cpu"),
-        avg(when(col("family") === "mem", col("metric"))).as("avg_mem"))
-    agged.withColumn("alert",
-      RefOps.classifyAlerts(col("avg_cpu"), cfg.cpuThreshold,
-        col("avg_mem"), cfg.memThreshold,
-        Alerts.cpuMemBoth, Alerts.cpuOnly, Alerts.memOnly))
-      .select(col("server_id"),
-        col("window.start").as("window_start"), col("window.end").as("window_end"),
-        col("avg_cpu"), col("avg_mem"), col("alert"))
-  }
+        avg(when(col("family") === "mem", col("metric"))).as("avg_mem")),
+      AlertPair.cpuMem(cfg))
 }

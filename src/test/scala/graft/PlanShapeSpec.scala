@@ -1,13 +1,18 @@
 package graft
 
+import java.nio.file.Files
+import java.sql.Timestamp
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Profiling, Similarity, TextAnalysis}
+import graft.streaming.StreamingPipeline
 
 /** Plan-shape guards for the round-8 second-wave operators: the scale
   * arguments in their scaladocs claim "no cartesian anywhere" and
   * "keyed joins only" — these assertions keep a future refactor from
   * silently introducing a nested-loop join or un-keying a shuffle.
-  * (Fixture-level twin of the PLANS.md executed-plan audit.)
+  * (Fixture-level twin of the PLANS.md executed-plan audit.) The last
+  * test pins the reference alert job's eager-aggregated, join-free plan.
   */
 class PlanShapeSpec extends SparkSpec {
   import spark.implicits._
@@ -72,5 +77,27 @@ class PlanShapeSpec extends SparkSpec {
       s"scan must read the two used columns: $readSchema")
     assert(!readSchema.contains("source") && !readSchema.contains("n_chars"),
       s"scan reads columns the query never touches: $readSchema")
+  }
+
+  test("the reference alert job plans no join: monitor queries and streaming job1") {
+    Seq("q_monitor_pipeline", "q_monitor_max").foreach { n =>
+      val plan = SparkEntry.queries(n)(spark, sf0001).queryExecution.executedPlan.toString
+      assert(!plan.contains("Join"), s"$n plans a join:\n$plan")
+    }
+    val src = MemoryStream[(Timestamp, String, Double)](spark)
+    val in = src.toDF()
+    src.addData((new Timestamp(100000L), "s1", 1.0))
+    val q = StreamingPipeline.streamingJob1(
+        in.toDF("ts", "server_id", "cpu_pct"), in.toDF("ts", "server_id", "mem_pct"))
+      .writeStream.format("noop").outputMode("append")
+      .option("checkpointLocation", Files.createTempDirectory("plan_job1").toString)
+      .start()
+    val plan = try {
+      q.processAllAvailable()
+      q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan.toString
+    } finally q.stop()
+    assert(!plan.contains("StreamingSymmetricHashJoin"), s"streamingJob1 joins:\n$plan")
+    assert("StateStoreSave".r.findAllMatchIn(plan).size == 2,
+      s"streamingJob1 must hold exactly two stateful aggregates:\n$plan")
   }
 }

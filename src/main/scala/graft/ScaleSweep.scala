@@ -425,8 +425,8 @@ object ScaleSweep {
       }
     } else if (mode == "simsearch") {
       // E3 priced at corpus scale (the one family whose SCALE.md claims
-      // were argued, not measured): exact brute-force top-k (heap form —
-      // 64 queries × N corpus is the few-heavy-groups regime), sign-LSH
+      // were argued, not measured): exact brute-force top-k (ranked on
+      // the heap — 64 groups of N rows each), sign-LSH
       // bucketed top-k, and IVF top-k over the same generated corpus.
       // Parameter discipline mirrors the 100 TB posture documented in
       // SCALE.md §Similarity: PLANES GROW WITH THE CORPUS (log2, fixed
@@ -500,7 +500,7 @@ object ScaleSweep {
       locally { // warmup all plans, both composed and split forms
         val w = embCorpus(spark, 20000)
         val queries = queriesFor("uniform", 20000)
-        timedIds(Similarity.bruteForceTopKHeap(w, queries, k))
+        timedIds(Similarity.bruteForceTopK(w, queries, k))
         timedIds(Similarity.bucketedTopK(w, queries, k, planes = 3))
         timedIds(Similarity.bucketedTopK(w, queries, k, planes = 3,
           multiProbe = true))
@@ -511,7 +511,7 @@ object ScaleSweep {
         val wIdx = Similarity.lshBucketTable(w, 3, Some(4096)).persist()
         wIdx.write.format("noop").mode("overwrite").save()
         timedIds(Similarity.lshProbe(wIdx, queries, k, 3))
-        timedIds(Similarity.bruteForceTopKHeap(
+        timedIds(Similarity.bruteForceTopK(
           embClustered(spark, 20000, 64, dim), queries, k))
       }
       fixtures.foreach { case (fixture, mkCorpus) =>
@@ -532,7 +532,7 @@ object ScaleSweep {
           val corpus = mkCorpus(n)
           val queries = queriesFor(fixture, n)
           val (bruteSec, exact) =
-            timedIds(Similarity.bruteForceTopKHeap(corpus, queries, k))
+            timedIds(Similarity.bruteForceTopK(corpus, queries, k))
           val (lshSec, lsh) =
             timedIds(Similarity.bucketedTopK(corpus, queries, k, planes))
           val (mpSec, mp) = timedIds(
@@ -718,7 +718,7 @@ object ScaleSweep {
           idOffset = 1000000007L)
         val nlist = math.max(16, math.round(math.sqrt(n.toDouble) / 16).toInt)
         val (bruteSec, exact) =
-          collectIds(Similarity.bruteForceTopKHeap(corpus, queries, k))
+          collectIds(Similarity.bruteForceTopK(corpus, queries, k))
         graft.core.CacheScope.releaseStragglers(spark)
         val cents = Similarity.ivfCentroids(corpus, nlist).persist()
         cents.count()

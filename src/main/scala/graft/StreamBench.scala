@@ -575,7 +575,8 @@ object StreamBench {
         (secs, progress, keys, messages)
       }
 
-    val windows = progress.map(_.stateOperators.headOption.map(_.numRowsTotal).getOrElse(0L)).maxOption.getOrElse(0L)
+    // state rows summed over every stateful operator of a batch, max over batches
+    val windows = progress.map(_.stateOperators.map(_.numRowsTotal).sum).maxOption.getOrElse(0L)
     val t = metrics.totals(wallMark)
     val rowsPerCpuSec = if (t.cpuMs > 0) (rows * 1000.0 / t.cpuMs).round else -1L
     println(s"""{"metric":"stream_rows_per_sec","mode":"$mode","value":${(rows / secs).round},"unit":"rows/sec","dataset_rows":$rows,"keys":$keys,"wire_messages":$messages,"state_rows":$windows,"wall_sec":${math.round(secs * 100) / 100.0},"task_ms":${t.taskMs},"cpu_ms":${t.cpuMs},"rows_per_cpu_sec":$rowsPerCpuSec}""")

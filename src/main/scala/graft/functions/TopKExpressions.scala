@@ -5,10 +5,12 @@ import java.nio.ByteBuffer
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Descending,
+  Expression, InterpretedOrdering, NullOrdering, NullsFirst, NullsLast, SortDirection,
+  SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.{GenericArrayData, TypeUtils}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
 
@@ -19,6 +21,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
   */
 final class TopKBuffer(val k: Int, val ord: Ordering[InternalRow]) {
   val heap = new java.util.PriorityQueue[InternalRow](math.max(k, 1), ord.reverse)
+
+  /** Whether `r` would enter the buffer: callers copy only survivors. */
+  def admits(r: InternalRow): Boolean =
+    heap.size < k || ord.compare(r, heap.peek) < 0
 
   def add(r: InternalRow): Unit =
     if (heap.size < k) { heap.offer(r); () }
@@ -31,60 +37,46 @@ final class TopKBuffer(val k: Int, val ord: Ordering[InternalRow]) {
   }
 }
 
-/** Shared lexicographic struct-row ordering: field i compared by its
-  * type's interpreted ordering, descending iff `desc(i)` (missing
-  * entries mean ascending), nulls LAST under ascending — the contract
-  * both [[TopKStruct]] (aggregate) and [[StructArrayTopK]] (scalar)
-  * rank by, factored so the two forms cannot drift.
+/** Shared struct-row ordering: the first `order.length` fields are
+  * compared lexicographically, field i by direction and NULL placement
+  * `order(i)` exactly as a Spark `SortOrder` with them sorts; fields
+  * past that prefix are payload and never compared. [[TopKStruct]]
+  * (aggregate) and [[StructArrayTopK]] (scalar) both rank by it, so the
+  * two forms cannot drift.
   */
 private[functions] object StructRowOrdering {
-  def apply(structType: StructType, desc: Seq[Boolean]): Ordering[InternalRow] = {
-    val fieldOrds: Array[Ordering[Any]] =
-      structType.fields.map(f => TypeUtils.getInterpretedOrdering(f.dataType))
-    val descAt: Array[Boolean] =
-      Array.tabulate(structType.length)(i => desc.lift(i).getOrElse(false))
-    new Ordering[InternalRow] {
-      override def compare(a: InternalRow, b: InternalRow): Int = {
-        var i = 0
-        while (i < structType.length) {
-          val dt = structType(i).dataType
-          val av = a.get(i, dt)
-          val bv = b.get(i, dt)
-          val c =
-            if (av == null && bv == null) 0
-            else if (av == null) 1
-            else if (bv == null) -1
-            else fieldOrds(i).compare(av, bv)
-          val oriented = if (descAt(i)) -c else c
-          if (oriented != 0) return oriented
-          i += 1
-        }
-        0
-      }
-    }
+  def apply(structType: StructType,
+            order: Seq[(SortDirection, NullOrdering)]): Ordering[InternalRow] = {
+    require(order.nonEmpty && order.length <= structType.length,
+      s"need 1..${structType.length} ordered fields, got ${order.length}")
+    new InterpretedOrdering(order.zipWithIndex.map { case ((dir, nulls), i) =>
+      SortOrder(BoundReference(i, structType(i).dataType, nullable = true),
+        dir, nulls, Seq.empty)
+    })
   }
 }
 
 /** Top-k rows per group as a single bounded-state aggregate.
   *
-  * `child` is a struct whose fields are compared lexicographically with
-  * a per-field direction (`desc(i)` — missing entries mean ascending;
-  * nulls order last under ascending). The aggregate keeps the k
-  * first-ordered structs and emits them as a sorted array.
+  * `child` is a struct whose first `order.length` fields are the sort
+  * key, compared by [[StructRowOrdering]]; the remaining fields ride
+  * along as payload. The aggregate keeps the k first-ordered structs
+  * and emits them as a sorted array, so array position is rank.
   *
-  * Why this exists when `row_number().over(Window...)` already answers
-  * top-k-per-group (`q_topk_per_group`): the window form shuffles and
-  * sorts EVERY input row on the group key before discarding all but k —
-  * at 100 TB that is a full-corpus exchange to keep a handful of rows
-  * per key. As a TypedImperativeAggregate this runs inside
-  * ObjectHashAggregate with map-side partial aggregation: each task
-  * reduces its slice to ≤ k rows per key BEFORE the exchange, so
-  * shuffle volume is bounded by keys × k × tasks regardless of input
-  * size, and no sort of the full input ever happens. The reference has
-  * no top-k surface at all (SURVEY.md §2.2 — no sort/limit anywhere in
-  * its 13 files); this is the classic bounded-heap pattern external
-  * engines hand-write, here as a reusable Catalyst aggregate instead
-  * of a per-query trick.
+  * As a TypedImperativeAggregate it runs inside ObjectHashAggregate
+  * with map-side partial aggregation: each task reduces its slice to
+  * ≤ k rows per key before the exchange and the final merge combines
+  * those local top-ks (the local-top-k-then-global-merge shape). The
+  * window form `row_number() OVER (PARTITION BY g ORDER BY …) <= k`
+  * limits map-side too — Catalyst plans a partial `WindowGroupLimit`
+  * before its exchange — but that operator first SORTS every input row
+  * of the task, where the heap compares each row with the current k-th
+  * survivor and drops it in O(1). Measured on Spark 4.1 (local[2], C1
+  * JIT, k = 10): the heap wins from hundreds of rows per group up
+  * (3.5 vs 7.9 s at 100,000 rows per group), the two tie at 400-1,000,
+  * and the codegen'd sort wins below (by 11 % to 2× at 5-40 rows per
+  * group). [[graft.operators.Ranking.topKPerGroup]] is the row-level
+  * operator on top of this aggregate and states the rule for picking.
   *
   * State is O(k) per key and spill-safe (ObjectHashAggregate falls back
   * to sort-based aggregation past the configured key cardinality;
@@ -93,7 +85,7 @@ private[functions] object StructRowOrdering {
 case class TopKStruct(
     child: Expression,
     k: Int,
-    desc: Seq[Boolean],
+    order: Seq[(SortDirection, NullOrdering)],
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[TopKBuffer] with UnaryLike[Expression] {
@@ -103,7 +95,7 @@ case class TopKStruct(
   private lazy val structType = child.dataType.asInstanceOf[StructType]
 
   private lazy val rowOrd: Ordering[InternalRow] =
-    StructRowOrdering(structType, desc)
+    StructRowOrdering(structType, order)
 
   override def dataType: DataType = ArrayType(structType, containsNull = false)
 
@@ -114,8 +106,8 @@ case class TopKStruct(
   override def createAggregationBuffer(): TopKBuffer = new TopKBuffer(k, rowOrd)
 
   override def update(buffer: TopKBuffer, input: InternalRow): TopKBuffer = {
-    val v = child.eval(input)
-    if (v != null) buffer.add(v.asInstanceOf[InternalRow].copy())
+    val v = child.eval(input).asInstanceOf[InternalRow]
+    if (v != null && buffer.admits(v)) buffer.add(v.copy())
     buffer
   }
 
@@ -178,28 +170,42 @@ case class TopKStruct(
 
 object TopKStruct {
 
-  /** `topk_struct(struct(...), k, desc...)` as a Column aggregate.
-    * Field i of the struct is compared descending iff `desc(i)`.
+  /** `topk_struct(struct(...), k, order)` as a Column aggregate: the
+    * first `order.length` struct fields are the key, each sorted as a
+    * Spark `SortOrder` with that direction and NULL placement.
     */
-  def topK(structCol: Column, k: Int, desc: Boolean*): Column =
+  def topKBy(structCol: Column, k: Int,
+             order: Seq[(SortDirection, NullOrdering)]): Column =
     ColumnBridge.column(
-      TopKStruct(ColumnBridge.expression(structCol), k, desc.toSeq)
+      TopKStruct(ColumnBridge.expression(structCol), k, order)
         .toAggregateExpression())
 
+  /** [[topKBy]] keyed on the first `desc.length` fields, field i
+    * descending iff `desc(i)`, NULL ranked as the largest value (asc
+    * NULLS LAST, desc NULLS FIRST) — the contract the array-valued
+    * callers (`marginMining`, `consensusFromCounts`, `bigramGenerate`,
+    * `knnOf`) and their oracles were written against.
+    */
+  def topK(structCol: Column, k: Int, desc: Boolean*): Column =
+    topKBy(structCol, k, nullsLargest(desc))
+
   /** `array_topk_struct(arr, k, desc...)` as a scalar Column — see
-    * [[StructArrayTopK]].
+    * [[StructArrayTopK]]; `desc` as in the Boolean [[topK]].
     */
   def arrayTopK(arr: Column, k: Int, desc: Boolean*): Column =
     ColumnBridge.column(
-      StructArrayTopK(ColumnBridge.expression(arr), k, desc.toSeq))
+      StructArrayTopK(ColumnBridge.expression(arr), k, nullsLargest(desc)))
+
+  private def nullsLargest(desc: Seq[Boolean]): Seq[(SortDirection, NullOrdering)] =
+    desc.map(d => if (d) (Descending, NullsFirst) else (Ascending, NullsLast))
 }
 
 /** Bounded-heap top-k over an ARRAY of structs — the SCALAR twin of
   * [[TopKStruct]] for the in-row probe shape
   * (`Similarity.ivfProbeStream`, where a streaming plan must do its
   * per-query ranking inside one row to stay stateless): returns the k
-  * first-ordered elements of `child` under [[StructRowOrdering]]
-  * (field i descending iff `desc(i)`), SORTED, so array position IS
+  * first-ordered elements of `child` under [[StructRowOrdering]],
+  * SORTED, so array position IS
   * rank. O(L·log k) primitive compares over a k-bounded heap — the
   * `array_sort(…, comparator-lambda)` composition this replaces is
   * O(L·log L) INTERPRETED comparator evals (a when-chain expression
@@ -210,7 +216,8 @@ object TopKStruct {
   * form silently MISORDERED NaN because `>`/`<` are false on NaN).
   * NULL array elements are skipped; a NULL array yields NULL.
   */
-case class StructArrayTopK(child: Expression, k: Int, desc: Seq[Boolean])
+case class StructArrayTopK(child: Expression, k: Int,
+    order: Seq[(SortDirection, NullOrdering)])
   extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
   with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
 
@@ -220,7 +227,7 @@ case class StructArrayTopK(child: Expression, k: Int, desc: Seq[Boolean])
     .elementType.asInstanceOf[StructType]
 
   private lazy val rowOrd: Ordering[InternalRow] =
-    StructRowOrdering(elemType, desc)
+    StructRowOrdering(elemType, order)
 
   override def dataType: DataType = ArrayType(elemType, containsNull = false)
 
@@ -232,8 +239,10 @@ case class StructArrayTopK(child: Expression, k: Int, desc: Seq[Boolean])
     val n = arr.numElements()
     var i = 0
     while (i < n) {
-      if (!arr.isNullAt(i))
-        buf.add(arr.getStruct(i, elemType.length).copy())
+      if (!arr.isNullAt(i)) {
+        val r = arr.getStruct(i, elemType.length)
+        if (buf.admits(r)) buf.add(r.copy())
+      }
       i += 1
     }
     new GenericArrayData(buf.sortedRows.asInstanceOf[Array[Any]])

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** Bradley-Terry preference-strength ranking — the pairwise-preference
   * analytics step of an RLHF data pipeline: given (winner, loser)
@@ -94,6 +95,47 @@ object Ranking {
       .localCheckpoint()
     (prevRdds ++ pairRdds).foreach(_.unpersist(blocking = false))
     result
+  }
+
+  /** Top-k rows per group: the rows of `df`, plus an int `rank`, that
+    * `row_number() OVER (PARTITION BY group ORDER BY order)` keeps at
+    * `rank <= k`. NULLs and NaN sort as in that window: each `order`
+    * column's SortOrder places NULLs (`asc` NULLS FIRST and `desc`
+    * NULLS LAST unless written otherwise; a bare column sorts `asc`),
+    * and NaN is the largest double. Rows tied on every `order` column
+    * take distinct ranks in an unspecified order, as under
+    * row_number — end `order` with a unique column for a
+    * deterministic result.
+    *
+    * Plan: one ObjectHashAggregate over the bounded-heap
+    * [[graft.functions.TopKStruct]] (the order values, then the row as
+    * payload) and a posexplode. Each map task keeps ≤ k rows per group
+    * before the exchange; the final merge keeps k.
+    *
+    * Use it when groups run to hundreds of rows or more per k (a whole
+    * corpus per query, a whole stratum per key); otherwise use the
+    * window. Measured on Spark 4.1 (local[2], C1 JIT, k = 10): 3.5 s
+    * here vs 7.9 s for the window at 100,000 rows per group, 8.7 vs
+    * 52 s for 64 queries against a 1M-row corpus (local[4]), a tie at
+    * 400-1,000 rows per group, and the window 11 % to 2× faster at
+    * 5-40 rows per group. The window form also limits before its
+    * exchange (Catalyst plans a partial `WindowGroupLimit`), but after
+    * sorting every row of the task; on small groups that codegen'd
+    * sort beats the heap's interpreted compare and row copy. The pick
+    * cannot be automatic: Catalyst has no rows-per-group statistic
+    * before execution.
+    */
+  def topKPerGroup(df: DataFrame, group: Seq[Column], order: Seq[Column],
+                   k: Int): DataFrame = {
+    require(!df.columns.contains("rank"), "df already has a rank column")
+    val sorts = order.map(ColumnBridge.sortOrder)
+    val key = sorts.zipWithIndex.map { case ((c, _, _), i) => c.as(s"o$i") }
+    val row = struct(df.columns.map(c => col(s"`$c`")).toSeq: _*).as("row")
+    df.groupBy(group: _*)
+      .agg(graft.functions.TopKStruct.topKBy(struct(key :+ row: _*), k,
+        sorts.map { case (_, dir, nulls) => (dir, nulls) }).as("top"))
+      .select(posexplode(col("top")))
+      .select(col("col.row.*"), (col("pos") + 1).as("rank"))
   }
 
   /** Exact global rank (row_number over a TOTAL corpus order) without

@@ -104,17 +104,14 @@ object Sampling {
   /** Exact-quota sampling: exactly min(n, |stratum|) rows per stratum,
     * taken in id-hash order (uniform but fully reproducible) — balanced
     * eval-set construction, where fractions won't do because strata
-    * sizes differ. One window sort per stratum partition; ties in the
-    * 4-hex key break by id, so selection is total-ordered.
+    * sizes differ. A stratum is far larger than its quota, so the pick
+    * runs on [[Ranking.topKPerGroup]]; ties in the 4-hex key break by
+    * id, so selection is total-ordered.
     */
   def quotaSample(df: DataFrame, stratumCol: String, idCol: String,
-                  n: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col(stratumCol))
-      .orderBy(hashKey(col(idCol)), col(idCol))
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= n).drop("__rn")
-  }
+                  n: Int): DataFrame =
+    Ranking.topKPerGroup(df, Seq(col(stratumCol)),
+      Seq(hashKey(col(idCol)), col(idCol)), n).drop("rank")
 
   /** Balanced mixture downsample: cap every stratum to (approximately)
     * the SMALLEST stratum's size — the dataset-mixing move a

@@ -14,11 +14,12 @@ import org.apache.spark.sql.expressions.Window
   * oracle reproduces bit-for-bit.
   *
   * Scale notes: brute force is O(|queries|·|corpus|) — correct tool when
-  * |queries| is small (broadcast queries, stream the corpus; no shuffle
-  * at all). For corpus×corpus jobs use the bucketed variant: candidates
-  * are generated by an equi-join on bucket id, so the plan is a
-  * shuffle-join keyed by bucket, never a cross product. More planes →
-  * smaller buckets → higher recall loss; pick per workload.
+  * |queries| is small (broadcast queries, stream the corpus; only each
+  * task's per-query top-k survivors shuffle). For corpus×corpus jobs
+  * use the bucketed variant: candidates are generated by an equi-join
+  * on bucket id, so the plan is a shuffle-join keyed by bucket, never
+  * a cross product. More planes → smaller buckets → higher recall
+  * loss; pick per workload.
   */
 object Similarity {
 
@@ -41,9 +42,15 @@ object Similarity {
   def cosine(a: String, b: String): Column =
     dot(a, b) / (norm(a) * norm(b))
 
-  /** Exact top-k cosine neighbors for each query vector.
-    * Queries are broadcast (small side); rank is deterministic
-    * (sim desc, neighbor id asc tiebreak); self-matches excluded.
+  /** Exact top-k cosine neighbors for each query vector: (query_id,
+    * cand_id, sim, rank) under (sim DESC, cand_id ASC), rank 1-based
+    * int, self-matches excluded; a NULL sim (null or length-mismatched
+    * embedding) ranks after every number.
+    *
+    * Brute force is for a bounded query batch: the queries are
+    * broadcast and every corpus row is scored against each of them, so
+    * each query's group is the whole corpus — the heavy-group regime
+    * of [[Ranking.topKPerGroup]], which ranks it map-side.
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
@@ -58,74 +65,8 @@ object Similarity {
       .filter(col("cand_id") =!= col("query_id"))
       .select(col("query_id"), col("cand_id"),
         (dot("qv", "cv") / (col("qnorm") * col("cnorm"))).as("sim"))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("sim"), asc("cand_id"))
-    sims.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
-  /** [[bruteForceTopK]] with the BROADCAST SIDE FLIPPED: the corpus is
-    * broadcast and the queries stream — for the label-propagation
-    * shape, where the labeled reference set is the small side and the
-    * unlabeled queries are most of the table (broadcasting the query
-    * side there inverts the size assumption and risks an OOM-sized
-    * broadcast). Output and determinism contract are identical: same
-    * cosine fold, same (sim desc, cand_id asc) rank, self-matches
-    * excluded.
-    */
-  def bruteForceTopKFromBroadcastCorpus(corpus: DataFrame, queries: DataFrame,
-      k: Int, idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val c = corpus.select(col(idCol).as("cand_id"), toDoubleVec(col(vecCol)).as("cv"))
-      .withColumn("cnorm", norm("cv"))
-    val q = queries.select(col(idCol).as("query_id"), toDoubleVec(col(vecCol)).as("qv"))
-      .withColumn("qnorm", norm("qv"))
-    val sims = q.crossJoin(broadcast(c))
-      .filter(col("cand_id") =!= col("query_id"))
-      .select(col("query_id"), col("cand_id"),
-        (dot("qv", "cv") / (col("qnorm") * col("cnorm"))).as("sim"))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("sim"), asc("cand_id"))
-    sims.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
-  /** [[bruteForceTopK]] with the per-query rank on the bounded-heap
-    * [[graft.functions.TopKStruct]] aggregate instead of a window sort
-    * — for the FEW-HEAVY-GROUPS regime of the round-7 crossover rule
-    * (SCALE.md §top-k): a small query batch against a large corpus
-    * gives |queries| groups of |corpus| sim rows each, and the window
-    * form shuffles ALL |corpus|·|queries| rows into |queries| tasks
-    * (one |corpus|-row sort per query) while the heap form reduces each
-    * map task to ≤ k rows per query BEFORE the exchange — shuffle
-    * volume |queries|·k·tasks, independent of corpus size. The window
-    * form stays preferred for many-small-groups (5000 queries × ~400
-    * candidates measured 15-25% faster there). Output contract is
-    * identical: (query_id, cand_id, sim, rank) under (sim DESC,
-    * cand_id ASC), self-matches excluded, rank 1-based — for NON-NULL
-    * sims. A NULL sim (null or length-mismatched candidate embedding)
-    * is EXCLUDED here, where the window form ranks it last: the two
-    * orderings disagree on nulls (TopKStruct's struct comparator puts a
-    * null first field FIRST under desc, `desc("sim")` puts it last), so
-    * without the filter a degenerate candidate would rank 1 in this
-    * form. Dropping it is the only ordering both forms agree is never
-    * "nearest".
-    */
-  def bruteForceTopKHeap(corpus: DataFrame, queries: DataFrame, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val c = corpus.select(col(idCol).as("cand_id"), toDoubleVec(col(vecCol)).as("cv"))
-      .withColumn("cnorm", norm("cv"))
-    val q = queries.select(col(idCol).as("query_id"), toDoubleVec(col(vecCol)).as("qv"))
-      .withColumn("qnorm", norm("qv"))
-    c.crossJoin(broadcast(q))
-      .filter(col("cand_id") =!= col("query_id"))
-      .select(col("query_id"), col("cand_id"),
-        (dot("qv", "cv") / (col("qnorm") * col("cnorm"))).as("sim"))
-      .filter(col("sim").isNotNull)
-      .groupBy(col("query_id"))
-      // desc=(true, false): sim descending, cand_id ascending — the
-      // exact tie-break bruteForceTopK's window uses, and TopKStruct
-      // emits the survivors already sorted, so posexplode IS the rank
-      .agg(graft.functions.TopKStruct.topK(
-        struct(col("sim"), col("cand_id")), k, true, false).as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .select(col("query_id"), col("col.cand_id").as("cand_id"),
-        col("col.sim").as("sim"), (col("pos") + 1).cast("int").as("rank"))
+    Ranking.topKPerGroup(sims, Seq(col("query_id")),
+      Seq(desc("sim"), asc("cand_id")), k)
   }
 
   /** Sign-LSH bucket id from the first `planes` coordinates (a
@@ -610,10 +551,10 @@ object Similarity {
     *      composition it replaced was O(L·log L) INTERPRETED evals and
     *      measured 262 query-rows/s at ~2.5k candidates/query.
     * Contract matches [[ivfProbe]] for finite sims; NULL sims
-    * (null/length-mismatched embeddings) are EXCLUDED here like the
-    * heap form — the documented heap-vs-window NULL divergence
-    * (`bruteForceTopKHeap`) applies verbatim. Works on a batch query
-    * DataFrame too (nothing here is streaming-only).
+    * (null/length-mismatched embeddings) are EXCLUDED here, where
+    * [[ivfProbe]]'s window ranks them last: the fused kernel drops
+    * them inside the list scan. Works on a batch query DataFrame too
+    * (nothing here is streaming-only).
     *
     * Scale: the static side is the materialized index (built once by
     * [[ivfCentroids]]/[[ivfKmeansCentroids]] + [[ivfAssign]] +
@@ -932,8 +873,9 @@ object Similarity {
     * product, no per-subspace row explosion. The LUT cell is the same
     * arithmetic encode ([[graft.functions.PqEncode]]) minimizes, so a
     * vector's distance under its chosen code is encode's distance; the
-    * `q_pq_search` oracle pins the two implementations together. Top-k
-    * is a per-query window over the scored rows.
+    * `q_pq_search` oracle pins the two implementations together. Every
+    * code row is scored per query, so the per-query top-k runs on
+    * [[Ranking.topKPerGroup]].
     *
     * Everything is exact integer arithmetic on the floor(x·1000) grid:
     * ADC distance = Σₛ ‖q_s − cent(code_s)‖², bounded by
@@ -950,14 +892,13 @@ object Similarity {
     val lut = withCodebook(corpus.filter(queryPred)
         .select(col(idCol).as("query_id"), quantize(col(vecCol)).as("qe")), cb)
       .select(col("query_id"), nestedLut(m, "qe", "(a - b) * (a - b)").as("lut"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
-    codes.crossJoin(broadcast(lut))
+    val scored = codes.crossJoin(broadcast(lut))
       .filter(col("query_id") =!= col("cand_id"))
       .select(col("query_id"), col("cand_id").as("neighbor_id"),
         adcFold("lut").as("adc_dist"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    Ranking.topKPerGroup(scored, Seq(col("query_id")),
+      Seq(asc("adc_dist"), asc("neighbor_id")), k)
+      .withColumn("rank", col("rank").cast("long"))
   }
 
   /** IVF-PQ composed search (Jégou, Douze & Schmid, "Product
@@ -1346,13 +1287,10 @@ object Similarity {
     * candidate row scores itself with three m-lookup folds ([[adcFold]])
     * in one codegen'd projection — per-candidate cost is m lookups,
     * independent of dim, and candidates never explode into (s, code)
-    * rows. Top-k is a bounded heap ([[heapTopK]]), not a window: the
-    * window sorts every candidate row of a query (~nprobe·N/nlist rows
-    * through one exchange + sort); the heap keeps ≤k per partition per
-    * query, so only survivors shuffle. Same (sim desc, id asc) order;
-    * NULL sims are EXCLUDED (the documented heap-vs-window NULL
-    * divergence — [[bruteForceTopKHeap]]'s contract). The query row is
-    * excluded.
+    * rows. A query's candidates are its nprobe lists, ~nprobe·N/nlist
+    * rows, so the top-k runs on [[Ranking.topKPerGroup]] under
+    * (adc_sim DESC, neighbor_id ASC); a NULL sim ranks last, rank is a
+    * 1-based long. The query row is excluded.
     *
     * Each candidate row meets its LUTs through at most three slim
     * joins: the probed (query, list) pair's scalars (qip and ‖q̃‖², both
@@ -1394,7 +1332,7 @@ object Similarity {
       .select(col("centroid_id"), nestedLut(m, "qcent", "a * b").as("crs_lut"),
         nestedLut(m, "c.qc", "a * b").as("rn2_lut"),
         vec_dot_long(col("qcent"), col("qcent")).as("cn2c"))
-    heapTopK(cands.join(broadcast(listLuts), Seq("centroid_id"))
+    val scored = cands.join(broadcast(listLuts), Seq("centroid_id"))
       .filter(col("query_id") =!= col("cand_id"))
       .select(col("query_id"), col("cand_id").as("neighbor_id"),
         adcFold("ipr_lut").as("iprs"), adcFold("crs_lut").as("crs"),
@@ -1403,22 +1341,11 @@ object Similarity {
         ((col("qip") + col("iprs")).cast("double") /
           (sqrt(col("qn2").cast("double")) *
             sqrt((col("cn2c") + lit(2) * col("crs") + col("rn2s"))
-              .cast("double")))).as("adc_sim")), k)
+              .cast("double")))).as("adc_sim"))
+    Ranking.topKPerGroup(scored, Seq(col("query_id")),
+      Seq(desc("adc_sim"), asc("neighbor_id")), k)
+      .withColumn("rank", col("rank").cast("long"))
   }
-
-  /** Per-query bounded-heap top-k over (query_id, neighbor_id,
-    * adc_sim) rows — (adc_sim desc, neighbor_id asc), rank = heap
-    * position, NULL sims excluded.
-    */
-  private def heapTopK(scored: DataFrame, k: Int): DataFrame =
-    scored.filter(col("adc_sim").isNotNull)
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopKStruct.topK(
-        struct(col("adc_sim"), col("neighbor_id")), k, true, false).as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .select(col("query_id"), col("col.neighbor_id").as("neighbor_id"),
-        col("col.adc_sim").as("adc_sim"),
-        (col("pos") + 1).cast("long").as("rank"))
 
   /** Sub-quadratic embedding near-dup PAIRS — the 100 TB composition the
     * exact [[cosineNearDuplicates]] documents as its scale path:
@@ -1907,11 +1834,12 @@ object Similarity {
       // The k-NN pick rides the bounded-heap TopKStruct aggregate
       // ((dist2, cid) ascending — the same tie rule the oracle replays),
       // NOT a row_number window: partial aggregation keeps at most k
-      // candidates per query per map task, so the qid exchange carries
-      // |queries|·k·tasks rows where the window form shuffled the whole
-      // |corpus|×|queries| product. Queries with fewer than k neighbors
-      // (sub-k corpora) surface no k-distance and drop here, exactly as
-      // the rn == k filter dropped them downstream before.
+      // candidates per query per map task without sorting the
+      // |corpus|×|queries| product (each query's group is the whole
+      // corpus, the heap side of Ranking.topKPerGroup's rule; the array
+      // form feeds the size filter below). Queries with fewer than k
+      // neighbors (sub-k corpora) surface no k-distance and drop here,
+      // exactly as the rn == k filter dropped them downstream before.
       e.crossJoin(broadcast(queries))
         .filter(col("id") =!= col("qid"))
         .select(col("qid"),

@@ -733,8 +733,8 @@ object TextAnalysis {
     * shingle-keyed posting join whose fan-out is Σ df², bounded by the
     * `maxDf` posting-length cap (df > maxDf shingles are boilerplate;
     * dropping them is what every production sparse index does). The
-    * per-doc top-k rides the bounded-heap [[graft.functions.TopKStruct]]
-    * (shuffle ∝ docs·k per task, never the full pair stream sorted).
+    * per-doc top-k runs on [[Ranking.topKPerGroup]] (shuffle ∝ docs·k
+    * per task, never the full pair stream sorted).
     * All joins are keyed (shingle, then doc); the corpus size N is a
     * broadcast 1-row aggregate.
     */
@@ -787,15 +787,10 @@ object TextAnalysis {
         (col("dot").cast("double") /
           (sqrt(col("na2").cast("double")) * sqrt(col("nb2").cast("double"))))
           .as("sim"))
-    sims.groupBy(col("doc_a"))
-      .agg(graft.functions.TopKStruct.topK(
-        struct(col("sim"), col("doc_b"), col("dot")), k, true, false, false)
-        .as("top"))
-      .select(col("doc_a"), posexplode(col("top")))
-      .select(col("doc_a").as("doc_id"),
-        (col("pos") + 1).cast("long").as("rank"),
-        col("col.doc_b").as("neighbor_id"), col("col.dot").as("dot"),
-        col("col.sim").as("sim"))
+    Ranking.topKPerGroup(sims, Seq(col("doc_a")),
+        Seq(desc("sim"), asc("doc_b")), k)
+      .select(col("doc_a").as("doc_id"), col("rank").cast("long").as("rank"),
+        col("doc_b").as("neighbor_id"), col("dot"), col("sim"))
   }
 
   /** Gopher-style WITHIN-document n-gram repetition signals (the

@@ -121,9 +121,7 @@ object SimilarityQueries {
       val emb = Tables.embeddings(s, d)
       val known = emb.filter(col("vec_id") % 5 === 0)
       val unk = emb.filter(col("vec_id") % 5 =!= 0)
-      // corpus-broadcast variant: the labeled 20% is the SMALL side
-      // here; the stock helper would broadcast the 80% query slice
-      val nn = Similarity.bruteForceTopKFromBroadcastCorpus(known, unk, 5)
+      val nn = Similarity.bruteForceTopK(known, unk, 5)
       val votes = nn.join(known.select(col("vec_id").as("cand_id"),
           col("label").cast("long").as("nlabel")), Seq("cand_id"))
         .groupBy(col("query_id"), col("nlabel")).agg(count(lit(1)).as("cnt"))

@@ -8,14 +8,28 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, Expression,
+  NullOrdering, NullsFirst, NullsLast, SortDirection}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.internal.{SortOrder => SortNode}
 
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A sort column as `Dataset.orderBy` reads it: the key, its
+    * direction and NULL placement (a bare column sorts ascending,
+    * NULLS FIRST).
+    */
+  def sortOrder(c: Column): (Column, SortDirection, NullOrdering) = c.node match {
+    case SortNode(child, dir, nulls, _) =>
+      (new Column(child),
+        if (dir == SortNode.Descending) Descending else Ascending,
+        if (nulls == SortNode.NullsFirst) NullsFirst else NullsLast)
+    case _ => (c, Ascending, NullsFirst)
+  }
 }
 
 object PlanBridge {

@@ -175,7 +175,7 @@ class IvfPqSpec extends SparkSpec {
       df.select(col("query_id").cast("long"), col(cand).cast("long"))
         .collect().groupBy(_.getLong(0))
         .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-    val exact = topIds(Similarity.bruteForceTopKHeap(c, qs, k), "cand_id")
+    val exact = topIds(Similarity.bruteForceTopK(c, qs, k), "cand_id")
     def recallOf(a: Map[Long, Set[Long]]): Double = {
       val hit = exact.map { case (q, e) => (a.getOrElse(q, Set.empty) & e).size }.sum
       hit.toDouble / exact.values.map(_.size).sum
@@ -244,7 +244,7 @@ class IvfPqSpec extends SparkSpec {
       df.select(col("query_id").cast("long"), col(cand).cast("long"))
         .collect().groupBy(_.getLong(0))
         .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-    val exact = topIds(Similarity.bruteForceTopKHeap(c, qs, k), "cand_id")
+    val exact = topIds(Similarity.bruteForceTopK(c, qs, k), "cand_id")
     def recallOf(a: Map[Long, Set[Long]]): Double = {
       val hit = exact.map { case (q, e) => (a.getOrElse(q, Set.empty) & e).size }.sum
       hit.toDouble / exact.values.map(_.size).sum

@@ -45,17 +45,29 @@ class MonitoringJobsSpec extends SparkSpec {
   }
 
   test("inferSchema compat: job1 over headerful CSVs without explicit schema is identical") {
-    val dir = java.nio.file.Files.createTempDirectory("inferschema").toString
-    cpu.coalesce(1).write.option("header", "true").csv(s"$dir/cpu")
-    mem.coalesce(1).write.option("header", "true").csv(s"$dir/mem")
-    MonitoringJobs.runJob1Files(spark, s"$dir/cpu", s"$dir/mem", s"$dir/out_explicit")
-    MonitoringJobs.runJob1Files(spark, s"$dir/cpu", s"$dir/mem", s"$dir/out_inferred",
-      inferSchema = true)
+    // both file runners: job1 over cpu+mem, job2 over net+disk
+    val net = Seq(("20:53:00", "server_1", 5000.0), ("20:53:05", "server_1", 12.5),
+      ("20:53:00", "server_2", 10.0)).toDF("ts", "server_id", "net_in")
+    val disk = Seq(("20:53:00", "server_1", 10.0), ("20:53:05", "server_2", 4600.0),
+      ("20:53:00", "server_2", 3.25)).toDF("ts", "server_id", "disk_io")
+    val runners: Seq[(String, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
+        (String, String, String, Boolean) => Unit)] = Seq(
+      ("job1", cpu, mem, (a, b, out, infer) =>
+        MonitoringJobs.runJob1Files(spark, a, b, out, inferSchema = infer)),
+      ("job2", net, disk, (a, b, out, infer) =>
+        MonitoringJobs.runJob2Files(spark, a, b, out, inferSchema = infer)))
     def lines(p: String) = spark.read.option("header", "true").csv(p)
       .collect().map(_.mkString(",")).sorted.toSeq
-    val explicit = lines(s"$dir/out_explicit")
-    assert(explicit.nonEmpty)
-    assert(explicit == lines(s"$dir/out_inferred"))
+    runners.foreach { case (job, left, right, run) =>
+      val dir = java.nio.file.Files.createTempDirectory(s"inferschema_$job").toString
+      left.coalesce(1).write.option("header", "true").csv(s"$dir/a")
+      right.coalesce(1).write.option("header", "true").csv(s"$dir/b")
+      run(s"$dir/a", s"$dir/b", s"$dir/out_explicit", false)
+      run(s"$dir/a", s"$dir/b", s"$dir/out_inferred", true)
+      val explicit = lines(s"$dir/out_explicit")
+      assert(explicit.nonEmpty, job)
+      assert(explicit == lines(s"$dir/out_inferred"), job)
+    }
   }
 
   test("producer fan-out emits 4 messages per dataset row") {

@@ -12,7 +12,8 @@ import graft.streaming.StreamingPipeline
   * "keyed joins only" — these assertions keep a future refactor from
   * silently introducing a nested-loop join or un-keying a shuffle.
   * (Fixture-level twin of the PLANS.md executed-plan audit.) The last
-  * test pins the reference alert job's eager-aggregated, join-free plan.
+  * two tests pin q_knn_brute's heap top-k and the reference alert job's
+  * eager-aggregated, join-free plan.
   */
 class PlanShapeSpec extends SparkSpec {
   import spark.implicits._
@@ -77,6 +78,14 @@ class PlanShapeSpec extends SparkSpec {
       s"scan must read the two used columns: $readSchema")
     assert(!readSchema.contains("source") && !readSchema.contains("n_chars"),
       s"scan reads columns the query never touches: $readSchema")
+  }
+
+  test("q_knn_brute ranks on the map-side heap: ObjectHashAggregate, no Window") {
+    val df = SparkEntry.queries("q_knn_brute")(spark, sf0001)
+    df.collect() // the final adaptive plan is the one that ran
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("ObjectHashAggregate"), plan)
+    assert(!plan.contains("Window"), plan)
   }
 
   test("the reference alert job plans no join: monitor queries and streaming job1") {

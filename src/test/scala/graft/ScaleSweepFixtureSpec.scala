@@ -111,7 +111,7 @@ class ScaleSweepFixtureSpec extends SparkSpec {
     val corpus = ScaleSweep.embClustered(spark, 400, centers)
     val queries = ScaleSweep.embClustered(spark, 4, centers,
       idOffset = 1000000007L)
-    val top = Similarity.bruteForceTopKHeap(corpus, queries, 10)
+    val top = Similarity.bruteForceTopK(corpus, queries, 10)
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("cand_id")))
     assert(top.length == 40)
     top.foreach { case (q, c) =>

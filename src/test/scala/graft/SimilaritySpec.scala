@@ -112,43 +112,57 @@ class SimilaritySpec extends SparkSpec {
     assert(multiSet.size > singleSet.size)
   }
 
-  test("bruteForceTopKHeap matches the window form row-for-row (fixture embeddings)") {
+  /** The window form bruteForceTopK's heap must reproduce: the same
+    * cosine rows ranked by row_number over (sim DESC, cand_id ASC).
+    */
+  private def windowBruteForce(corpus: org.apache.spark.sql.DataFrame,
+      queries: org.apache.spark.sql.DataFrame, k: Int) = {
+    val c = corpus.select(col("vec_id").as("cand_id"),
+        Similarity.toDoubleVec(col("embedding")).as("cv"))
+      .withColumn("cnorm", Similarity.norm("cv"))
+    val q = queries.select(col("vec_id").as("query_id"),
+        Similarity.toDoubleVec(col("embedding")).as("qv"))
+      .withColumn("qnorm", Similarity.norm("qv"))
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
+      .orderBy(desc("sim"), asc("cand_id"))
+    c.crossJoin(q).filter(col("cand_id") =!= col("query_id"))
+      .select(col("query_id"), col("cand_id"),
+        (Similarity.dot("qv", "cv") / (col("qnorm") * col("cnorm"))).as("sim"))
+      .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+  }
+
+  test("bruteForceTopK matches the window form row-for-row (fixture embeddings)") {
     // same cosine fold, same (sim DESC, cand_id ASC) tie-break — the
-    // two forms must be bit-identical on real fixture vectors, rank
-    // included, so callers can pick by group-cardinality regime alone
+    // heap rank must be bit-identical to row_number on real fixture
+    // vectors, rank included
     val emb = graft.core.Tables.embeddings(spark, sf0001)
     val q = emb.filter(col("vec_id") % 50 === 0)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "cand_id", "sim", "rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    val win = rows(Similarity.bruteForceTopK(emb, q, 7))
-    val heapDf = Similarity.bruteForceTopKHeap(emb, q, 7)
+    val win = rows(windowBruteForce(emb, q, 7))
+    val heapDf = Similarity.bruteForceTopK(emb, q, 7)
     assert(rows(heapDf) == win)
     assert(win.size == q.count() * 7)
-    // mechanism pin: the heap form must plan as ObjectHashAggregate
-    // (map-side ≤k rows per query before the exchange) with NO window
-    // sort anywhere — that plan shape is its entire reason to exist
+    // mechanism pin: the rank plans as ObjectHashAggregate (map-side
+    // ≤k rows per query before the exchange) with no window sort
     val plan = heapDf.queryExecution.executedPlan.toString
     assert(plan.contains("ObjectHashAggregate"), plan.take(400))
     assert(!plan.contains("Window"), plan.take(400))
   }
 
-  test("bruteForceTopKHeap: a NULL-sim candidate is excluded, never ranked first") {
-    // a null embedding yields a NULL cosine; the heap's struct
-    // comparator would have put it FIRST under desc (the window form
-    // puts nulls last) — the isNotNull filter pins the contract: the
-    // degenerate candidate simply never appears, and the non-null
-    // ranking is the window form's exactly
+  test("bruteForceTopK: a NULL-sim candidate ranks last, as in the window form") {
+    // a null embedding yields a NULL cosine; desc("sim") puts NULLs
+    // last, and the heap places them exactly where the window does
     val dirty = vecs.union(Seq((9L, null.asInstanceOf[Array[Float]]))
       .toDF("vec_id", "embedding"))
     val q = vecs.filter(col("vec_id") === 0)
-    val heap = Similarity.bruteForceTopKHeap(dirty, q, 4)
-      .orderBy("rank").collect()
-    assert(!heap.exists(_.getAs[Long]("cand_id") == 9L))
-    assert(heap.map(_.getAs[Long]("cand_id")).toSeq == Seq(1L, 3L, 2L))
-    // the window form ranks the null LAST — both agree it is not rank 1
-    val win = Similarity.bruteForceTopK(dirty, q, 4).orderBy("rank").collect()
-    assert(win.map(_.getAs[Long]("cand_id")).toSeq == Seq(1L, 3L, 2L, 9L))
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("rank").collect().map(_.getAs[Long]("cand_id")).toSeq
+    assert(ids(Similarity.bruteForceTopK(dirty, q, 4)) == Seq(1L, 3L, 2L, 9L))
+    assert(ids(windowBruteForce(dirty, q, 4)) == Seq(1L, 3L, 2L, 9L))
+    // with k below the non-null count the NULL never surfaces
+    assert(ids(Similarity.bruteForceTopK(dirty, q, 3)) == Seq(1L, 3L, 2L))
   }
 
   test("nearest_centroid matches the join+max-struct assignment on fixture embeddings") {
@@ -671,7 +685,7 @@ class SimilaritySpec extends SparkSpec {
     // known = vec_id % 4 in {0, 1} (covers both clusters)
     val known = rows.filter(col("vec_id") % 4 < 2)
     val unk = rows.filter(col("vec_id") % 4 >= 2)
-    val nn = Similarity.bruteForceTopKFromBroadcastCorpus(known, unk, 3)
+    val nn = Similarity.bruteForceTopK(known, unk, 3)
     val votes = nn.join(known.select(col("vec_id").as("cand_id"),
         col("label").cast("long").as("nlabel")), Seq("cand_id"))
       .groupBy(col("query_id"), col("nlabel")).agg(count(lit(1)).as("cnt"))

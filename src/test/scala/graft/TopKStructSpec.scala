@@ -1,24 +1,34 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TopKStruct
+import graft.operators.Ranking
 
-/** The bounded-heap top-k aggregate must agree with the window-sort
-  * form on every group shape (fewer rows than k, exact k, ties broken
-  * by the secondary field) and must survive its serialize/deserialize
-  * spill path (forced by sort-based aggregation fallback).
+/** The bounded-heap top-k aggregate, and `Ranking.topKPerGroup` on top
+  * of it, must agree with the window-sort form on every group shape
+  * (fewer rows than k, exact k, ties broken by the secondary field,
+  * NULL order values under asc and desc) and must survive the
+  * serialize/deserialize spill path (forced by sort-based aggregation
+  * fallback).
   */
 class TopKStructSpec extends SparkSpec {
   import spark.implicits._
 
-  private def windowTopK(df: org.apache.spark.sql.DataFrame, k: Int) = {
+  private val vDescIdAsc = Seq(desc("v"), asc("id"))
+
+  private def windowTopK(df: DataFrame, k: Int, order: Seq[Column] = vDescIdAsc) = {
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("g")).orderBy(desc("v"), asc("id"))
+      .partitionBy(col("g")).orderBy(order: _*)
     df.withColumn("rk", row_number().over(w).cast("long")).filter(col("rk") <= k)
       .select("g", "id", "v", "rk")
   }
 
-  private def heapTopK(df: org.apache.spark.sql.DataFrame, k: Int) =
+  private def perGroupTopK(df: DataFrame, k: Int, order: Seq[Column] = vDescIdAsc) =
+    Ranking.topKPerGroup(df, Seq(col("g")), order, k)
+      .select(col("g"), col("id"), col("v"), col("rank").cast("long").as("rk"))
+
+  private def heapTopK(df: DataFrame, k: Int) =
     df.groupBy(col("g"))
       .agg(TopKStruct.topK(struct(col("v"), col("id")), k, true, false).as("top"))
       .select(col("g"), posexplode(col("top")))
@@ -38,6 +48,24 @@ class TopKStructSpec extends SparkSpec {
     val actual = heapTopK(df, 3).collect().toSet
     assert(actual === expected)
     assert(actual.nonEmpty)
+    assert(perGroupTopK(df, 3).collect().toSet === expected)
+    // NULL order values: topKPerGroup places them where each SortOrder
+    // does (asc NULLS FIRST, desc NULLS LAST, or as written), k = 1 too
+    val withNulls = df.union(Seq(
+      ("a", 11L, Option.empty[Long]), ("b", 12L, None),
+      ("d", 13L, None), ("d", 14L, None), ("d", 15L, Some(4L)))
+      .toDF("g", "id", "v"))
+    for {
+      order <- Seq(vDescIdAsc, Seq(asc("v"), asc("id")),
+        Seq(desc_nulls_first("v"), asc("id")), Seq(asc_nulls_last("v"), desc("id")))
+      k <- Seq(1, 3)
+    } {
+      val want = windowTopK(withNulls, k, order).collect().toSet
+      assert(perGroupTopK(withNulls, k, order).collect().toSet === want, s"$order k=$k")
+      assert(want.exists(_.isNullAt(2)) || k == 1, s"$order k=$k")
+    }
+    assert(Ranking.topKPerGroup(df, Seq(col("g")), vDescIdAsc, 1)
+      .schema("rank").dataType == org.apache.spark.sql.types.IntegerType)
   }
 
   test("heap top-k matches window form on the documents fixture") {
@@ -62,6 +90,7 @@ class TopKStructSpec extends SparkSpec {
     try {
       val actual = heapTopK(df, 4).collect().toSet
       assert(actual === expected)
+      assert(perGroupTopK(df, 4).collect().toSet === expected)
     } finally {
       prev.fold(spark.conf.unset(
         "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"))(v =>
